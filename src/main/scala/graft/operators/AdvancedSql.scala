@@ -207,10 +207,11 @@ object AdvancedSql {
   }
 
   /** One-time bucketed ingest of orders+lineitem on the join key, into
-    * process-private external paths (catalog names are fixed; the memo
-    * prevents a rewrite per consuming query). */
+    * process-private external paths. The catalog names are fixed for the
+    * whole session, so the stage is session-wide: reuse prevents a rewrite
+    * per consuming query, and ingesting another dataset supersedes it. */
   def bucketedTablesFor(spark: SparkSession, dir: String): Unit =
-    bucketMemo.getOrElseUpdate((spark, dir), {
+    graft.sources.Stages.sessionWide(spark, "sql/bucketed_tables", dir) {
       val root = graft.sources.TempDirs.create("graft_bucketed_")
       spark.sql("DROP TABLE IF EXISTS graft_b_orders")
       spark.sql("DROP TABLE IF EXISTS graft_b_lineitem")
@@ -225,10 +226,7 @@ object AdvancedSql {
         .option("path", s"$root/lineitem")
         .mode("overwrite").saveAsTable("graft_b_lineitem")
       ()
-    })
-
-  private val bucketMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Unit]
+    }
 
   /** Runtime bloom-filter join pruning — the explicit form of the
     * selective-join pattern Spark's InjectRuntimeFilter automates: when a

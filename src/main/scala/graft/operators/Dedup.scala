@@ -33,63 +33,21 @@ object Dedup {
   private val K = 8 // minhash signature length
   private val B = 4 // LSH bands (rows per band = K/B = 2)
 
-  /** Per-process memo of the dedup chain's shared stages, keyed by
-    * (session, dataset identity, stage). The chain verify ⊂ clusters ⊂
-    * apply shares its prefix: without this, each of the three declared
+  /** The dedup chain's shared stages, registered per (session, dataset)
+    * in [[graft.sources.Stages]]. The chain verify ⊂ clusters ⊂ apply
+    * shares its prefix: without the registry, each of the three declared
     * queries re-derived the whole LSH→verify (and apply additionally
     * re-ran CC) — ~3× the unique work per bench/verify run. The cached
-    * frames are `persist()`ed once and owned here for the process
-    * lifetime; they are tiny (candidate pairs and labels — ints and one
-    * double per row, pair count bounded by LSH bucket occupancy), so
-    * retention is cents of memory, not a leak. Keying by session keeps
-    * specs with their own SparkSessions isolated; the dataset component
-    * is path + listing fingerprint (DatasetId.key), so regenerating the
-    * directory in-process is a miss, not a stale hit. Entries whose
-    * session has been stopped are dropped on every access — their cached
-    * blocks died with the session, and the strong key otherwise pins the
-    * stopped session object for the process lifetime. */
-  private val chainMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), (String, DataFrame)]
-
+    * frames are `persist()`ed once; they are tiny (candidate pairs and
+    * labels — ints and one double per row, pair count bounded by LSH
+    * bucket occupancy), so retention is cents of memory, not a leak. */
   private def memoized(spark: SparkSession, dir: String, stage: String)
-      (build: => DataFrame): DataFrame = {
-    chainMemo.keys.filter(_._1.sparkContext.isStopped).foreach(chainMemo.remove)
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    val k = (spark, dir, stage)
-    chainMemo.get(k) match {
-      case Some((`fp`, df)) => df
-      case stale =>
-        // dataset regenerated in place (same path, new fingerprint): the
-        // superseded entry's cached blocks are dead weight — release them
-        // instead of pinning two generations of the stage
-        stale.foreach { case (_, old) =>
-          try { if (!spark.sparkContext.isStopped) old.unpersist() }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        val df = build
-        chainMemo.put(k, (fp, df))
-        df
-    }
-  }
+      (build: => DataFrame): DataFrame =
+    graft.sources.Stages(spark, s"dedup/$stage", dir)(build)
 
-  /** Drop and unpersist every memoized chain stage (test/embedder hook for
+  /** Drop and unpersist every registered stage (test/embedder hook for
     * callers that regenerate datasets or want the storage back). */
-  def clearMemo(): Unit = {
-    chainMemo.values.foreach { case (_, df) =>
-      // NonFatal only: an unpersist on a dying session may throw benign
-      // races, but OOM/fatal errors must propagate, not be swallowed
-      try { if (!df.sparkSession.sparkContext.isStopped) df.unpersist() }
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    chainMemo.clear()
-    // persisted artifact roots follow the same discipline as the
-    // TextAnalysis artifact memos: config-invariance variants must
-    // rebuild, not replay a root trained under the baseline config —
-    // the setsim/window indexes are artifacts too, not chain stages
-    benchGramMemo.clear()
-    setsimIdxMemo.clear()
-    winIdxMemo.clear()
-  }
+  def clearMemo(): Unit = graft.sources.Stages.clear()
 
   private def toksCol: Column = TextFunctions.tokens(col("text"))
 
@@ -411,29 +369,20 @@ object Dedup {
     * artifact that makes the exact set-similarity screen INCREMENTAL:
     * an arriving batch is prefix-probed against it instead of re-running
     * the corpus-wide self-join. */
-  private val setsimIdxMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]
-
-  private[graft] def setsimIndexRoot(spark: SparkSession, dir: String): String = {
-    setsimIdxMemo.keys.filter(_._1.sparkContext.isStopped).foreach(setsimIdxMemo.remove)
-    setsimIdxMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, "setsimidx", dir)
-      graft.sources.ArtifactRoots.atomicBuild(root,
-          Seq("df", "prefix", "grams")) { stage =>
-        val gramSets = shingleGramSets(spark, dir).filter(col("doc_id") % 10 =!= 0)
-        setsimDf(setsimTok(gramSets)).write.mode("overwrite").parquet(s"$stage/df")
-        // the prefix pass reads the df part JUST WRITTEN instead of
-        // re-aggregating document frequencies in-plan (guide §3.3 — the
-        // write is the materialization barrier; the former shape paid
-        // the explode + full gram-count aggregate twice per build)
-        prefixOf(setsimTok(gramSets)
-            .join(spark.read.parquet(s"$stage/df"), "gram"))
-          .write.mode("overwrite").parquet(s"$stage/prefix")
-        gramSets.write.mode("overwrite").parquet(s"$stage/grams")
-      }
-    })
-  }
+  private[graft] def setsimIndexRoot(spark: SparkSession, dir: String): String =
+    graft.sources.ArtifactRoots.built(spark, "setsimidx", dir,
+        Seq("df", "prefix", "grams")) { stage =>
+      val gramSets = shingleGramSets(spark, dir).filter(col("doc_id") % 10 =!= 0)
+      setsimDf(setsimTok(gramSets)).write.mode("overwrite").parquet(s"$stage/df")
+      // the prefix pass reads the df part JUST WRITTEN instead of
+      // re-aggregating document frequencies in-plan (guide §3.3 — the
+      // write is the materialization barrier; the former shape paid
+      // the explode + full gram-count aggregate twice per build)
+      prefixOf(setsimTok(gramSets)
+          .join(spark.read.parquet(s"$stage/df"), "gram"))
+        .write.mode("overwrite").parquet(s"$stage/prefix")
+      gramSets.write.mode("overwrite").parquet(s"$stage/grams")
+    }
 
   /** Public warm-up for Bench: bill the one-time index build separately
     * from the per-batch screening cost. */
@@ -1503,21 +1452,12 @@ object Dedup {
     * contract where the benchmark registry ships its gram sketch to the
     * ingest service rather than every consumer rescanning the split. The
     * set is bounded by benchmark size (MBs while the corpus is TBs). */
-  private val benchGramMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]
-
-  private[graft] def benchGramRoot(spark: SparkSession, dir: String): String = {
-    benchGramMemo.keys.filter(_._1.sparkContext.isStopped).foreach(benchGramMemo.remove)
-    benchGramMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, "benchgrams", dir)
-      graft.sources.ArtifactRoots.atomicBuild(root, Seq("grams")) { stage =>
-        gramsFrame(spark, dir).filter(col("doc_id") % 50 === 0)
-          .select("gr").distinct()
-          .coalesce(1).write.mode("overwrite").parquet(s"$stage/grams")
-      }
-    })
-  }
+  private[graft] def benchGramRoot(spark: SparkSession, dir: String): String =
+    graft.sources.ArtifactRoots.built(spark, "benchgrams", dir, Seq("grams")) { stage =>
+      gramsFrame(spark, dir).filter(col("doc_id") % 50 === 0)
+        .select("gr").distinct()
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/grams")
+    }
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val grams = gramsFrame(spark, dir)
@@ -1621,7 +1561,7 @@ object Dedup {
 
   /** Memoized corpus-global duplicated spans (doc_id, island, s, e) —
     * the shared stage of the coverage audit and the span-cutting apply
-    * (chainMemo discipline: the frame is island-sized, cents of memory;
+    * (registered in graft.sources.Stages: the frame is island-sized, cents of memory;
     * Bench bills the build as `chain_substring_spans`). */
   private[graft] def corpusSpans(spark: SparkSession, dir: String): DataFrame =
     memoized(spark, dir, "substring_spans") {
@@ -1745,21 +1685,12 @@ object Dedup {
     * percent of corpus bytes on disk. This is the artifact that makes
     * position-level dedup INCREMENTAL: an arriving batch is screened
     * against it instead of re-running the corpus-global audit. */
-  private val winIdxMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]
-
-  private[graft] def winIndexRoot(spark: SparkSession, dir: String): String = {
-    winIdxMemo.keys.filter(_._1.sparkContext.isStopped).foreach(winIdxMemo.remove)
-    winIdxMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, "winidx", dir)
-      graft.sources.ArtifactRoots.atomicBuild(root, Seq("hashes")) { stage =>
-        winHashes(Tables.documentsKernelWide(spark, dir).filter(col("doc_id") % 10 =!= 0))
-          .select("h").distinct()
-          .write.mode("overwrite").parquet(s"$stage/hashes")
-      }
-    })
-  }
+  private[graft] def winIndexRoot(spark: SparkSession, dir: String): String =
+    graft.sources.ArtifactRoots.built(spark, "winidx", dir, Seq("hashes")) { stage =>
+      winHashes(Tables.documentsKernelWide(spark, dir).filter(col("doc_id") % 10 =!= 0))
+        .select("h").distinct()
+        .write.mode("overwrite").parquet(s"$stage/hashes")
+    }
 
   /** Public warm-up for Bench: bill the one-time index build separately
     * from the per-batch screening cost. */

@@ -90,28 +90,14 @@ object Dsir {
     * doc_len) narrow rows — orders of magnitude smaller than the corpus —
     * and persist() spills to disk, so it is the cheap side of the
     * recompute-vs-materialize tradeoff at any scale. */
-  private val countsMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, Int), (String, DataFrame)]
-
   private def docBucketCounts(spark: SparkSession, dir: String): DataFrame = {
-    countsMemo.keys.filter(_._1.sparkContext.isStopped).foreach(countsMemo.remove)
     val w = bucketsOf(spark)
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    val k = (spark, dir, w)
-    countsMemo.get(k) match {
-      case Some((`fp`, df)) => df
-      case stale =>
-        stale.foreach { case (_, old) =>
-          try { if (!spark.sparkContext.isStopped) old.unpersist() }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        val df = gramsDf(spark, dir)
-          .select(col("doc_id"), col("lang"), explode(col("grams")).as("g"))
-          .select(col("doc_id"), col("lang"), bucketOf(col("g"), w).as("bucket"))
-          .groupBy("doc_id", "lang", "bucket").agg(count(lit(1)).as("c"))
-          .persist()
-        countsMemo.put(k, (fp, df))
-        df
+    graft.sources.Stages(spark, "dsir/counts", dir, s"b$w") {
+      gramsDf(spark, dir)
+        .select(col("doc_id"), col("lang"), explode(col("grams")).as("g"))
+        .select(col("doc_id"), col("lang"), bucketOf(col("g"), w).as("bucket"))
+        .groupBy("doc_id", "lang", "bucket").agg(count(lit(1)).as("c"))
+        .persist()
     }
   }
 
@@ -131,11 +117,10 @@ object Dsir {
     * re-derivation risks a 1-ulp flip across a floor boundary; counts
     * stay independently re-derived in the oracle, so the cross-engine
     * check of the tokenize→bucket→count dataflow is undiminished). */
-  private val lrMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, Int), (String, IndexedSeq[LrRow])]
+  private val LrStage = "dsir/lr"
 
   /** The fitted models available for the data-dependent oracle literals:
-    * every live (session not stopped) entry of [[lrMemo]], distinct by
+    * every live (session not stopped) [[LrStage]] entry, distinct by
     * content. [[oracle]] takes the literal path only when this resolves
     * to EXACTLY ONE model — the one-dataset-then-dump flow Verify runs.
     * A process that fits models for several dirs/widths before dumping
@@ -147,25 +132,25 @@ object Dsir {
     * model IN DuckDB and is correct for any dataset, carrying only the
     * documented 1-ulp ln() exposure the literal path exists to close. */
   private def liveModels: Seq[IndexedSeq[LrRow]] = {
-    val live = lrMemo.toSeq.collect {
-      case ((s, _, w), (fp, rows)) if !s.sparkContext.isStopped => (fp, w, rows)
-    }
+    // a fitted model has one row per bucket: its length IS its width
+    val live = graft.sources.Stages.live[IndexedSeq[LrRow]](LrStage)
+      .map { case (id, rows) => (id, rows.length, rows) }
     // ADVICE r20: in a process that fitted models for SEVERAL dirs/widths,
     // a parameterless dump used to fall back to the compiled default
     // width — a 256-bucket oracle for runs fitted under a dsirBuckets
     // override (spurious gate failure). The dumper that KNOWS its target
     // dataset (Verify) threads it via [[setOracleTarget]]; when the hint
-    // matches a live model by (dataset fingerprint, width), that model
+    // matches a live model by (dataset identity, width), that model
     // disambiguates. No hint, or no match → the old resolution.
     val hinted = oracleTargetHint match {
-      case Some((fp, w)) => live.collect { case (`fp`, `w`, rows) => rows }.distinct
+      case Some((id, w)) => live.collect { case (`id`, `w`, rows) => rows }.distinct
       case None => Nil
     }
     if (hinted.nonEmpty) hinted else live.map(_._3).distinct
   }
 
-  /** (dataset fingerprint, bucket width) of the dataset the next oracle
-    * dump targets — see [[liveModels]]. Cleared by [[resetMemo]]. */
+  /** (dataset identity, bucket width) of the dataset the next oracle
+    * dump targets — see [[liveModels]]. Cleared by [[clearMemo]]. */
   @volatile private var oracleTargetHint: Option[(String, Int)] = None
 
   /** Disambiguate the oracle dump for multi-dataset/width processes: the
@@ -174,33 +159,26 @@ object Dsir {
     * serializing [[SparkEntry.oracleSql]]. */
   def setOracleTarget(spark: SparkSession, dir: String): Unit =
     oracleTargetHint =
-      Some((graft.sources.DatasetId.fingerprint(dir), bucketsOf(spark)))
+      Some((graft.sources.DatasetId.key(dir), bucketsOf(spark)))
 
   private def lrRows(spark: SparkSession, dir: String): IndexedSeq[LrRow] = {
-    lrMemo.keys.filter(_._1.sparkContext.isStopped).foreach(lrMemo.remove)
     val w = bucketsOf(spark)
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    val rows = lrMemo.get((spark, dir, w)) match {
-      case Some((`fp`, r)) => r
-      case _ =>
-        val counts = docBucketCounts(spark, dir)
-          .groupBy("bucket")
-          .agg(sum("c").as("raw_g"),
-            sum(when(col("lang") === "en", col("c")).otherwise(0L)).as("tgt_g"))
-          .collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val rTot = counts.valuesIterator.map(_._1).sum
-        val tTot = counts.valuesIterator.map(_._2).sum
-        val r = (0L until w.toLong).map { b =>
-          val (raw, tgt) = counts.getOrElse(b, (0L, 0L))
-          LrRow(b, tgt, raw, math.floor(math.log(
-            ((tgt + 1).toDouble * (rTot + w).toDouble) /
-              ((raw + 1).toDouble * (tTot + w).toDouble)) * 1e9).toLong)
-        }
-        lrMemo.put((spark, dir, w), (fp, r))
-        r
+    graft.sources.Stages(spark, LrStage, dir, s"b$w") {
+      val counts = docBucketCounts(spark, dir)
+        .groupBy("bucket")
+        .agg(sum("c").as("raw_g"),
+          sum(when(col("lang") === "en", col("c")).otherwise(0L)).as("tgt_g"))
+        .collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val rTot = counts.valuesIterator.map(_._1).sum
+      val tTot = counts.valuesIterator.map(_._2).sum
+      (0L until w.toLong).map { b =>
+        val (raw, tgt) = counts.getOrElse(b, (0L, 0L))
+        LrRow(b, tgt, raw, math.floor(math.log(
+          ((tgt + 1).toDouble * (rTot + w).toDouble) /
+            ((raw + 1).toDouble * (tTot + w).toDouble)) * 1e9).toLong)
+      }
     }
-    rows
   }
 
   /** The model as a literal DataFrame (the broadcast side of the scoring
@@ -278,22 +256,14 @@ object Dsir {
     * BPE/IVF/gate-spec artifacts: training and serving communicate only
     * through the shipped file. The streaming twin reloads it as a dense
     * lr-by-bucket array and scores arriving micro-batches row-locally. */
-  private val modelMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
-
   private[graft] def modelRoot(spark: SparkSession, dir: String): String = {
-    modelMemo.keys.filter(_._1.sparkContext.isStopped).foreach(modelMemo.remove)
     // non-default widths get their own artifact kind: a 10k-bucket model
     // must never be served where a 256-bucket reader expects one
     val w = bucketsOf(spark)
     val kind = if (w == Buckets) "dsirmodel" else s"dsirmodel-b$w"
-    modelMemo.getOrElseUpdate((spark,
-        s"$kind|${graft.sources.ArtifactRoots.memoKey(spark, dir)}"), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, kind, dir)
-      graft.sources.ArtifactRoots.atomicBuild(root, Seq("lr")) { stage =>
-        lrTable(spark, dir).coalesce(1).write.mode("overwrite").parquet(s"$stage/lr")
-      }
-    })
+    graft.sources.ArtifactRoots.built(spark, kind, dir, Seq("lr")) { stage =>
+      lrTable(spark, dir).coalesce(1).write.mode("overwrite").parquet(s"$stage/lr")
+    }
   }
 
   /** Row-local DSIR scorer over ANY (doc_id, lang, text) frame under a
@@ -329,15 +299,10 @@ object Dsir {
           .as("weight_nano"))
   }
 
-  /** Drop and unpersist the memoized count stage so the pass genuinely
-    * re-executes — ConfigInvarianceSpec discipline. */
+  /** Drop every registered stage so the count pass genuinely
+    * re-executes, and forget the oracle target. */
   def clearMemo(): Unit = {
-    countsMemo.values.foreach { case (_, df) =>
-      try df.unpersist() catch { case scala.util.control.NonFatal(_) => () }
-    }
-    countsMemo.clear()
-    lrMemo.clear()
-    modelMemo.clear()
+    graft.sources.Stages.clear()
     oracleTargetHint = None
   }
 

@@ -305,7 +305,7 @@ object Relational {
   /** Build the fragmented + compacted generations once per (session, dir)
     * so the spec can inspect both layouts without a second rewrite. */
   def compactRoot(spark: SparkSession, dir: String): String =
-    compactMemo.getOrElseUpdate((spark, dir), {
+    graft.sources.Stages(spark, "relational/compact", dir) {
       val out = graft.sources.TempDirs.create("graft_compact_")
       val docs = Tables.documents(spark, dir)
         .select("doc_id", "lang", "source", "n_chars")
@@ -317,10 +317,7 @@ object Relational {
             .sortWithinPartitions("lang", "doc_id"))
         .mode("overwrite").parquet(s"$out/compact")
       out
-    })
-
-  private val compactMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+    }
 
   /** Corrupt-record quarantine on the read path: a staged JSON-lines
     * batch carries deliberately-broken rows (every 7th record — the

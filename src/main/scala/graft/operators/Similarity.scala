@@ -102,59 +102,15 @@ object Similarity {
   def annLshPairs(spark: SparkSession, dir: String): DataFrame =
     scoredLshPairs(spark, dir).orderBy("id1", "id2")
 
-  /** Memoized scored-candidate stage, shared by annLshPairs and
-    * dedupEmbedding — one LSH generate+verify per (session, dataset)
-    * instead of one per declared query (same pattern as Dedup.chainMemo;
-    * same keying: dataset identity is path + listing fingerprint, and
-    * stopped sessions' entries are dropped on access). */
-  private val pairsMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), (String, DataFrame)]
-
-  /** Drop and unpersist the memoized ANN stages (index-root entries are
+  /** Drop and unpersist every registered stage (index-root entries are
     * just paths; their dirs are process-private and reaped at exit). */
-  def clearMemo(): Unit = {
-    pairsMemo.values.foreach { case (_, df) =>
-      // NonFatal only: benign unpersist races are ignorable, fatal errors
-      // (OOM, thread death) must propagate
-      try { if (!df.sparkSession.sparkContext.isStopped) df.unpersist() }
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    clustersMemo.values.foreach { df =>
-      try { if (!df.sparkSession.sparkContext.isStopped) df.unpersist() }
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    (pqMemo.values ++ pqBooksMemo.values).foreach { case (_, df) =>
-      try { if (!df.sparkSession.sparkContext.isStopped) df.unpersist() }
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    pairsMemo.clear()
-    indexMemo.clear()
-    incrMemo.clear()
-    refreshMemo.clear()
-    clustersMemo.clear()
-    pqMemo.clear()
-    pqBooksMemo.clear()
-  }
+  def clearMemo(): Unit = graft.sources.Stages.clear()
 
-  def scoredLshPairs(spark: SparkSession, dir: String): DataFrame = {
-    pairsMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pairsMemo.remove)
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    pairsMemo.get((spark, dir)) match {
-      case Some((`fp`, df)) => df
-      case stale =>
-        // dataset regenerated in place: release the superseded entry's
-        // cached blocks instead of pinning two generations
-        stale.foreach { case (_, old) =>
-          try { if (!spark.sparkContext.isStopped) old.unpersist() }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        val df = buildScoredLshPairs(spark, dir)
-        pairsMemo.put((spark, dir), (fp, df))
-        df
-    }
-  }
-
-  private def buildScoredLshPairs(spark: SparkSession, dir: String): DataFrame = {
+  /** Scored-candidate stage, shared by annLshPairs and dedupEmbedding —
+    * one LSH generate+verify per (session, dataset) instead of one per
+    * declared query, registered in [[graft.sources.Stages]]. */
+  def scoredLshPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Stages(spark, "similarity/lsh_pairs", dir) {
       val e = emb(spark, dir)
       val keys = annBandedKeys(e, Bands, RowsPerBand)
       val pairs = keys.as("x")
@@ -169,7 +125,7 @@ object Similarity {
         .select(col("id1"), col("id2"),
           round(vec_cosine(col("v1"), col("v2")), 6).as("cos"))
         .persist()
-  }
+    }
 
   private val IvfK = 16     // coarse centroids
   private val IvfProbes = 2 // cells searched per query
@@ -249,17 +205,11 @@ object Similarity {
     * path (ArtifactRoots.rootFor), where the atomic-build claim + marker
     * arbitrate concurrent builders and staleness is impossible by key.
     * Every access re-asserts the reader-side `.complete` check. */
-  private val indexMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
-
-  private def ivfIndexRoot(spark: SparkSession, dir: String): String = {
-    indexMemo.keys.filter(_._1.sparkContext.isStopped).foreach(indexMemo.remove)
+  private def ivfIndexRoot(spark: SparkSession, dir: String): String =
     graft.sources.ArtifactRoots.assertComplete(
-      indexMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)),
+      graft.sources.Stages(spark, "ivf", dir, graft.sources.ArtifactRoots.stageConf(spark))(
         ivfBuildIndex(spark, dir,
           graft.sources.ArtifactRoots.rootFor(spark, "ivf", dir))))
-  }
 
   /** Public warm-up: force the one-time index build so harnesses (Bench)
     * can bill it separately from the per-query probe cost. */
@@ -720,10 +670,6 @@ object Similarity {
       .orderBy("qid")
   }
 
-  /** Per-process incremental-index roots (same lifecycle as indexMemo). */
-  private val incrMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
-
   /** Incremental IVF maintenance root: the RESIDENT corpus
     * (vec_id ≢ 0 mod 10) builds the persisted index once; the NEW batch
     * (vec_id ≡ 0 mod 10, the same delta convention as dedup_incremental)
@@ -739,9 +685,8 @@ object Similarity {
     * half-appended index is never exposed. Centroids intentionally do NOT
     * drift with the delta — re-clustering is the periodic REBUILD
     * operation (ivfBuildIndex), not the ingest path. */
-  private def ivfIncrRoot(spark: SparkSession, dir: String): String = {
-    incrMemo.keys.filter(_._1.sparkContext.isStopped).foreach(incrMemo.remove)
-    incrMemo.getOrElseUpdate((spark, graft.sources.DatasetId.key(dir)), {
+  private def ivfIncrRoot(spark: SparkSession, dir: String): String =
+    graft.sources.Stages(spark, "similarity/ivf_incr", dir) {
       val root = graft.sources.TempDirs.create("graft_ivf_incr_")
       val isNew = col("vec_id") % 10 === 0
       ivfBuildIndexFrom(emb(spark, dir).filter(!isNew), spark, root)
@@ -750,8 +695,7 @@ object Similarity {
             spark.read.parquet(s"$root/centroids")))
         .mode("append").partitionBy("cell").parquet(s"$root/lists")
       root
-    })
-  }
+    }
 
   /** Public warm-up for Bench: force the one-time resident build + delta
     * append so the chain is billed separately from the probe cost. */
@@ -773,10 +717,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** Per-process refreshed-index roots (same lifecycle as incrMemo). */
-  private val refreshMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
-
   /** Centroid REFRESH of the incrementally-maintained index — the
     * lifecycle step ivf_incremental intentionally lacks: ingest appends
     * against stored centroids forever, so a drifting corpus degrades
@@ -795,9 +735,8 @@ object Similarity {
     * oracle recomputes the refreshed centroids from the raw embeddings
     * end to end, so hash-green means refresh-from-stored-stats ≡
     * from-scratch recomputation exactly. */
-  private def ivfRefreshRoot(spark: SparkSession, dir: String): String = {
-    refreshMemo.keys.filter(_._1.sparkContext.isStopped).foreach(refreshMemo.remove)
-    refreshMemo.getOrElseUpdate((spark, graft.sources.DatasetId.key(dir)), {
+  private def ivfRefreshRoot(spark: SparkSession, dir: String): String =
+    graft.sources.Stages(spark, "similarity/ivf_refresh", dir) {
       val stale = ivfIncrRoot(spark, dir)
       val root = graft.sources.TempDirs.create("graft_ivf_refresh_")
       graft.sources.ArtifactRoots.atomicBuild(root, Seq("centroids", "lists")) { stage =>
@@ -818,8 +757,7 @@ object Similarity {
             assignCells(emb(spark, dir), spark.read.parquet(s"$stage/centroids")))
           .mode("overwrite").partitionBy("cell").parquet(s"$stage/lists")
       }
-    })
-  }
+    }
 
   /** Public warm-up for Bench: bill the refresh build separately. */
   def ivfRefreshWarm(spark: SparkSession, dir: String): String =
@@ -1050,33 +988,16 @@ object Similarity {
       .select(col("code").as("cid"), col("cv"))
   }
 
-  private val pqBooksMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), (String, DataFrame)]
-
   /** Memoized union of all M codebooks, tagged by subspace: (m, cid, cv).
     * 64 tiny rows — always broadcast by consumers. */
-  private def pqBooks(spark: SparkSession, dir: String): DataFrame = {
-    pqBooksMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pqBooksMemo.remove)
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    pqBooksMemo.get((spark, dir)) match {
-      case Some((`fp`, df)) => df
-      case stale =>
-        stale.foreach { case (_, old) =>
-          try { if (!spark.sparkContext.isStopped) old.unpersist() }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        val e = emb(spark, dir)
-        val df = (0 until PqM)
-          .map(m => pqCodebook(e, m).withColumn("m", lit(m)))
-          .reduce(_.unionByName(_))
-          .persist()
-        pqBooksMemo.put((spark, dir), (fp, df))
-        df
+  private def pqBooks(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Stages(spark, "similarity/pq_books", dir) {
+      val e = emb(spark, dir)
+      (0 until PqM)
+        .map(m => pqCodebook(e, m).withColumn("m", lit(m)))
+        .reduce(_.unionByName(_))
+        .persist()
     }
-  }
-
-  private val pqMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), (String, DataFrame)]
 
   /** Memoized PQ encoding stage: (vec_id, m, code, d2). Product
     * quantization is THE 100 TB vector-footprint lever — M=4 one-byte
@@ -1110,21 +1031,9 @@ object Similarity {
       .agg(min(col("c")).as("c"))
       .select(col("vec_id"), col("m"), col("c.cid").as("code"), col("c.d2").as("d2"))
 
-  def pqCodes(spark: SparkSession, dir: String): DataFrame = {
-    pqMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pqMemo.remove)
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    pqMemo.get((spark, dir)) match {
-      case Some((`fp`, df)) => df
-      case stale =>
-        stale.foreach { case (_, old) =>
-          try { if (!spark.sparkContext.isStopped) old.unpersist() }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        val df = pqEncodeWith(emb(spark, dir), pqBooks(spark, dir)).persist()
-        pqMemo.put((spark, dir), (fp, df))
-        df
-    }
-  }
+  def pqCodes(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Stages(spark, "similarity/pq_codes", dir)(
+      pqEncodeWith(emb(spark, dir), pqBooks(spark, dir)).persist())
 
   /** PQ codebook REFRESH — the quantization twin of ivf_refresh, closing
     * the same staleness class for the OTHER persisted vector artifact:
@@ -1309,20 +1218,17 @@ object Similarity {
     * exact verification, and graph contraction are each already
     * oracle-gated — this row gates their interplay end-to-end. */
   def embedClusters(spark: SparkSession, dir: String): DataFrame = {
-    val labels = clustersMemo.getOrElseUpdate((spark, dir), {
+    val labels = graft.sources.Stages(spark, "similarity/clusters", dir) {
       val edges = scoredLshPairs(spark, dir)
         .filter(col("cos") >= 0.3).select(col("id1"), col("id2"))
       Dedup.connectedComponents(edges)
-    })
+    }
     emb(spark, dir).select(col("vec_id"))
       .join(labels, col("vec_id") === col("id"), "left")
       .select(col("vec_id"),
         coalesce(col("label"), col("vec_id")).as("cluster_id"))
       .orderBy("vec_id")
   }
-
-  private val clustersMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
 
   /** ANN recall eval: for each query in the exact-top-k panel, the
     * fraction of its TRUE top-5 cosine neighbors the banded-LSH

@@ -62,8 +62,8 @@ object TextAnalysis {
       .orderBy("labeled_lang", "pred_lang")
 
   /** Shared doc-scoring stage: tokenize + quality signals, persisted once
-    * per (session, dataset identity) — the same memo discipline as
-    * Dedup.chainMemo. qualityScore reads it once, but qualityGate's
+    * per (session, dataset identity) in [[graft.sources.Stages]].
+    * qualityScore reads it once, but qualityGate's
     * threshold selection consumes it THREE times (histogram, above-cut
     * filter, tie ranking); without the cache each consumer re-tokenizes
     * the whole corpus (measured ~1 s per redundant pass at sf0.1). The
@@ -71,25 +71,9 @@ object TextAnalysis {
     * magnitude smaller than the corpus — and persist() spills to disk, so
     * the cache is the cheap side of the recompute-vs-materialize tradeoff
     * at any scale. */
-  private val scoredMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), (String, DataFrame)]
-
-  private[graft] def scoredDocs(spark: SparkSession, dir: String): DataFrame = {
-    scoredMemo.keys.filter(_._1.sparkContext.isStopped).foreach(scoredMemo.remove)
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    val k = (spark, dir)
-    scoredMemo.get(k) match {
-      case Some((`fp`, df)) => df
-      case stale =>
-        stale.foreach { case (_, old) =>
-          try { if (!spark.sparkContext.isStopped) old.unpersist() }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        val df = scoreDocsFrame(Tables.documents(spark, dir)).persist()
-        scoredMemo.put(k, (fp, df))
-        df
-    }
-  }
+  private[graft] def scoredDocs(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Stages(spark, "text/scored", dir)(
+      scoreDocsFrame(Tables.documents(spark, dir)).persist())
 
   /** The row-local scoring pass over ANY (doc_id, lang, text) frame —
     * shared by the memoized corpus stage above and the streaming
@@ -114,29 +98,8 @@ object TextAnalysis {
       round(stopRatio * 0.4 + lenSat * 0.5 + (lit(1.0) - punctRatio) * 0.1, 6).as("quality"))
   }
 
-  /** Drop and unpersist the memoized scoring stage (test hook). */
-  private[graft] def clearScoredMemo(): Unit = {
-    scoredMemo.values.foreach { case (_, df) =>
-      try df.unpersist() catch { case scala.util.control.NonFatal(_) => () }
-    }
-    scoredMemo.clear()
-  }
-
-  /** Drop every TextAnalysis memo (scored docs + BPE merge table) so the
-    * stages genuinely re-execute — used by ConfigInvarianceSpec to keep
-    * altered-config variants from replaying checkpoints built under the
-    * baseline config. */
-  def clearMemo(): Unit = {
-    clearScoredMemo()
-    bpeRootMemo.clear()
-    gateSpecMemo.clear()
-    chunkIdxMemo.clear()
-    lexIdxMemo.clear()
-    bm25Memo.values.foreach { df =>
-      try df.unpersist() catch { case scala.util.control.NonFatal(_) => () }
-    }
-    bm25Memo.clear()
-  }
+  /** Drop every registered stage so the stages genuinely re-execute. */
+  def clearMemo(): Unit = graft.sources.Stages.clear()
 
   /** Quality score: stopword ratio + length saturation, rounded. The exact
     * formula matters less than it being deterministic and monotone in
@@ -322,7 +285,7 @@ object TextAnalysis {
         col("freq"))
 
   /** Per-process persisted merge-table roots, one training run per
-    * (session, dataset) — the IVF index pattern (`Similarity.indexMemo`):
+    * (session, dataset) — the IVF index pattern (`ArtifactRoots.built`):
     * the trained tokenizer is a durable pipeline ARTIFACT, written to a
     * parquet file and reloaded by every consumer, exactly how a
     * production encoder ships its merge file. The root defaults to a
@@ -332,23 +295,14 @@ object TextAnalysis {
     * `.complete` marker — enforced on BOTH sides: atomicBuild arbitrates
     * racing writers, assertComplete gates every reader — are what make a
     * killed build unreadable rather than half-read. */
-  private val bpeRootMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]
-
-  private[graft] def bpeIndexRoot(spark: SparkSession, dir: String): String = {
-    bpeRootMemo.keys.filter(_._1.sparkContext.isStopped).foreach(bpeRootMemo.remove)
-    bpeRootMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, "bpe", dir)
-      graft.sources.ArtifactRoots.atomicBuild(root, Seq("merges")) { stage =>
-        import spark.implicits._
-        trainBpeMerges(spark, dir)
-          .toDF("step", "left_sym", "right_sym", "pair_count")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$stage/merges")
-      }
-    })
-  }
+  private[graft] def bpeIndexRoot(spark: SparkSession, dir: String): String =
+    graft.sources.ArtifactRoots.built(spark, "bpe", dir, Seq("merges")) { stage =>
+      import spark.implicits._
+      trainBpeMerges(spark, dir)
+        .toDF("step", "left_sym", "right_sym", "pair_count")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$stage/merges")
+    }
 
   /** The merge table as driver literals, RELOADED from the persisted
     * artifact — both bpe_learn_merges and bpe_encode (and the streaming
@@ -486,22 +440,14 @@ object TextAnalysis {
     * parquet files (thresholds + tie roster) and every consumer — batch
     * audit or the streaming twin — reloads the files, never the
     * trainer. */
-  private val gateSpecMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]
-
-  private[graft] def gateSpecRoot(spark: SparkSession, dir: String): String = {
-    gateSpecMemo.keys.filter(_._1.sparkContext.isStopped).foreach(gateSpecMemo.remove)
-    gateSpecMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, "gatespec", dir)
-      graft.sources.ArtifactRoots.atomicBuild(root, Seq("thresholds", "roster")) { stage =>
-        val (thresholds, ties) = gateSpec(
-          scoredDocs(spark, dir).select("doc_id", "lang", "quality"))
-        thresholds.coalesce(1).write.mode("overwrite").parquet(s"$stage/thresholds")
-        ties.coalesce(1).write.mode("overwrite").parquet(s"$stage/roster")
-      }
-    })
-  }
+  private[graft] def gateSpecRoot(spark: SparkSession, dir: String): String =
+    graft.sources.ArtifactRoots.built(spark, "gatespec", dir,
+        Seq("thresholds", "roster")) { stage =>
+      val (thresholds, ties) = gateSpec(
+        scoredDocs(spark, dir).select("doc_id", "lang", "quality"))
+      thresholds.coalesce(1).write.mode("overwrite").parquet(s"$stage/thresholds")
+      ties.coalesce(1).write.mode("overwrite").parquet(s"$stage/roster")
+    }
 
   /** The gate SPEC as two tiny frames — (lang, qt, adm) thresholds and
     * the explicit roster of threshold-TIED docs admitted by doc_id rank.
@@ -773,14 +719,9 @@ object TextAnalysis {
     * scores) and bm25_top_terms is a third consumer — without the memo
     * the corpus-wide tokenize + tf/df/dl aggregation would re-execute
     * per branch. */
-  private val bm25Memo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), DataFrame]
-
-  private[graft] def bm25Scored(spark: SparkSession, dir: String): DataFrame = {
-    bm25Memo.keys.filter(_._1.sparkContext.isStopped).foreach(bm25Memo.remove)
-    bm25Memo.getOrElseUpdate((spark, graft.sources.DatasetId.key(dir)),
+  private[graft] def bm25Scored(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Stages(spark, "text/bm25", dir)(
       bm25ScoredImpl(spark, dir, forceDecimal = false).persist())
-  }
 
   /** `forceDecimal` lets the spec exercise the huge-corpus DECIMAL kernel
     * at test scale and prove it value-identical to the Long fast path —
@@ -982,29 +923,20 @@ object TextAnalysis {
     *    scorer makes the SAME Long-vs-DECIMAL overflow decision as the
     *    corpus kernel.
     */
-  private val chunkIdxMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]
-
-  private[graft] def chunkIndexRoot(spark: SparkSession, dir: String): String = {
-    chunkIdxMemo.keys.filter(_._1.sparkContext.isStopped).foreach(chunkIdxMemo.remove)
-    chunkIdxMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, "chunkidx", dir)
-      graft.sources.ArtifactRoots.atomicBuild(root,
-          Seq("postings", "model_df", "model_sc")) { stage =>
-        graft.sources.ArtifactRoots.boundedWrite(chunkWordsFrame(spark, dir)
-          .groupBy("word", "doc_id", "chunk_id").agg(count(lit(1)).as("cnt"))
-          .withColumn("wb", wordBucket(col("word"))))
-          .partitionBy("wb").mode("overwrite").parquet(s"$stage/postings")
-        val (_, dfm, dl) = bm25TfStages(
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-        dfm.coalesce(1).write.mode("overwrite").parquet(s"$stage/model_df")
-        dl.agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("tl"),
-            coalesce(max("dl"), lit(1L)).as("maxdl"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$stage/model_sc")
-      }
-    })
-  }
+  private[graft] def chunkIndexRoot(spark: SparkSession, dir: String): String =
+    graft.sources.ArtifactRoots.built(spark, "chunkidx", dir,
+        Seq("postings", "model_df", "model_sc")) { stage =>
+      graft.sources.ArtifactRoots.boundedWrite(chunkWordsFrame(spark, dir)
+        .groupBy("word", "doc_id", "chunk_id").agg(count(lit(1)).as("cnt"))
+        .withColumn("wb", wordBucket(col("word"))))
+        .partitionBy("wb").mode("overwrite").parquet(s"$stage/postings")
+      val (_, dfm, dl) = bm25TfStages(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+      dfm.coalesce(1).write.mode("overwrite").parquet(s"$stage/model_df")
+      dl.agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("tl"),
+          coalesce(max("dl"), lit(1L)).as("maxdl"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/model_sc")
+    }
 
   /** Public warm-up for Bench: bill the one-time serving-index build
     * separately from the per-query serving cost. */
@@ -1019,21 +951,12 @@ object TextAnalysis {
     * Together with chunkidx's shipped model (which scores the ARRIVING
     * query doc), this is everything the streaming hybrid needs — the
     * lexical half of a RAG serving stack as a durable artifact. */
-  private val lexIdxMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), String]
-
-  private[graft] def lexIndexRoot(spark: SparkSession, dir: String): String = {
-    lexIdxMemo.keys.filter(_._1.sparkContext.isStopped).foreach(lexIdxMemo.remove)
-    lexIdxMemo.getOrElseUpdate((spark,
-        graft.sources.ArtifactRoots.memoKey(spark, dir)), {
-      val root = graft.sources.ArtifactRoots.rootFor(spark, "lexidx", dir)
-      graft.sources.ArtifactRoots.atomicBuild(root, Seq("postings")) { stage =>
-        graft.sources.ArtifactRoots.boundedWrite(bm25Scored(spark, dir)
-          .withColumn("wb", wordBucket(col("word"))))
-          .partitionBy("wb").mode("overwrite").parquet(s"$stage/postings")
-      }
-    })
-  }
+  private[graft] def lexIndexRoot(spark: SparkSession, dir: String): String =
+    graft.sources.ArtifactRoots.built(spark, "lexidx", dir, Seq("postings")) { stage =>
+      graft.sources.ArtifactRoots.boundedWrite(bm25Scored(spark, dir)
+        .withColumn("wb", wordBucket(col("word"))))
+        .partitionBy("wb").mode("overwrite").parquet(s"$stage/postings")
+    }
 
   /** Public warm-up for Bench. */
   def lexIndexWarm(spark: SparkSession, dir: String): String =

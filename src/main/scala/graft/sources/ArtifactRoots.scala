@@ -79,9 +79,9 @@ object ArtifactRoots {
     * the version is interpolated into shared-root PATHS, so a value
     * containing `/` or `..` would silently change the root layout
     * (escape the root, collide kinds). Restricted to `[A-Za-z0-9._-]+`.
-    * Callers that memoize an artifact root MUST fold this tag into the
-    * memo key — a mid-session version override must be a cache miss,
-    * not a silent hit on the root built under the old version. */
+    * [[stageConf]] folds this tag into every registered artifact root's
+    * key — a mid-session version override must be a miss, not a silent
+    * hit on the root built under the old version. */
   def versionTag(spark: SparkSession): String = {
     val v = spark.conf.getOption("spark.graft.artifactVersion")
       .getOrElse(FormatVersion.toString)
@@ -91,22 +91,33 @@ object ArtifactRoots {
     v
   }
 
-  /** The per-process memo key for an artifact root: configured shared
-    * root (or the process-private sentinel) + validated version tag +
-    * dataset content key. Every artifact memo MUST key on this, not on
-    * the dataset alone — a mid-session change to artifactRoot OR
-    * artifactVersion must be a cache miss that rebuilds under the new
+  /** The [[Stages]] conf parameters of an artifact root: configured
+    * shared root (or the process-private sentinel) + validated version
+    * tag. Every registered artifact root MUST carry these, not the
+    * dataset alone — a mid-session change to artifactRoot OR
+    * artifactVersion must be a miss that rebuilds under the new
     * location, never a silent hit on the root built under the old
     * config (the staleness class ADVICE r14 flagged for the version
     * knob; the root knob has the identical failure shape). */
-  def memoKey(spark: SparkSession, dir: String): String =
-    s"${configured(spark).getOrElse("<private>")}|${versionTag(spark)}:${DatasetId.key(dir)}"
+  def stageConf(spark: SparkSession): String =
+    s"${configured(spark).getOrElse("<private>")}|${versionTag(spark)}"
+
+  /** The session's artifact root of `kind` for the dataset at `dir`:
+    * `write` runs under [[atomicBuild]] into [[rootFor]] at most once per
+    * (session, kind, root config, dataset identity) — the [[Stages]]
+    * entry is the per-process dedup, the marker protocol the
+    * cross-process one. */
+  def built(spark: SparkSession, kind: String, dir: String, parts: Seq[String])
+      (write: String => Unit): String =
+    Stages(spark, kind, dir, stageConf(spark)) {
+      atomicBuild(rootFor(spark, kind, dir), parts)(write)
+    }
 
   /** Root directory for artifact `kind` trained on the dataset at `dir`:
     * `<sharedRoot>/<kind>/v<version>/<fingerprint(dir)>` when a shared
     * root is configured (durable; collision-free by kind, staleness-free
     * by dataset fingerprint AND format version), else a fresh
-    * process-private temp dir (the caller's memo provides the
+    * process-private temp dir ([[built]]'s [[Stages]] entry provides the
     * per-process dedup in that case). */
   def rootFor(spark: SparkSession, kind: String, dir: String): String =
     configured(spark) match {

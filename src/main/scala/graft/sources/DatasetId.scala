@@ -1,7 +1,7 @@
 package graft.sources
 
-/** Content identity for a dataset directory, used to key per-process
-  * memoized stages (Dedup.chainMemo, Similarity.pairsMemo/indexMemo).
+/** Content identity for a dataset directory, checked by every per-process
+  * reused stage ([[Stages]], the streaming bridge's input stagings).
   * Keying by path alone serves stale results if the directory is
   * regenerated in-process (same path, new files); folding the listing's
   * (name, length, mtime) triples into the key makes regeneration a cache

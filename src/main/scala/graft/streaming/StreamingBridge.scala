@@ -861,18 +861,14 @@ object StreamingBridge {
     spark.read.parquet(s"$stateRoot/v$last").orderBy("o_orderkey")
   }
 
-  /** Per-process streaming-ingested IVF roots (same lifecycle as the
-    * batch incremental index memo in Similarity): the build + 3-batch
-    * stream ingest runs once; re-entry (Verify, warm+measure bench runs)
-    * is a pure read-back, and a half-ingested index is never exposed
-    * because the memo inserts only after the stream drains cleanly. */
-  private val ivfIngestMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
-
-  private def ivfIngestRoot(spark: SparkSession, dir: String): String = {
-    ivfIngestMemo.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(ivfIngestMemo.remove)
-    ivfIngestMemo.getOrElseUpdate((spark, graft.sources.DatasetId.key(dir)), {
+  /** Per-process streaming-ingested IVF roots, a [[graft.sources.Stages]]
+    * entry like the batch incremental index in Similarity: the build +
+    * 3-batch stream ingest runs once; re-entry (Verify, warm+measure
+    * bench runs) is a pure read-back, and a half-ingested index is never
+    * exposed because the stage registers only after the stream drains
+    * cleanly. */
+  private def ivfIngestRoot(spark: SparkSession, dir: String): String =
+    graft.sources.Stages(spark, "streaming/ivf_ingest", dir) {
       import graft.operators.Similarity
       val root = graft.sources.TempDirs.create("graft_stream_ivf_")
       val isNew = col("vec_id") % 10 === 0
@@ -898,8 +894,7 @@ object StreamingBridge {
         .start()
       try q.processAllAvailable() finally q.stop()
       root
-    })
-  }
+    }
 
   /** Public warm-up for Bench: force the one-time resident build + stream
     * ingest so the chain is billed separately from the read-back cost. */
@@ -933,8 +928,8 @@ object StreamingBridge {
     * stageTimeOrdered, shared by the artifact-serving twins (BPE encode,
     * quality gate). Memoized via [[stagedFor]]: fingerprint-checked per
     * (path, stage tag), so an in-process regeneration of the dataset is
-    * a cache miss here exactly as it is for the artifact memos
-    * (bpeRootMemo/gateSpecMemo) — a path-only memo would replay the
+    * a cache miss here exactly as it is for the artifact roots in
+    * graft.sources.Stages (bpe, gatespec) — a path-only memo would replay the
     * stale staged corpus while the freshly fingerprinted artifacts
     * retrain, silently diverging batch from stream. Repeated
     * bench/oracle drives on unchanged data still reuse the staged files
@@ -947,8 +942,8 @@ object StreamingBridge {
   private val docsStageMemo =
     new scala.collection.concurrent.TrieMap[(String, String), (String, String)]
 
-  /** Staged-dir memoization with SUPERSESSION — the chainMemo discipline
-    * applied to on-disk stages: keyed by stable identity (source path +
+  /** Staged-dir memoization with SUPERSESSION — the graft.sources.Stages
+    * discipline applied to process-level on-disk stages: keyed by stable identity (source path +
     * stage tag), the VALUE carries the staging-time dataset fingerprint.
     * A hit under a changed fingerprint (dataset regenerated in place) is
     * a miss that also DELETES the superseded staged dir, so a

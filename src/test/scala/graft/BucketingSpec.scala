@@ -67,4 +67,18 @@ class BucketingSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
   }
+
+  test("bucketed_join follows a switch of dataset: A, B, A each match the raw-parquet join") {
+    def raw(dir: String) = Tables.lineitem(spark, dir)
+      .join(Tables.orders(spark, dir), $"l_orderkey" === $"o_orderkey")
+      .groupBy("o_orderstatus", "l_returnflag")
+      .agg(count(lit(1)).as("n"))
+      .as[(String, String, Long)].collect().toSet
+    def bucketed(dir: String) = graft.operators.AdvancedSql.bucketedJoin(spark, dir)
+      .select("o_orderstatus", "l_returnflag", "n")
+      .as[(String, String, Long)].collect().toSet
+    Seq(sf, sfOther, sf).foreach { dir =>
+      assert(bucketed(dir) == raw(dir), s"bucketed_join on $dir read another dataset's tables")
+    }
+  }
 }

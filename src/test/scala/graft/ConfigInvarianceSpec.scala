@@ -47,16 +47,11 @@ class ConfigInvarianceSpec extends SparkSpec {
     "dsir_weights" -> operators.Dsir.dsirWeights _,
   )
 
-  // drop every operator memo/localCheckpoint so each variant genuinely
-  // re-executes the shared stages (scoredLshPairs, the LSH pairs memo, the
+  // drop every registered stage/localCheckpoint so each variant genuinely
+  // re-executes the shared stages (scoredLshPairs, the LSH pairs, the
   // BPE merge table) under ITS config — otherwise variants replay caches
   // materialized under the baseline config and prove nothing
-  private def clearAllMemos(): Unit = {
-    operators.Dedup.clearMemo()
-    operators.Similarity.clearMemo()
-    operators.TextAnalysis.clearMemo()
-    operators.Dsir.clearMemo()
-  }
+  private def clearAllMemos(): Unit = graft.sources.Stages.clear()
 
   test("results identical under AQE on/off and shuffle partitions 4 vs 13") {
     clearAllMemos()

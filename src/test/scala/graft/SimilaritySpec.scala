@@ -237,6 +237,24 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("embed_clusters: an in-place regenerated dataset gets fresh labels, not the old ones") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val ds = graft.sources.TempDirs.create("graft_clusters_regen_")
+    new java.io.File(sf).listFiles().foreach(f =>
+      Files.copy(f.toPath, Paths.get(ds, f.getName)))
+    def clusters() = Similarity.embedClusters(spark, ds).as[(Long, Long)].collect().toSeq
+    val before = clusters()
+    Files.copy(Paths.get(sfOther, "embeddings.parquet"),
+      Paths.get(ds, "embeddings.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val after = clusters()
+    graft.sources.Stages.clear()
+    val fresh = clusters()
+    assert(fresh != before, "the regenerated embeddings must cluster differently")
+    val stale = after.zip(fresh).count { case (x, y) => x != y }
+    assert(after.size == fresh.size && stale == 0,
+      s"embed_clusters served $stale labels of the superseded dataset")
+  }
+
   test("knn_graph: <=3 ranked neighbors per node, drawn from the candidate pairs") {
     val knn = graft.operators.Similarity.knnGraph(spark, sf)
       .as[(Long, Long, Double, Int)].collect()
