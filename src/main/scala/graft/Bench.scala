@@ -47,8 +47,13 @@ object Bench {
     if (b != null && b.isCompilationTimeMonitoringSupported) b.getTotalCompilationTime else -1L
   }
 
+  /** Generated classes Janino has compiled in this JVM: one per miss of
+    * Spark's generated-class cache (hits are not counted). */
+  private def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   final case class Timing(name: String, wallS: Double, cpuS: Double, gcS: Double,
-      jitS: Double)
+      jitS: Double, compiles: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -81,7 +86,7 @@ object Bench {
 
     def timed(label: String)(body: => Unit): Timing = {
       val t0 = System.nanoTime(); val c0 = cpuNanos; val g0 = gcMillis
-      val j0 = jitMillis
+      val j0 = jitMillis; val k0 = codegenCompiles
       val ok =
         try { body; true }
         catch { case e: Throwable =>
@@ -93,7 +98,7 @@ object Bench {
       val wall = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       Timing(label, wall,
         if (c0 >= 0) (cpuNanos - c0) / 1e9 else -1.0, (gcMillis - g0) / 1e3,
-        if (j0 >= 0) (jitMillis - j0) / 1e3 else -1.0)
+        if (j0 >= 0) (jitMillis - j0) / 1e3 else -1.0, codegenCompiles - k0)
     }
 
     val gc0 = gcMillis
@@ -167,12 +172,14 @@ object Bench {
       timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     }
     // Optional steady-state passes (SPARK_GRAFT_PASSES=N, N >= 2): rerun
-    // the query set N-1 more times in the SAME JVM. jit_s is 80-90% of
-    // wall on small queries across every recorded run, so pass-1 totals
-    // measure mostly C2 compilation of the round's plan closures, not the
-    // plans — the recurring driver-vs-record wall gap. Steady-state
-    // passes run against a warmed code cache (and warm shared-stage
-    // memos), so their walls are the plan-cost signal to compare across
+    // the query set N-1 more times in the SAME JVM. Pass 1 pays each
+    // plan's one-time cost: Janino compiles its generated classes
+    // (`codegen_compiles`) and C2 then warms them. The classes stay in
+    // Spark's generated-class cache, sized by
+    // SpillSafety.CodegenCacheEntries to hold the whole suite (at Spark's
+    // 100-entry default a steady sf0.01 pass recompiled 5,727 of them),
+    // so a steady pass compiles only classes whose code differs from pass
+    // 1 (mostly in the stream rows), and its walls are the plan-cost signal to compare across
     // rounds. With N >= 3 the OF-RECORD figure is the per-query MEDIAN
     // of passes 2..N (`wall_med_s` / `med_total`): the r16 close measured
     // a ~38 s same-code pass-2 spread on this host — larger than a
@@ -227,12 +234,15 @@ object Bench {
     val pass2ByName = results2.map(_.map(t => t.name -> t).toMap).getOrElse(Map.empty)
     val detail = all.map { t =>
       val p2 = pass2ByName.get(t.name).map(s =>
-        s""", "wall2_s": ${fmt(s.wallS)}, "cpu2_s": ${fmt(s.cpuS)}""").getOrElse("")
+        s""", "wall2_s": ${fmt(s.wallS)}, "cpu2_s": ${fmt(s.cpuS)}, "codegen_compiles2": ${s.compiles}""").getOrElse("")
       val med = medByName.get(t.name).map(m =>
         s""", "wall_med_s": ${fmt(m)}""").getOrElse("")
-      s"""    "${t.name}": {"wall_s": ${fmt(t.wallS)}, "cpu_s": ${fmt(t.cpuS)}, "gc_s": ${fmt(t.gcS)}, "jit_s": ${fmt(t.jitS)}$p2$med}"""
+      s"""    "${t.name}": {"wall_s": ${fmt(t.wallS)}, "cpu_s": ${fmt(t.cpuS)}, "gc_s": ${fmt(t.gcS)}, "jit_s": ${fmt(t.jitS)}, "codegen_compiles": ${t.compiles}$p2$med}"""
     }.mkString("{\n", ",\n", "\n  }")
     val jitTotal = all.map(_.jitS).filter(_ >= 0).sum
+    // per-pass compile totals: a steady pass that recompiles hundreds of
+    // classes means the generated-class cache is thrashing
+    val compilesByPass = (all +: steadyPasses).map(_.map(_.compiles).sum)
     val pass2Line = results2.map { r2 =>
       val t2 = r2.map(_.wallS).filter(_ >= 0).sum
       val j2 = r2.map(_.jitS).filter(_ >= 0).sum
@@ -247,6 +257,7 @@ object Bench {
       s"""{
   "metric": "total", "value": ${fmt(total)}, "unit": "sec",$pass2Line
   "gc_s": ${fmt(gcS)}, "cpu_s": ${fmt(cpuS)}, "jit_s": ${fmt(jitTotal)}, "load_avg": ${fmt(load)},
+  "codegen_compiles_by_pass": ${compilesByPass.mkString("[", ", ", "]")},
   "sf": "$sfDir", "n_queries": ${results.size}, "n_chains": ${chainResults.size},
   "queries": $detail
 }

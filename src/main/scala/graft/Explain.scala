@@ -10,7 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_OUT", "/tmp/graft_plans.txt")
-    val spark = SparkSession.builder()
+    val spark = graft.sources.SpillSafety.tune(SparkSession.builder(), 4, 0.6)
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")

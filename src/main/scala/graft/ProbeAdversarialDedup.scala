@@ -60,7 +60,8 @@ object ProbeAdversarialDedup {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mult = sys.env.getOrElse("SPARK_GRAFT_ADV_MULT", "1").toInt
-    val spark = SparkSession.builder()
+    val spark = graft.sources.SpillSafety.tune(SparkSession.builder(),
+        cpus.toInt, 0.6)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

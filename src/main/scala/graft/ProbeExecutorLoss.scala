@@ -57,7 +57,7 @@ object ProbeExecutorLoss {
         : (String, Long, Double, Stats, String) = {
       val stats = new Stats
       val spark = graft.sources.SpillSafety
-        .starvedSorterConf(16L << 30, 16, 0.6)
+        .sessionConf(16L << 30, 16, 0.6)
         .foldLeft(SparkSession.builder()
           .master("local-cluster[2,16,18432]")
           .appName(s"graft-execloss-$tag")

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
 object ProbeLongDoc {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = graft.sources.SpillSafety.tune(SparkSession.builder(),
+        cpus.toInt, 0.6)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

@@ -99,7 +99,8 @@ object ProbeMultiJvm {
       (out, execJson)
     }
 
-    val (localRows, localExec) = runUnder("local[32]", "local", Seq.empty)
+    val (localRows, localExec) = runUnder("local[32]", "local",
+      graft.sources.SpillSafety.sessionConf(Runtime.getRuntime.maxMemory(), 32, 0.6))
     // local-cluster's worker-memory figure is the WORKER's resource pool,
     // NOT the executor heap — without spark.executor.memory the executors
     // launch at the 1g default and OOM at 100× (observed: exit 52, Java
@@ -109,7 +110,7 @@ object ProbeMultiJvm {
     val (clusterRows, clusterExec) =
       runUnder("local-cluster[2,16,18432]", "cluster",
         Seq("spark.executor.memory" -> "16g") ++
-          graft.sources.SpillSafety.starvedSorterConf(16L << 30, 16, 0.6))
+          graft.sources.SpillSafety.sessionConf(16L << 30, 16, 0.6))
 
     val failures = Seq.newBuilder[String]
     val rowsJson = localRows.zip(clusterRows).map {

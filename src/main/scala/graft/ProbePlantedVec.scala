@@ -73,7 +73,8 @@ object ProbePlantedVec {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/repo/probedata/sf1.0h_planted_vec")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = graft.sources.SpillSafety.tune(SparkSession.builder(),
+        cpus.toInt, 0.6)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

@@ -228,6 +228,18 @@ object AdvancedSql {
       ()
     }
 
+  /** (expected items, bits) for a bloom over `buildRows` keys: ~10 bits
+    * per item (≈ 1% fpp), at least 1,000 items, and clamped at Spark's
+    * `runtime.bloomFilter.maxNumItems` / `maxNumBits`. BloomFilterAggregate
+    * clamps to those maxima itself, so the clamp here keeps the sizing
+    * honest about the filter it gets: past the 4 M-item default (~300 k
+    * urgent orders per scale factor, so ~sf13) the fpp rises instead of
+    * the driver-side literal growing with the data. */
+  def bloomSizing(buildRows: Long, maxItems: Long, maxBits: Long): (Long, Long) = {
+    val items = math.min(math.max(1000L, buildRows), maxItems)
+    (items, math.min(items * 10, maxBits))
+  }
+
   /** Runtime bloom-filter join pruning — the explicit form of the
     * selective-join pattern Spark's InjectRuntimeFilter automates: when a
     * dimension filter keeps a small key set, a bloom of those keys can
@@ -248,21 +260,21 @@ object AdvancedSql {
     val urgent = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    // Size the filter to the BUILD SIDE, not a constant (guide §3.2:
-    // expectedNumItems ≥ the true count, ~10 bits/item ≈ 1% fpp): the
-    // former fixed 1.6 Mbit filter was a ~200 KB literal baked into the
-    // probe's generated code at EVERY scale — oversized (slow codegen,
-    // fat broadcast) at bench SFs and undersized past ~170 k urgent
-    // orders. Order count is a metadata-only parquet count; urgent is
-    // ~1/5 of orders (n/4 for slack). False positives are removed by the
-    // exact semi-join either way, so the result is sizing-invariant.
-    val expected = math.max(1000L, Tables.orders(spark, dir).count() / 4)
+    // Size the filter to the BUILD SIDE it aggregates, not a constant
+    // (guide §3.2: expectedNumItems ≥ the true count, ~10 bits/item ≈ 1%
+    // fpp): the former fixed 1.6 Mbit filter was a ~200 KB literal baked
+    // into the probe's generated code at EVERY scale. Clamped at Spark's
+    // own bloom maxima (see [[bloomSizing]]). False positives are removed
+    // by the exact semi-join either way, so the result is sizing-invariant.
+    val (items, bits) = bloomSizing(urgent.count(),
+      spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems").toLong,
+      spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong)
     // bloom_filter_agg / might_contain are registry-internal (the pair
     // InjectRuntimeFilter plants); the bridge builds them directly
     val bfBytes = urgent
       .agg(GraftColumnBridge.column(new BloomFilterAggregate(
         GraftColumnBridge.expression(xxhash64(col("o_orderkey"))),
-        Literal(expected), Literal(expected * 10)).toAggregateExpression()).as("bf"))
+        Literal(items), Literal(bits)).toAggregateExpression()).as("bf"))
       .head().getAs[Array[Byte]](0)
     val mightContain = GraftColumnBridge.column(BloomFilterMightContain(
       Literal(bfBytes, org.apache.spark.sql.types.BinaryType),

@@ -233,8 +233,14 @@ object ArtifactRoots {
             // re-enter the loop instead of returning: the while condition
             // re-judges marker AND parts, so a torn marker sends this
             // waiter into the claim race to heal it rather than handing
-            // the caller a half-read root
-            case Outcome.Marker => ()
+            // the caller a half-read root. A torn marker under another
+            // live claim returns Marker again at once, so pace that
+            // re-loop: without the pause the waiter spins a full core
+            // until the claim holder finishes.
+            case Outcome.Marker =>
+              if (!complete())
+                try Thread.sleep(25)
+                catch { case _: InterruptedException => Thread.currentThread().interrupt() }
             case Outcome.Vanished => () // re-loop to claim
             case Outcome.Stale =>
               // Atomic takeover: of N waiters that saw the same stale

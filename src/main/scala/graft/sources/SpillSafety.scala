@@ -27,7 +27,12 @@ package graft.sources
   * pressure the job is spill-bound anyway and surviving beats
   * prefetching. These are SparkConf-level settings (the reader
   * constructor reads `SparkEnv.get().conf()`), so they must be applied
-  * at session BUILD time — hence a builder hook, not a runtime set. */
+  * at session BUILD time — hence a builder hook, not a runtime set.
+  *
+  * The same hook sizes Spark's generated-class cache, another static
+  * conf ([[CodegenCacheEntries]]). Every graft session — the CLIs, the
+  * probes, the test base and the benchmark driver — is built through
+  * [[tune]] (or folds [[sessionConf]] for a non-local master). */
 object SpillSafety {
   /** Per-slot execution-pool floor below which the guardrails engage. */
   val StarvedPoolPerSlotBytes: Long = 16L << 20
@@ -46,10 +51,30 @@ object SpillSafety {
     else Seq.empty
   }
 
-  /** Apply the policy to a session builder using this JVM's max heap
+  /** Capacity of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, an LRU; Spark's default is
+    * 100). Its size is read once, from the active session's conf, when
+    * the code generator first loads, so the session must be built before
+    * anything generates code. At the default every pass recompiles most
+    * of its classes in Janino: perfbench `llm_dedup` generates ~160 per
+    * pass and recompiled ~150 each timed pass; a steady Bench sf0.01
+    * pass recompiled 5,727. Measured working set, the distinct compiles
+    * in one Bench pass with a 1,000,000-entry cap: 4,192 at sf0.01 and
+    * 4,183 at sf0.1. The cap is at least twice the largest. */
+  val CodegenCacheEntries: Int = 16384
+
+  /** Every conf pair the build hook sets: the starved-sorter guard (see
+    * [[starvedSorterConf]]) plus the codegen cache capacity. Pure; a
+    * non-local master folds it with its EXECUTOR heap and slots. */
+  def sessionConf(heapBytes: Long, slots: Int,
+      memFraction: Double): Seq[(String, String)] =
+    starvedSorterConf(heapBytes, slots, memFraction) :+
+      ("spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
+
+  /** Apply [[sessionConf]] to a session builder using this JVM's max heap
     * (the executor heap in local mode, where all graft CLIs run). */
   def tune(builder: org.apache.spark.sql.SparkSession.Builder, slots: Int,
       memFraction: Double): org.apache.spark.sql.SparkSession.Builder =
-    starvedSorterConf(Runtime.getRuntime.maxMemory(), slots, memFraction)
+    sessionConf(Runtime.getRuntime.maxMemory(), slots, memFraction)
       .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
 }

@@ -256,6 +256,40 @@ class ArtifactProtocolSpec extends SparkSpec {
         "deleted B's published part in its leftover-clear")
   }
 
+  test("a torn marker under another live claim: the waiter backs off instead of spinning") {
+    val root = graft.sources.TempDirs.create("graft_torn_wait_root_")
+    // A torn publish (marker, no parts) while a fake builder holds a
+    // FRESH claim: the waiter may neither take the claim over nor trust
+    // the marker, so it must wait, and waiting must be paced.
+    val rootPath = java.nio.file.Paths.get(root)
+    java.nio.file.Files.createFile(rootPath.resolve(".complete"))
+    val stage = rootPath.resolve(".build")
+    java.nio.file.Files.createDirectory(stage)
+    java.nio.file.Files.write(stage.resolve(".owner"), "fake-builder".getBytes)
+    java.nio.file.Files.createFile(stage.resolve(".hb"))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    val waiter = new Thread(() => {
+      ArtifactRoots.atomicBuild(root, Seq("data")) { st =>
+        spark.range(5).coalesce(1).write.parquet(s"$st/data")
+      }
+      ()
+    }, "graft-torn-marker-waiter")
+    waiter.start()
+    val holdMs = 500L
+    Thread.sleep(50) // let the waiter enter its loop
+    val c0 = mx.getThreadCpuTime(waiter.getId)
+    Thread.sleep(holdMs)
+    val cpuNs = mx.getThreadCpuTime(waiter.getId) - c0
+    // the fake builder gives up its claim; the waiter heals the root
+    ArtifactRoots.deleteRecursively(stage)
+    waiter.join(120000)
+    assert(!waiter.isAlive, "waiter never finished after the claim was released")
+    assert(spark.read.parquet(s"${ArtifactRoots.assertComplete(root)}/data").count() == 5)
+    // a paced waiter burns a few ms of CPU per hold; a spinning one ~all of it
+    assert(cpuNs < holdMs * 1000L * 1000L / 5,
+      s"waiter burned ${cpuNs / 1e6} ms CPU over a $holdMs ms hold")
+  }
+
   test("a slow but heartbeating winner is NOT taken over") {
     val root = graft.sources.TempDirs.create("graft_slow_winner_root_")
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -46,4 +46,18 @@ class BloomFilterJoinSpec extends SparkSpec {
       }
     }
   }
+
+  test("join_bloom_prune's bloom sizing is clamped at Spark's bloom maxima") {
+    import graft.operators.AdvancedSql.bloomSizing
+    val (maxItems, maxBits) = (4000000L, 67108864L) // Spark's defaults
+    assert(bloomSizing(0L, maxItems, maxBits) == ((1000L, 10000L)))
+    assert(bloomSizing(3000L, maxItems, maxBits) == ((3000L, 30000L)))
+    // items clamp first at the defaults; the literal stops growing
+    assert(bloomSizing(50000000L, maxItems, maxBits) == ((maxItems, maxItems * 10)))
+    // a tighter bit cap binds on its own
+    assert(bloomSizing(3000000L, maxItems, 1L << 20) == ((3000000L, 1L << 20)))
+    // the conf keys the operator reads exist with those defaults
+    assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems").toLong == maxItems)
+    assert(spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong == maxBits)
+  }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites — one local SparkSession per JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.sources.SpillSafety.tune(SparkSession.builder(), 4, 0.6)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -24,6 +24,21 @@ class SpillSafetySpec extends AnyFunSuite {
     assert(conf("spark.unsafe.sorter.spill.reader.buffer.size") == (1L << 20).toString)
   }
 
+  test("the session-build hook's conf carries the codegen cache cap and the starved-sorter pairs unchanged") {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    for ((heap, slots, frac) <- Seq((4 * G, 32, 0.05), (8 * G, 32, 0.60), (16 * G, 4, 0.60))) {
+      val conf = SpillSafety.sessionConf(heap, slots, frac)
+      assert(conf.toMap.get(key).contains(SpillSafety.CodegenCacheEntries.toString))
+      assert(conf.filterNot(_._1 == key) == SpillSafety.starvedSorterConf(heap, slots, frac))
+    }
+    // far above Spark's 100-entry default, which one Bench pass overflows
+    assert(SpillSafety.CodegenCacheEntries >= 8192)
+    // the shared test session is built through the hook: the static conf
+    // is live on its context
+    assert(TestSpark.spark.sparkContext.getConf.get(key) ==
+      SpillSafety.CodegenCacheEntries.toString)
+  }
+
   test("artifact row-group bound clamps to the parquet default at production heap/slot ratios") {
     val spark = TestSpark.spark // local JVM: heap is this JVM's -Xmx
     val slots = spark.sparkContext.defaultParallelism

@@ -112,11 +112,21 @@ def bench_once(workdir, env):
     return wall, detail
 
 
+def pass2_compiles(detail):
+    """Codegen compiles in the run's first steady pass (None when the run
+    had one pass or predates `codegen_compiles_by_pass`)."""
+    by_pass = detail.get("codegen_compiles_by_pass") or []
+    return by_pass[1] if len(by_pass) > 1 else None
+
+
 def side_summary(runs):
     meds = [d.get("med_total", -1) for _, d in runs]
     p1s = [d.get("value", -1) for _, d in runs]
     return {
         "pass1_totals": p1s,
+        "pass2_totals": [d.get("pass2_total") for _, d in runs],
+        # hundreds of steady-pass compiles = generated-class cache thrash
+        "pass2_codegen_compiles": [pass2_compiles(d) for _, d in runs],
         "med_totals": meds,
         "med_of_meds": statistics.median([m for m in meds if m >= 0]) if any(
             m >= 0 for m in meds) else -1,
@@ -281,6 +291,10 @@ def main():
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1)
     print(f"[ab] wrote {out_path}")
+    for key in ("base", "head"):
+        if key in out:
+            print(f"[ab] {key}: pass-2 wall {out[key]['pass2_totals']} s, "
+                  f"pass-2 codegen compiles {out[key]['pass2_codegen_compiles']}")
     print(json.dumps(out.get("common_rows"), indent=1))
 
 
