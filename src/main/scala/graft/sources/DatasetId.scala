@@ -1,7 +1,10 @@
 package graft.sources
 
 /** Content identity for a dataset directory, checked by every per-process
-  * reused stage ([[Stages]], the streaming bridge's input stagings).
+  * reused stage: [[Stages]] (through [[key]]) and the streaming bridge's
+  * one staging memo, `StreamingBridge.stagedFor` (through [[fingerprint]],
+  * kept beside a path-only key so a superseded staging can be found and
+  * deleted).
   * Keying by path alone serves stale results if the directory is
   * regenerated in-process (same path, new files); folding the listing's
   * (name, length, mtime) triples into the key makes regeneration a cache

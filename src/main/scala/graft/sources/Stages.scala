@@ -26,8 +26,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * How a stage materializes (persist, localCheckpoint, an
   * [[ArtifactRoots]] root) stays the builder's choice. The streaming
-  * bridge's process-level input stagings are not stages of a session and
-  * live outside this registry; [[clear]] leaves them alone.
+  * bridge's input stagings are files on disk, not stages of a session:
+  * they live in its one process-level memo, `StreamingBridge.stagedFor`,
+  * which applies the same fingerprint check (a regenerated dataset
+  * deletes and rebuilds its staging); [[clear]] leaves them alone.
   */
 object Stages {
 

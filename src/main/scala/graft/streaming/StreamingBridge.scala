@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import java.nio.file.{Files, Paths}
 
-import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
+
+import graft.sources.{Tables, TempDirs}
 import graft.streaming.StreamingOps.Event
 
 /** Batch⇄streaming equivalence bridge: drives the Structured Streaming
@@ -13,10 +16,13 @@ import graft.streaming.StreamingOps.Event
   * oracle-checkable — its results are compared against the SAME DuckDB SQL
   * as the batch twins, instead of being trusted on spec assertions alone.
   *
-  * All three queries stream from `readStream.parquet` on a staged copy of
-  * the events table (the production shape — nothing is routed through the
-  * driver; the only driver-side values are scalar aggregates like the max
-  * event time used to place the watermark-advancing sentinel).
+  * All 33 queries stream from `readStream` on a staged copy of their input
+  * (the production shape — nothing is routed through the driver; the only
+  * driver-side values are scalar aggregates like the max event time used
+  * to place the watermark-advancing sentinel, and the shipped artifacts
+  * the serving twins load as literals). Every drive goes through one of
+  * three helpers — [[memorySink]], [[foreachBatch]] or the file sink's
+  * [[checkpointed]] start — and ends in [[drain]].
   */
 object StreamingBridge {
 
@@ -25,91 +31,248 @@ object StreamingBridge {
 
   private val eventCols = Seq("event_id", "ts", "user_id", "event_type", "value")
 
-  /** Memoized base staging (one per (events fingerprint[, n]) per
-    * process — keyed by DatasetId.key of the events source, not the raw
-    * path, so regenerating the dataset in-process misses the cache):
-    * bridges run the SAME staging for every query, so the expensive part
-    * — the Spark write / file copy out of the read-only testdata tree —
-    * happens once and each query gets a cheap per-query VIEW of it via
-    * [[linkStaged]]. Bases are immutable after creation; only views are
-    * ever handed to a query. */
-  private val eventsStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]
-  private val timeOrderedStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]
+  /** Streaming state partitions per bridge drive — see [[scoped]]. */
+  private val StateParts = 4
 
-  /** Per-query view of a staged base dir: hard-link every parquet file
-    * into a fresh temp dir (copy with attributes if the filesystem
-    * refuses links). Links share the base inodes, so the mtime ordering
-    * the file source replays by is IDENTICAL to the base's — and the
-    * sentinel files a bridge later drops into its view are new inodes in
-    * a private dir, invisible to sibling queries and to the base. */
-  private def linkStaged(base: String): String = {
-    val d = graft.sources.TempDirs.create("graft_stage_view_")
-    new java.io.File(base).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach { f =>
-        val dst = java.nio.file.Paths.get(d, f.getName)
-        try java.nio.file.Files.createLink(dst, f.toPath)
-        catch {
-          case _: Exception => java.nio.file.Files.copy(f.toPath, dst,
-            java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-        }
+  private val StateStoreProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  private val OneFilePerTrigger = Map("maxFilesPerTrigger" -> "1")
+
+  // bridge mutual exclusion: every bridge drive and every staging-memo
+  // access. A PRIVATE lock, deliberately not the SparkSession's own
+  // monitor: Scala lazy-val initialization inside SparkSession
+  // synchronizes on the session instance, so holding that monitor across
+  // a whole streaming drive could deadlock against a streaming-execution
+  // thread touching a not-yet-initialized lazy val.
+  private val bridgeLock = new Object
+
+  /** (dataset dir, stage tag) → (dataset fingerprint at staging, staged
+    * dir). Guarded by [[bridgeLock]]. */
+  private val stagings = scala.collection.mutable.HashMap.empty[(String, String), (String, String)]
+
+  /** THE staging memo of every bridge: the staged dir built for (`dir`,
+    * `tag`), built once per process and reused while the dataset's
+    * fingerprint holds — the [[graft.sources.Stages]] discipline applied
+    * to on-disk stagings, which are not stages of a session and so
+    * survive `Stages.clear()`. Keyed by stable identity (dataset path +
+    * stage tag), the VALUE carries the staging-time fingerprint: a hit
+    * under a changed fingerprint (dataset regenerated in place) is a miss
+    * that also DELETES the superseded staged dir, so a process-lifetime
+    * embedder can't accumulate one dead staging per regeneration (keying
+    * by `DatasetId.key` — fingerprint inside the key — made stale entries
+    * unreachable but never evicted them). Check, delete and rebuild are
+    * one atomic step under [[bridgeLock]]; the eager delete cannot pull
+    * files from under a reader, because bridges read stagings only inside
+    * a drive (which holds the same lock) and event stagings are handed out
+    * only as [[linkStaged]] views, which keep their own links. */
+  private[graft] def stagedFor(dir: String, tag: String)(build: => String): String =
+    bridgeLock.synchronized {
+      val fp = graft.sources.DatasetId.fingerprint(dir)
+      stagings.get((dir, tag)) match {
+        case Some((`fp`, staged)) => staged
+        case stale =>
+          stale.foreach { case (_, old) =>
+            try graft.sources.ArtifactRoots.deleteRecursively(Paths.get(old))
+            catch { case scala.util.control.NonFatal(_) => () }
+          }
+          val staged = build
+          stagings.put((dir, tag), (fp, staged))
+          staged
       }
-    d
+    }
+
+  /** Per-query view of the staging `stagedFor(dir, tag)(build)`:
+    * hard-link every file of the base into a fresh temp dir (copy
+    * with attributes if the filesystem refuses links). Links share the
+    * base inodes, so the mtime ordering the file source replays by is
+    * IDENTICAL to the base's — and the sentinel files a bridge later
+    * drops into its view are new inodes in a private dir, invisible to
+    * sibling queries and to the base. */
+  private def linkStaged(dir: String, tag: String)(build: => String): String =
+    bridgeLock.synchronized {
+      val base = stagedFor(dir, tag)(build)
+      val d = TempDirs.create("graft_stage_view_")
+      new java.io.File(base).listFiles().sortBy(_.getName)
+        .foreach { f =>
+          val dst = Paths.get(d, f.getName)
+          try Files.createLink(dst, f.toPath)
+          catch {
+            case _: Exception => Files.copy(f.toPath, dst,
+              java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+          }
+        }
+      d
+    }
+
+  /** The part files a Spark write left in `dir`, in name order. */
+  private def partFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+
+  /** THE copy tail of every staging: copy `parts` into a fresh temp dir
+    * under `prefix` with ascending mtimes 1 s apart, so the file source
+    * (ordered by timestamp, then path) replays them in the given order —
+    * one file per micro-batch at `maxFilesPerTrigger = 1`. One
+    * implementation, so the batch-ordering semantics every `stream_*_eq`
+    * oracle depends on cannot silently fork per staging. */
+  private def copyAscending(parts: Seq[java.io.File], prefix: String): String = {
+    val out = TempDirs.create(prefix)
+    val tsBase = System.currentTimeMillis() - 1000L * parts.length
+    parts.zipWithIndex.foreach { case (f, i) =>
+      val dst = Paths.get(out, f"batch_$i%05d.parquet")
+      Files.copy(f.toPath, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(tsBase + i * 1000L))
+    }
+    out
   }
+
+  /** Write `df` as `n` range-split parquet files (range keys `rangeCols`)
+    * with ascending mtimes under a fresh temp dir — one file per
+    * micro-batch at `maxFilesPerTrigger = 1`. Shared by the time-ordered
+    * events, the corpus stages, the IVF ingest delta and the retrieval
+    * query panels. */
+  private def stageRangedFiles(df: DataFrame, n: Int, prefix: String,
+      rangeCols: String*): String = {
+    val build = TempDirs.create(s"${prefix}build_")
+    df.repartitionByRange(n, rangeCols.map(col): _*).write.mode("overwrite").parquet(build)
+    copyAscending(partFiles(build), prefix)
+  }
+
+  /** Write `df` as one parquet file per value of the integer column
+    * `split`, in the order of `keys`, with ascending mtimes — for splits
+    * an oracle must reproduce exactly, where repartitionByRange's sampled
+    * boundaries would not do. A key with no rows stages no file (ntile(5)
+    * over fewer than 5 rows emits fewer groups; the oracle's assignment
+    * is identical either way). */
+  private def stageSplit(df: DataFrame, split: Column, keys: Seq[Int],
+      prefix: String): String = {
+    val build = TempDirs.create(s"${prefix}build_")
+    df.withColumn("split", split).coalesce(1)
+      .write.partitionBy("split").mode("overwrite").parquet(build)
+    copyAscending(keys.flatMap(k => partFiles(s"$build/split=$k").headOption), prefix)
+  }
+
+  /** A staged event feed: the monitored dir, the on-disk schema its
+    * stream (and its sentinels) use, and the file-source options. */
+  private final case class Feed(dir: String, schema: StructType, opts: Map[String, String])
 
   /** Stage the events table into a per-query temp directory the file
     * stream source can monitor. The source watches a DIRECTORY and
     * discovers new files per micro-batch; testdata ships events.parquet
     * as a bare file in a read-only tree, so it can neither be monitored
     * in place nor appended to with a sentinel. In production the
-    * monitored ingest directory already exists. Returns (stream dir,
+    * monitored ingest directory already exists. The feed's schema is the
     * on-disk schema projected to the event columns — parquet resolves
-    * columns by name, so the projection prunes the scan and lets
-    * sentinel files carry only these five columns). */
-  private def stageEvents(spark: SparkSession, dir: String): (String, StructType) = {
-    val (base, proj) = eventsStageMemo.computeIfAbsent(
-        graft.sources.DatasetId.key(s"$dir/events.parquet"), { _ =>
-      val path = s"$dir/events.parquet"
-      val schema = StructType(eventCols.map(spark.read.parquet(path).schema(_)))
-      val d = graft.sources.TempDirs.create("graft_stream_events_")
+    * columns by name, so the projection prunes the scan and lets sentinel
+    * files carry only these five columns. The schema is stored with the
+    * staging (`_schema.json`, which the file source skips like every
+    * `_`-prefixed file): a parquet schema read is a Spark job, paid once
+    * per staging rather than once per query. The whole file set is one
+    * micro-batch. */
+  private def stageEvents(spark: SparkSession, dir: String): Feed = {
+    val path = s"$dir/events.parquet"
+    val view = linkStaged(dir, "events") {
       val src = new java.io.File(path)
-      val parts =
-        if (src.isDirectory) src.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
-        else Seq(src)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(d, f"events_$i%05d.parquet"))
-      }
-      (d, schema)
-    })
-    (linkStaged(base), proj)
+      val out = copyAscending(
+        if (src.isDirectory)
+          src.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+        else Seq(src),
+        "graft_stream_events_")
+      Files.writeString(Paths.get(out, "_schema.json"),
+        StructType(eventCols.map(spark.read.parquet(path).schema(_))).json)
+      out
+    }
+    Feed(view, DataType.fromJson(Files.readString(Paths.get(view, "_schema.json")))
+      .asInstanceOf[StructType], Map.empty)
   }
 
-  /** ts normalization mirroring Tables.events: LongType nanos (legacy
-    * TIMESTAMP(NANOS) under nanosAsLong) → µs TimestampType, and
-    * TimestampNTZType (timestamp[us] without timezone) → TimestampType,
-    * which `withWatermark` requires. */
-  private def fixTs(raw: DataFrame, schema: StructType): DataFrame =
-    Tables.normalizeTs(raw)
+  /** Stage the events table as `n` time-range parquet files with
+    * ascending mtimes, so the file source (ordered by timestamp, then
+    * path) replays them chronologically — shared by the incremental
+    * dedup/sessionize bridges and the whole transformWithState family.
+    * The range keys are (ts, event_id) — the same total order the batch
+    * twins and the per-batch sorts inside the stateful processors use —
+    * so equal-timestamp events can never straddle a file (= micro-batch)
+    * boundary in an order that differs from the batch (ts, event_id)
+    * replay; without the tie-break, last-touch/prev state in the
+    * tie-sensitive attribution twin could flip on a boundary split.
+    * The ranged write (a Spark job over the full events table) runs ONCE
+    * per (dataset, n) per process; every query gets a private hard-link
+    * view so its sentinels stay its own. */
+  private[graft] def stageTimeOrdered(spark: SparkSession, dir: String, n: Int): String =
+    linkStaged(dir, s"events:$n") {
+      stageRangedFiles(Tables.events(spark, dir).select(eventCols.map(col): _*),
+        n, "graft_incr_", "ts", "event_id")
+    }
 
-  private def typedEventStream(spark: SparkSession, streamDir: String,
-      schema: StructType): Dataset[Event] = {
+  /** The 4-file chronological feed, replayed one file per trigger. */
+  private def timeOrdered(spark: SparkSession, dir: String): Feed = {
+    val staged = stageTimeOrdered(spark, dir, 4)
+    Feed(staged, spark.read.parquet(staged).schema, OneFilePerTrigger)
+  }
+
+  /** Stage a projection of the documents table as `n` doc_id-ranged
+    * parquet files (one file per micro-batch) — the document-corpus
+    * counterpart of stageTimeOrdered, shared by the artifact-serving
+    * twins (BPE encode, quality gate, DSIR, decontamination, BM25).
+    * Fingerprint-checked through [[stagedFor]], so an in-process
+    * regeneration of the dataset is a miss here exactly as it is for the
+    * artifact roots in graft.sources.Stages (bpe, gatespec) — a path-only
+    * memo would replay the stale staged corpus while the freshly
+    * fingerprinted artifacts retrain, silently diverging batch from
+    * stream. No sentinels are ever written into these dirs, so queries
+    * share the staged dir directly (each brings its own checkpoint).
+    * Per-doc outputs are order-independent, so no tie-break discipline is
+    * needed either; the range split just guarantees real multi-batch
+    * replay. */
+  private def stageDocsRanged(spark: SparkSession, dir: String, n: Int,
+      cols: Seq[String]): String =
+    stagedFor(dir, s"docs:$n:${cols.mkString(",")}") {
+      stageRangedFiles(Tables.documents(spark, dir).select(cols.map(col): _*),
+        n, "graft_stream_docs_", "doc_id")
+    }
+
+  /** Stage the arrival split (doc_id ≡ 0 mod 10) as 5 EXPLICIT
+    * ntile(doc_id) files — not stageRangedFiles: repartitionByRange draws
+    * sampled boundaries, and the substring twin's oracle must reproduce
+    * the trigger assignment exactly, so the split is pinned to ntile(5)
+    * OVER (ORDER BY doc_id) on both sides. The window is arrival-sized
+    * (staging fixture, not the operator path). */
+  private def stageSubstrArrivals(spark: SparkSession, dir: String): String =
+    stagedFor(dir, "arrivals:ntile5") {
+      stageSplit(Tables.documents(spark, dir)
+          .filter(col("doc_id") % 10 === 0).select("doc_id", "text"),
+        ntile(5).over(org.apache.spark.sql.expressions.Window.orderBy("doc_id")),
+        1 to 5, "graft_stream_substr_docs_")
+    }
+
+  /** The staged parquet dir `dir` as a stream, one file per trigger. */
+  private def replay(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
+      .options(OneFilePerTrigger).parquet(dir)
+
+  /** The feed as an event stream: ts normalized as in Tables.events
+    * (LongType nanos → µs TimestampType, NTZ → TimestampType, which
+    * `withWatermark` requires), projected to the event columns. */
+  private def events(spark: SparkSession, feed: Feed): DataFrame =
+    Tables.normalizeTs(spark.readStream.schema(feed.schema).options(feed.opts)
+      .parquet(feed.dir)).select(eventCols.map(col): _*)
+
+  private def typedEvents(spark: SparkSession, feed: Feed): Dataset[Event] = {
     import spark.implicits._
-    fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-      .select(eventCols.map(col): _*).as[Event]
+    events(spark, feed).as[Event]
   }
 
-  /** Drop a one-row sentinel parquet file into the monitored directory:
-    * the next micro-batch reads it, the watermark advances past every open
-    * session's timeout, and the subsequent no-data batch fires the
-    * event-time timeouts. This is also how a production ingest directory
-    * closes its last sessions — event time only advances through data. */
-  private[graft] def writeSentinel(spark: SparkSession, streamDir: String,
-      schema: StructType, flushMs: Long): Unit =
-    writeSentinelNamed(spark, streamDir, schema, flushMs, "zz_sentinel.parquet")
-
+  /** Drop a one-row-per-event-type sentinel parquet file into the
+    * monitored directory: the next micro-batch reads it, the watermark
+    * advances past every open session's timeout, and the subsequent
+    * no-data batch fires the event-time timeouts. This is also how a
+    * production ingest directory closes its last sessions — event time
+    * only advances through data. */
   private[graft] def writeSentinelNamed(spark: SparkSession, streamDir: String,
       schema: StructType, flushMs: Long, fileName: String,
       eventTypes: Seq[String] = Seq("flush")): Unit = {
@@ -127,28 +290,108 @@ object StreamingBridge {
       eventTypes.foreach(t => l.add(Row(-1L, tsVal, -1L, t, 0.0)))
       l
     }
-    val tmp = graft.sources.TempDirs.create("graft_stream_sentinel_")
+    val tmp = TempDirs.create("graft_stream_sentinel_")
     spark.createDataFrame(rows, schema)
       .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    val part = partFiles(tmp).headOption
       .getOrElse(sys.error(s"no part file written under $tmp"))
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(streamDir, fileName))
+    Files.copy(part.toPath, Paths.get(streamDir, fileName))
   }
+
+  /** Set `key` to `value` for the duration of `body`, then restore the
+    * previous setting — the previous value, or unset if it was not set —
+    * however `body` ends. */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Watermark flush for [[drain]]: after the first drain, one sentinel
+    * file of `eventTypes` rows per entry of `hours` (that many hours past
+    * the max ts of the events of `dataset`) is dropped into `feed` and
+    * drained on its own. */
+  private final case class Flush(dataset: String, feed: Feed,
+      eventTypes: Seq[String] = Seq("flush"), hours: Seq[Long] = Seq(24L))
+
+  /** Drive `q` to completion and always stop it: process everything
+    * available, then write each flush sentinel and process again. The
+    * events' max ts, which places the sentinels, is read once. */
+  private def drain(spark: SparkSession, q: StreamingQuery, flush: Option[Flush] = None): Unit =
+    try {
+      q.processAllAvailable()
+      flush.foreach { f =>
+        val maxMs = Tables.events(spark, f.dataset)
+          .agg(max(col("ts"))).head().getTimestamp(0).getTime
+        f.hours.foreach { h =>
+          writeSentinelNamed(spark, f.feed.dir, f.feed.schema, maxMs + h * 3600 * 1000,
+            s"zz_sentinel_${h}h.parquet", f.eventTypes)
+          q.processAllAvailable()
+        }
+      }
+    } finally q.stop()
+
+  /** Start `plan` into a memory sink under a fresh `<tag>_<runId>` name in
+    * output mode `mode`, drain it (with `flush`, if any) and return the
+    * sink table. With `rocksDb` the RocksDB state store provider
+    * (transformWithState requires it) is scoped to the plan's
+    * construction and start: a query binds its provider at start. */
+  private def memorySink(spark: SparkSession, tag: String, mode: String,
+      rocksDb: Boolean = false, flush: Option[Flush] = None)(plan: => Dataset[_]): DataFrame = {
+    val name = s"${tag}_${runId.incrementAndGet()}"
+    def start(): StreamingQuery =
+      plan.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    drain(spark,
+      if (rocksDb) withConf(spark, StateStoreProviderKey, RocksDbProvider)(start()) else start(),
+      flush)
+    spark.table(name)
+  }
+
+  /** Start `w` with its checkpoint in a fresh temp dir under `ckPrefix`. */
+  private def checkpointed(w: DataStreamWriter[_], ckPrefix: String): StreamingQuery =
+    w.option("checkpointLocation", TempDirs.create(ckPrefix)).start()
+
+  /** Run `body` on every micro-batch of `source` through a checkpointed
+    * `foreachBatch` (output mode `mode`), and drain it. */
+  private def foreachBatch(source: DataFrame, ckPrefix: String, mode: String = "append")
+      (body: (DataFrame, Long) => Unit): Unit =
+    drain(source.sparkSession,
+      checkpointed(source.writeStream.outputMode(mode).foreachBatch(body), ckPrefix))
+
+  /** Final per-user state of a latest-per-key update stream: the
+    * emission with the highest cumulative count (n_events grows
+    * monotonically), selected with an aggregate — never trusting batch
+    * boundaries, which the file source doesn't guarantee. */
+  private def latestPerKey(updates: DataFrame): DataFrame =
+    updates.groupBy("user_id")
+      .agg(max_by(
+        struct(col("last_us"), col("last_event_id"), col("last_type"), col("n_events")),
+        struct(col("n_events"), col("last_us"), col("last_event_id"))).as("m"))
+      .select(col("user_id"), col("m.last_us").as("last_us"),
+        col("m.last_event_id").as("last_event_id"),
+        col("m.last_type").as("last_type"), col("m.n_events").as("n_events"))
+      .orderBy("user_id")
+
+  /** Closed sessions of a sessionizer sink: the sentinel's own session
+    * (negative user id) dropped; sessions have no stable id in append
+    * output, so order by the full value tuple to make the oracle compare
+    * row-order deterministic. */
+  private def closedSessions(sink: DataFrame): DataFrame =
+    sink.filter(col("user_id") >= 0)
+      .select("user_id", "n_events", "duration_s")
+      .orderBy("user_id", "n_events", "duration_s")
 
   /** Streaming hourly windowed counts, driven to completion in one batch.
     * Complete mode: every window is emitted regardless of the watermark,
     * so the result is the batch answer. */
   def streamHourlyEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val events = fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val name = s"graft_stream_hourly_${runId.incrementAndGet()}"
-    val q = StreamingOps.hourlyCounts(events)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("hour")
+    val feed = stageEvents(spark, dir)
+    memorySink(spark, "graft_stream_hourly", "complete")(
+      StreamingOps.hourlyCounts(events(spark, feed))).orderBy("hour")
   }
 
   /** Streaming hourly aggregation through a real parquet FILE SINK with a
@@ -161,22 +404,13 @@ object StreamingBridge {
     * is final; the sentinel's own window stays open and is never
     * written. */
   def streamFileSinkEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val outDir = graft.sources.TempDirs.create("graft_stream_sink_out_")
-    val ckDir = graft.sources.TempDirs.create("graft_stream_sink_ck_")
-    val events = fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val q = StreamingOps.hourlyCounts(events)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckDir)
-      .format("parquet").option("path", outDir)
-      .start()
-    try {
-      q.processAllAvailable()
-      val maxMs = Tables.events(spark, dir)
-        .agg(max(col("ts"))).head().getTimestamp(0).getTime
-      writeSentinel(spark, streamDir, schema, maxMs + 24L * 3600 * 1000)
-      q.processAllAvailable()
-    } finally q.stop()
+    val feed = stageEvents(spark, dir)
+    val outDir = TempDirs.create("graft_stream_sink_out_")
+    drain(spark,
+      checkpointed(StreamingOps.hourlyCounts(events(spark, feed))
+        .writeStream.outputMode("append")
+        .format("parquet").option("path", outDir), "graft_stream_sink_ck_"),
+      Some(Flush(dir, feed)))
     spark.read.parquet(outDir).orderBy("hour")
   }
 
@@ -188,19 +422,13 @@ object StreamingBridge {
     * Complete mode: the final emission is the batch answer iff every
     * intermediate state handoff was correct. */
   def streamIncrementalEq(spark: SparkSession, dir: String): DataFrame = {
-    val staged = graft.sources.TempDirs.create("graft_stream_incr_")
+    val staged = TempDirs.create("graft_stream_incr_")
     Tables.events(spark, dir)
       .select(eventCols.map(col): _*)
       .repartition(4)
       .write.mode("overwrite").parquet(staged)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_stream_incr_${runId.incrementAndGet()}"
-    val q = StreamingOps.hourlyCounts(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staged))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("hour")
+    memorySink(spark, "graft_stream_incr", "complete")(
+      StreamingOps.hourlyCounts(replay(spark, staged))).orderBy("hour")
   }
 
   /** Streaming dead-letter quarantine — json_quarantine's streaming
@@ -217,7 +445,7 @@ object StreamingBridge {
     * files read one per trigger, so routing also survives real
     * micro-batch boundaries. */
   def streamQuarantineEq(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.TempDirs.create("graft_stream_quar_")
+    val root = TempDirs.create("graft_stream_quar_")
     Tables.documents(spark, dir)
       .select(when(col("doc_id") % 7 === 0,
           concat(lit("{broken!"), col("lang")))
@@ -226,23 +454,19 @@ object StreamingBridge {
       .repartition(3)
       .write.mode("overwrite").text(s"$root/feed")
     val parsed = spark.readStream
-      .option("maxFilesPerTrigger", 1).text(s"$root/feed")
+      .options(OneFilePerTrigger).text(s"$root/feed")
       .select(col("value"),
         from_json(col("value"),
           StructType.fromDDL("doc_id LONG, lang STRING")).as("j"))
-    val q = parsed.writeStream
-      .option("checkpointLocation", s"$root/ck")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        // Route on one row-local predicate, inverted for the good side —
-        // two map-only writes, no set-op shuffle inside the hot loop.
-        val isBad = col("j").isNull || col("j.doc_id").isNull
-        batch.filter(isBad).select("value")
-          .write.mode("append").text(s"$root/dead")
-        batch.filter(!isBad).select("j.doc_id", "j.lang")
-          .write.mode("append").parquet(s"$root/good")
-        ()
-      }.start()
-    try q.processAllAvailable() finally q.stop()
+    foreachBatch(parsed, "graft_stream_quar_ck_") { (batch, _) =>
+      // Route on one row-local predicate, inverted for the good side —
+      // two map-only writes, no set-op shuffle inside the hot loop.
+      val isBad = col("j").isNull || col("j.doc_id").isNull
+      batch.filter(isBad).select("value")
+        .write.mode("append").text(s"$root/dead")
+      batch.filter(!isBad).select("j.doc_id", "j.lang")
+        .write.mode("append").parquet(s"$root/good")
+    }
     val good = spark.read.parquet(s"$root/good")
       .groupBy("lang")
       .agg(count(lit(1)).as("n"), lit(0L).as("n_quarantined"),
@@ -262,18 +486,12 @@ object StreamingBridge {
     * delivery of batches yields exactly-once RESULTS without a commit
     * log. Checkpointed like any production stream. */
   def streamForeachBatchEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val outDir = graft.sources.TempDirs.create("graft_stream_feb_out_")
-    val ckDir = graft.sources.TempDirs.create("graft_stream_feb_ck_")
-    val events = fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val q = StreamingOps.hourlyCounts(events)
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val feed = stageEvents(spark, dir)
+    val outDir = TempDirs.create("graft_stream_feb_out_")
+    foreachBatch(StreamingOps.hourlyCounts(events(spark, feed)),
+        "graft_stream_feb_ck_", "complete") { (batch, _) =>
+      batch.write.mode("overwrite").parquet(outDir)
+    }
     spark.read.parquet(outDir).orderBy("hour")
   }
 
@@ -284,23 +502,10 @@ object StreamingBridge {
     * user). The sentinel's own session is filtered out by its negative
     * user id. */
   def streamSessionizeEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val name = s"graft_stream_sessions_${runId.incrementAndGet()}"
-    val q = StreamingOps.sessionize(typedEventStream(spark, streamDir, schema))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try {
-      q.processAllAvailable()
-      val maxMs = Tables.events(spark, dir)
-        .agg(max(col("ts"))).head().getTimestamp(0).getTime
-      writeSentinel(spark, streamDir, schema, maxMs + 24L * 3600 * 1000)
-      q.processAllAvailable()
-    } finally q.stop()
-    // sessions have no stable id in append output: order by the full value
-    // tuple so the oracle compare is row-order deterministic
-    spark.table(name).filter(col("user_id") >= 0)
-      .select("user_id", "n_events", "duration_s")
-      .orderBy("user_id", "n_events", "duration_s")
+    val feed = stageEvents(spark, dir)
+    closedSessions(memorySink(spark, "graft_stream_sessions", "append",
+        flush = Some(Flush(dir, feed)))(
+      StreamingOps.sessionize(typedEvents(spark, feed))))
   }
 
   /** Streaming sessionization via Spark's NATIVE session_window
@@ -314,31 +519,19 @@ object StreamingBridge {
     * sessions and the emitted set is final. duration = window end −
     * start − gap exactly (session_window end = last event + gap). */
   def streamSessionWindowEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
+    val feed = stageEvents(spark, dir)
     val gapUs = 30L * 60 * 1000000
-    val name = s"graft_stream_sesswin_${runId.incrementAndGet()}"
-    val events = fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-      .withWatermark("ts", "1 hour")
-    val q = events
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("n_events"),
-        unix_micros(col("session_window.start")).as("start_us"),
-        unix_micros(col("session_window.end")).as("end_us"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try {
-      q.processAllAvailable()
-      val maxMs = Tables.events(spark, dir)
-        .agg(max(col("ts"))).head().getTimestamp(0).getTime
-      writeSentinel(spark, streamDir, schema, maxMs + 24L * 3600 * 1000)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).filter(col("user_id") >= 0)
-      .select(col("user_id"), col("n_events"),
-        floor((col("end_us") - col("start_us") - gapUs) / lit(1000000L))
-          .cast("long").as("duration_s"))
-      .orderBy("user_id", "n_events", "duration_s")
+    val sink = memorySink(spark, "graft_stream_sesswin", "append",
+        flush = Some(Flush(dir, feed))) {
+      events(spark, feed).withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("n_events"),
+          unix_micros(col("session_window.start")).as("start_us"),
+          unix_micros(col("session_window.end")).as("end_us"))
+    }
+    closedSessions(sink.withColumn("duration_s",
+      floor((col("end_us") - col("start_us") - gapUs) / lit(1000000L)).cast("long")))
   }
 
   /** Sessionization via transformWithState with explicit event-time
@@ -348,23 +541,10 @@ object StreamingBridge {
     * on the same sessions as flatMapGroupsWithState and the two batch
     * sessionizers. */
   def streamSessionizeTwsEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val name = s"graft_stream_sess_tws_${runId.incrementAndGet()}"
-    val q = withRocksDb(spark) {
-      StreamingOps.sessionizeTws(typedEventStream(spark, streamDir, schema))
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-    }
-    try {
-      q.processAllAvailable()
-      val maxMs = Tables.events(spark, dir)
-        .agg(max(col("ts"))).head().getTimestamp(0).getTime
-      writeSentinel(spark, streamDir, schema, maxMs + 24L * 3600 * 1000)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).filter(col("user_id") >= 0)
-      .select("user_id", "n_events", "duration_s")
-      .orderBy("user_id", "n_events", "duration_s")
+    val feed = stageEvents(spark, dir)
+    closedSessions(memorySink(spark, "graft_stream_sess_tws", "append",
+        rocksDb = true, flush = Some(Flush(dir, feed)))(
+      StreamingOps.sessionizeTws(typedEvents(spark, feed))))
   }
 
   /** Streaming dedup across micro-batch boundaries: time-ordered 4-file
@@ -374,52 +554,11 @@ object StreamingBridge {
     * suppress keys first seen in EARLIER batches. Key-set equivalence
     * with batch DISTINCT, as in streamDedupEq. */
   def streamDedupIncrementalEq(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageTimeOrdered(spark, dir, 4)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_dedup_incr_${runId.incrementAndGet()}"
-    val q = StreamingOps.dedupStream(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staged))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).select("user_id", "event_type")
-      .orderBy("user_id", "event_type")
+    val feed = timeOrdered(spark, dir)
+    memorySink(spark, "graft_dedup_incr", "append")(
+      StreamingOps.dedupStream(events(spark, feed)))
+      .select("user_id", "event_type").orderBy("user_id", "event_type")
   }
-
-  /** Stage the events table as `n` time-range parquet files with
-    * ascending mtimes, so the file source (ordered by timestamp, then
-    * path) replays them chronologically — shared by the incremental
-    * dedup/sessionize bridges and the whole transformWithState family.
-    * The range keys are (ts, event_id) — the same total order the batch
-    * twins and the per-batch sorts inside the stateful processors use —
-    * so equal-timestamp events can never straddle a file (= micro-batch)
-    * boundary in an order that differs from the batch (ts, event_id)
-    * replay; without the tie-break, last-touch/prev state in the
-    * tie-sensitive attribution twin could flip on a boundary split.
-    * The ranged write (a Spark job over the full events table) runs ONCE
-    * per (dir, n) per process; every query gets a private hard-link view
-    * so its sentinels stay its own. */
-  private[graft] def stageTimeOrdered(spark: SparkSession, dir: String, n: Int): String =
-    linkStaged(timeOrderedStageMemo.computeIfAbsent(
-        (graft.sources.DatasetId.key(s"$dir/events.parquet"), n), { _ =>
-      val tmp = graft.sources.TempDirs.create("graft_incr_build_")
-      Tables.events(spark, dir)
-        .select(eventCols.map(col): _*)
-        .repartitionByRange(n, col("ts"), col("event_id"))
-        .write.mode("overwrite").parquet(tmp)
-      val staged = graft.sources.TempDirs.create("graft_incr_")
-      val parts = new java.io.File(tmp).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      val base = System.currentTimeMillis() - 1000L * parts.length
-      parts.zipWithIndex.foreach { case (f, i) =>
-        val dst = java.nio.file.Paths.get(staged, f"events_$i%05d.parquet")
-        java.nio.file.Files.copy(f.toPath, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-      }
-      staged
-    }))
 
   /** Sessionization across REAL micro-batch boundaries: events staged as
     * 4 time-range files (range partition i lands in part-0000i, so name
@@ -432,25 +571,10 @@ object StreamingBridge {
     * no cross-batch event is ever late; the sentinel flushes the last
     * open sessions. */
   def streamSessionizeIncrementalEq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val staged = stageTimeOrdered(spark, dir, 4)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_sess_incr_${runId.incrementAndGet()}"
-    val q = StreamingOps.sessionize(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(staged).as[Event])
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try {
-      q.processAllAvailable()
-      val maxMs = Tables.events(spark, dir)
-        .agg(max(col("ts"))).head().getTimestamp(0).getTime
-      writeSentinel(spark, staged, schema, maxMs + 24L * 3600 * 1000)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).filter(col("user_id") >= 0)
-      .select("user_id", "n_events", "duration_s")
-      .orderBy("user_id", "n_events", "duration_s")
+    val feed = timeOrdered(spark, dir)
+    closedSessions(memorySink(spark, "graft_sess_incr", "append",
+        flush = Some(Flush(dir, feed)))(
+      StreamingOps.sessionize(typedEvents(spark, feed))))
   }
 
   /** Streaming first/last-touch attribution across REAL micro-batch
@@ -463,19 +587,9 @@ object StreamingBridge {
     * complete when the files are. Output must equal the batch
     * session_attribution window query row for row — same oracle. */
   def streamAttributionEq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val staged = stageTimeOrdered(spark, dir, 4)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_attrib_${runId.incrementAndGet()}"
-    val q = withRocksDb(spark) {
-      StreamingOps.attributionTws(
-        fixTs(spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(staged), schema).select(eventCols.map(col): _*).as[Event])
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-    }
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    val feed = timeOrdered(spark, dir)
+    memorySink(spark, "graft_attrib", "update", rocksDb = true)(
+      StreamingOps.attributionTws(typedEvents(spark, feed)))
       .orderBy("user_id", "session_id", "purchase_id")
   }
 
@@ -492,19 +606,14 @@ object StreamingBridge {
     * one per trigger, so state genuinely evicts mid-stream while the
     * suppression guarantee holds — output equals batch DISTINCT. */
   def streamDedupWatermarkEq(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageTimeOrdered(spark, dir, 4)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_dedup_wm_${runId.incrementAndGet()}"
-    val q = Tables.normalizeTs(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(staged))
-      .withColumn("hour", date_trunc("hour", col("ts")))
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("user_id", "event_type", "hour")
-      .select("user_id", "event_type", "hour")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("user_id", "event_type", "hour")
+    val feed = timeOrdered(spark, dir)
+    memorySink(spark, "graft_dedup_wm", "append") {
+      events(spark, feed)
+        .withColumn("hour", date_trunc("hour", col("ts")))
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark("user_id", "event_type", "hour")
+        .select("user_id", "event_type", "hour")
+    }.orderBy("user_id", "event_type", "hour")
   }
 
   /** Streaming EWMA of hourly counts — the sequential-state twin of
@@ -515,25 +624,11 @@ object StreamingBridge {
     * timers flush the tails. The sentinel's own 'flush' key is dropped
     * from the result. Same oracle as batch ewma_hourly. */
   def streamEwmaEq(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageTimeOrdered(spark, dir, 4)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_stream_ewma_${runId.incrementAndGet()}"
-    val q = withRocksDb(spark) {
-      import spark.implicits._
-      StreamingOps.ewmaHourlyTws(
-          Tables.normalizeTs(spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(staged)).as[Event])
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-    }
-    try {
-      q.processAllAvailable()
-      val maxMs = Tables.events(spark, dir)
-        .agg(max(col("ts"))).head().getTimestamp(0).getTime
-      writeSentinel(spark, staged, schema, maxMs + 24L * 3600 * 1000)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).filter(col("event_type") =!= "flush")
+    val feed = timeOrdered(spark, dir)
+    memorySink(spark, "graft_stream_ewma", "append", rocksDb = true,
+        flush = Some(Flush(dir, feed)))(
+      StreamingOps.ewmaHourlyTws(typedEvents(spark, feed)))
+      .filter(col("event_type") =!= "flush")
       .orderBy("event_type", "hour_ts")
   }
 
@@ -543,32 +638,24 @@ object StreamingBridge {
     * the retained KEY SET — exactly one row per distinct key, matching
     * batch DISTINCT — not on the winning row's payload. */
   def streamDedupEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val name = s"graft_stream_dedup_${runId.incrementAndGet()}"
-    val q = StreamingOps.dedupStream(typedEventStream(spark, streamDir, schema).toDF())
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name).select("user_id", "event_type")
-      .orderBy("user_id", "event_type")
+    val feed = stageEvents(spark, dir)
+    memorySink(spark, "graft_stream_dedup", "append")(
+      StreamingOps.dedupStream(events(spark, feed)))
+      .select("user_id", "event_type").orderBy("user_id", "event_type")
   }
 
   /** Stream-stream inner join driven to completion: views and purchases
     * are two filtered readers over the SAME staged file stream (two
     * independent file sources in one query — the production shape for a
     * topic read twice). Inner matches emit in the batch where both rows
-    * are present, so one processAllAvailable suffices; no sentinel. */
+    * are present, so one drain suffices; no sentinel. */
   def streamJoinEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
+    val feed = stageEvents(spark, dir)
     def side(eventType: String): DataFrame =
-      fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-        .filter(col("event_type") === eventType)
-    val name = s"graft_stream_join_${runId.incrementAndGet()}"
-    val q = StreamingOps.viewPurchaseJoin(side("view"), side("purchase"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name).orderBy("user_id", "view_id", "purchase_id")
+      events(spark, feed).filter(col("event_type") === eventType)
+    memorySink(spark, "graft_stream_join", "append")(
+      StreamingOps.viewPurchaseJoin(side("view"), side("purchase")))
+      .orderBy("user_id", "view_id", "purchase_id")
   }
 
   /** Stream-stream LEFT OUTER interval join driven to completion:
@@ -585,69 +672,38 @@ object StreamingBridge {
     * Two sentinel batches, because outer-join null emission lags state
     * eviction by one micro-batch. */
   def streamLeftJoinEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val events = fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-      .withWatermark("ts", "1 hour")
+    val feed = stageEvents(spark, dir)
+    val evs = events(spark, feed).withWatermark("ts", "1 hour")
     def side(eventType: String): DataFrame =
-      events.filter(col("event_type") === eventType)
-    val name = s"graft_stream_ljoin_${runId.incrementAndGet()}"
-    val q = StreamingOps.viewPurchaseLeftJoin(side("view"), side("purchase"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try {
-      q.processAllAvailable()
-      val maxMs = Tables.events(spark, dir)
-        .agg(max(col("ts"))).head().getTimestamp(0).getTime
-      writeSentinelNamed(spark, streamDir, schema, maxMs + 24L * 3600 * 1000,
-        "zz_sentinel.parquet", Seq("view", "purchase"))
-      q.processAllAvailable()
-      writeSentinelNamed(spark, streamDir, schema, maxMs + 48L * 3600 * 1000,
-        "zz_sentinel2.parquet", Seq("view", "purchase"))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(name).filter(col("user_id") >= 0)
+      evs.filter(col("event_type") === eventType)
+    memorySink(spark, "graft_stream_ljoin", "append",
+        flush = Some(Flush(dir, feed, Seq("view", "purchase"), Seq(24L, 48L))))(
+      StreamingOps.viewPurchaseLeftJoin(side("view"), side("purchase")))
+      .filter(col("user_id") >= 0)
       .orderBy("user_id", "view_id", "purchase_id")
   }
 
   /** Stream-static broadcast enrichment driven to completion: every
     * event joins its nation dimension row map-side (stateless — no
     * watermark, no state store), the bronze→silver enrichment shape.
-    * One processAllAvailable suffices; nothing is held back. */
+    * One drain suffices; nothing is held back. */
   def streamEnrichEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val events = fixTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val name = s"graft_stream_enrich_${runId.incrementAndGet()}"
-    val q = StreamingOps.enrichWithDim(events,
-        Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name")),
-        "n_nationkey")
-      .select(col("event_id"), col("user_id"), col("n_name"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).orderBy("event_id")
+    val feed = stageEvents(spark, dir)
+    memorySink(spark, "graft_stream_enrich", "append") {
+      StreamingOps.enrichWithDim(events(spark, feed),
+          Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name")),
+          "n_nationkey")
+        .select(col("event_id"), col("user_id"), col("n_name"))
+    }.orderBy("event_id")
   }
 
   /** mapGroupsWithState latest-per-key driven to completion. The memory
     * sink accumulates one update row per key per micro-batch; the final
-    * state is the row with the highest cumulative count (n_events grows
-    * monotonically), selected with an aggregate — never trusting batch
-    * boundaries, which the file source doesn't guarantee. */
+    * state is selected by [[latestPerKey]]. */
   def streamLatestEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val name = s"graft_stream_latest_${runId.incrementAndGet()}"
-    val q = StreamingOps.latestPerUser(typedEventStream(spark, streamDir, schema))
-      .writeStream.outputMode("update")
-      .format("memory").queryName(name).start()
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name)
-      .groupBy("user_id")
-      .agg(max_by(
-        struct(col("last_us"), col("last_event_id"), col("last_type"), col("n_events")),
-        struct(col("n_events"), col("last_us"), col("last_event_id"))).as("m"))
-      .select(col("user_id"), col("m.last_us").as("last_us"),
-        col("m.last_event_id").as("last_event_id"),
-        col("m.last_type").as("last_type"), col("m.n_events").as("n_events"))
-      .orderBy("user_id")
+    val feed = stageEvents(spark, dir)
+    latestPerKey(memorySink(spark, "graft_stream_latest", "update")(
+      StreamingOps.latestPerUser(typedEvents(spark, feed))))
   }
 
   /** latest-per-key through the MODERN transformWithState API (Spark 4's
@@ -657,39 +713,10 @@ object StreamingBridge {
     * requires the RocksDB state store; the provider is scoped to this
     * query (set before start, restored after — queries bind their
     * provider at start). */
-  /** Start a streaming query with the RocksDB state store provider scoped
-    * to it (transformWithState requires RocksDB; a query binds its
-    * provider at start, so set-before/restore-after is exact scoping). */
-  private def withRocksDb[T](spark: SparkSession)(start: => T): T = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try start
-    finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   def streamLatestTwsEq(spark: SparkSession, dir: String): DataFrame = {
-    val (streamDir, schema) = stageEvents(spark, dir)
-    val name = s"graft_stream_latest_tws_${runId.incrementAndGet()}"
-    val q = withRocksDb(spark) {
-      StreamingOps.latestPerUserTws(typedEventStream(spark, streamDir, schema))
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-    }
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name)
-      .groupBy("user_id")
-      .agg(max_by(
-        struct(col("last_us"), col("last_event_id"), col("last_type"), col("n_events")),
-        struct(col("n_events"), col("last_us"), col("last_event_id"))).as("m"))
-      .select(col("user_id"), col("m.last_us").as("last_us"),
-        col("m.last_event_id").as("last_event_id"),
-        col("m.last_type").as("last_type"), col("m.n_events").as("n_events"))
-      .orderBy("user_id")
+    val feed = stageEvents(spark, dir)
+    latestPerKey(memorySink(spark, "graft_stream_latest_tws", "update", rocksDb = true)(
+      StreamingOps.latestPerUserTws(typedEvents(spark, feed))))
   }
 
   /** Warm-started latest-per-key: the backfill→streaming migration
@@ -707,10 +734,9 @@ object StreamingBridge {
     val staged = stageTimeOrdered(spark, dir, 4)
     val parts = new java.io.File(staged).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val liveDir = graft.sources.TempDirs.create("graft_warm_live_")
+    val liveDir = TempDirs.create("graft_warm_live_")
     parts.drop(2).foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        java.nio.file.Paths.get(liveDir, f.getName),
+      Files.copy(f.toPath, Paths.get(liveDir, f.getName),
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
     }
     val backfill = Tables.normalizeTs(
@@ -725,28 +751,10 @@ object StreamingBridge {
         col("m.event_id").as("last_event_id"),
         col("m.event_type").as("last_type"), col("n"))
     val init = backfill.as[StreamingOps.LatestInit]
-    val schema = spark.read.parquet(liveDir).schema
-    val name = s"graft_warm_latest_${runId.incrementAndGet()}"
-    val q = withRocksDb(spark) {
-      StreamingOps.latestPerUserWarmStart(
-          Tables.normalizeTs(spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(liveDir))
-            .select(eventCols.map(col): _*).as[StreamingOps.Event],
-          init)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-    }
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name)
-      .unionByName(backfill.withColumnRenamed("n", "n_events"))
-      .groupBy("user_id")
-      .agg(max_by(
-        struct(col("last_us"), col("last_event_id"), col("last_type"), col("n_events")),
-        struct(col("n_events"), col("last_us"), col("last_event_id"))).as("m"))
-      .select(col("user_id"), col("m.last_us").as("last_us"),
-        col("m.last_event_id").as("last_event_id"),
-        col("m.last_type").as("last_type"), col("m.n_events").as("n_events"))
-      .orderBy("user_id")
+    val live = Feed(liveDir, spark.read.parquet(liveDir).schema, OneFilePerTrigger)
+    latestPerKey(memorySink(spark, "graft_warm_latest", "update", rocksDb = true)(
+        StreamingOps.latestPerUserWarmStart(typedEvents(spark, live), init))
+      .unionByName(backfill.withColumnRenamed("n", "n_events")))
   }
 
   /** Per-user event-type histogram through MapState, replayed as 4
@@ -754,20 +762,9 @@ object StreamingBridge {
     * counts only grow, so the final histogram is the per-(user, type)
     * max over the update stream. Oracle: plain batch GROUP BY. */
   def streamTypeHistEq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val staged = stageTimeOrdered(spark, dir, 4)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_type_hist_${runId.incrementAndGet()}"
-    val q = withRocksDb(spark) {
-      StreamingOps.typeHistPerUser(
-          Tables.normalizeTs(spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(staged))
-            .select(eventCols.map(col): _*).as[StreamingOps.Event])
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-    }
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name)
+    val feed = timeOrdered(spark, dir)
+    memorySink(spark, "graft_type_hist", "update", rocksDb = true)(
+      StreamingOps.typeHistPerUser(typedEvents(spark, feed)))
       .groupBy("user_id", "event_type").agg(max("n").as("n"))
       .orderBy("user_id", "event_type")
   }
@@ -776,20 +773,9 @@ object StreamingBridge {
     * micro-batches; the serving row per key is the emission with the
     * highest n_seen (counts only grow). Oracle: batch top-3 window. */
   def streamRecent3Eq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val staged = stageTimeOrdered(spark, dir, 4)
-    val schema = spark.read.parquet(staged).schema
-    val name = s"graft_recent3_${runId.incrementAndGet()}"
-    val q = withRocksDb(spark) {
-      StreamingOps.recent3PerUser(
-          Tables.normalizeTs(spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(staged))
-            .select(eventCols.map(col): _*).as[StreamingOps.Event])
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-    }
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name)
+    val feed = timeOrdered(spark, dir)
+    memorySink(spark, "graft_recent3", "update", rocksDb = true)(
+      StreamingOps.recent3PerUser(typedEvents(spark, feed)))
       .groupBy("user_id")
       .agg(max_by(struct(col("n_seen"), col("e1"), col("e2"), col("e3")),
         col("n_seen")).as("m"))
@@ -820,42 +806,22 @@ object StreamingBridge {
     val (base, target) = DataOps.demoSnapshots(spark, dir)
     val diff = DataOps.diffSnapshots(base, target, "o_orderkey", "v")
       .select(col("o_orderkey"), col("change"), col("new_value"))
-    // stage the feed as 3 key-disjoint files with ascending mtimes so the
-    // file source replays them as 3 separate micro-batches
-    val staged = graft.sources.TempDirs.create("graft_cdc_feed_")
-    val tsBase = System.currentTimeMillis() - 10000L
-    (0 until 3).foreach { i =>
-      val tmp = graft.sources.TempDirs.create(s"graft_cdc_build_${i}_")
-      diff.filter(pmod(col("o_orderkey"), lit(3)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file under $tmp"))
-      val dst = java.nio.file.Paths.get(staged, f"cdc_$i%05d.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tsBase + i * 1000L))
-    }
-    val stateRoot = graft.sources.TempDirs.create("graft_cdc_state_")
+    // the feed as 3 key-disjoint files (pmod(key, 3)) replayed as 3
+    // separate micro-batches
+    val staged = stageSplit(diff, pmod(col("o_orderkey"), lit(3)), 0 until 3,
+      "graft_cdc_feed_")
+    val stateRoot = TempDirs.create("graft_cdc_state_")
     base.write.mode("overwrite").parquet(s"$stateRoot/v0")
-    val ck = graft.sources.TempDirs.create("graft_cdc_ck_")
-    val feedSchema = spark.read.parquet(staged).schema
-    val q = spark.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        val cur = s.read.parquet(s"$stateRoot/v$id")
-        val touched = batch.select("o_orderkey").distinct()
-        val upserts = batch.filter(col("change").isin("insert", "update"))
-          .select(col("o_orderkey"), col("new_value").as("v"))
-        cur.join(broadcast(touched), Seq("o_orderkey"), "left_anti")
-          .unionByName(upserts)
-          .write.mode("overwrite").parquet(s"$stateRoot/v${id + 1}")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    foreachBatch(replay(spark, staged), "graft_cdc_ck_") { (batch, id) =>
+      val s = batch.sparkSession
+      val cur = s.read.parquet(s"$stateRoot/v$id")
+      val touched = batch.select("o_orderkey").distinct()
+      val upserts = batch.filter(col("change").isin("insert", "update"))
+        .select(col("o_orderkey"), col("new_value").as("v"))
+      cur.join(broadcast(touched), Seq("o_orderkey"), "left_anti")
+        .unionByName(upserts)
+        .write.mode("overwrite").parquet(s"$stateRoot/v${id + 1}")
+    }
     val last = new java.io.File(stateRoot).listFiles()
       .map(_.getName).filter(_.startsWith("v")).map(_.drop(1).toInt).max
     spark.read.parquet(s"$stateRoot/v$last").orderBy("o_orderkey")
@@ -870,36 +836,26 @@ object StreamingBridge {
   private def ivfIngestRoot(spark: SparkSession, dir: String): String =
     graft.sources.Stages(spark, "streaming/ivf_ingest", dir) {
       import graft.operators.Similarity
-      val root = graft.sources.TempDirs.create("graft_stream_ivf_")
+      val root = TempDirs.create("graft_stream_ivf_")
       val isNew = col("vec_id") % 10 === 0
       Similarity.ivfBuildIndexFrom(
         Similarity.emb(spark, dir).filter(!isNew), spark, root)
-      // stage the delta as 3 id-ranged files with ascending mtimes →
-      // 3 real micro-batches at maxFilesPerTrigger=1
-      val deltaDir = stageRangedFiles(
-        Similarity.emb(spark, dir).filter(isNew), 3, "vec_id",
-        "graft_stream_ivf_delta_")
-      val schema = spark.read.parquet(deltaDir).schema
+      // the delta as 3 id-ranged files → 3 real micro-batches
+      val deltaDir = stageRangedFiles(Similarity.emb(spark, dir).filter(isNew),
+        3, "graft_stream_ivf_delta_", "vec_id")
       val cents = spark.read.parquet(s"$root/centroids")
-      val ck = graft.sources.TempDirs.create("graft_stream_ivf_ck_")
-      val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(deltaDir)
-        .writeStream.option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.sources.ArtifactRoots.boundedWrite(
-              Similarity.assignCells(batch, cents))
-            .mode("append").partitionBy("cell").parquet(s"$root/lists")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      foreachBatch(replay(spark, deltaDir), "graft_stream_ivf_ck_") { (batch, _) =>
+        graft.sources.ArtifactRoots.boundedWrite(
+            Similarity.assignCells(batch, cents))
+          .mode("append").partitionBy("cell").parquet(s"$root/lists")
+      }
       root
     }
 
   /** Public warm-up for Bench: force the one-time resident build + stream
     * ingest so the chain is billed separately from the read-back cost. */
   def streamIvfIngestWarm(spark: SparkSession, dir: String): String =
-    withStateParts(spark)(ivfIngestRoot(spark, dir))
+    scoped(ivfIngestRoot)(spark, dir)
 
   /** Streaming ANN ingest — the streaming twin of batch ivf_incremental,
     * closing the last batch/streaming pairing gap in the similarity
@@ -922,89 +878,6 @@ object StreamingBridge {
       .orderBy("vec_id")
   }
 
-  /** Stage a projection of the documents table as `n` doc_id-ranged
-    * parquet files with ascending mtimes (one file per micro-batch at
-    * maxFilesPerTrigger=1) — the document-corpus counterpart of
-    * stageTimeOrdered, shared by the artifact-serving twins (BPE encode,
-    * quality gate). Memoized via [[stagedFor]]: fingerprint-checked per
-    * (path, stage tag), so an in-process regeneration of the dataset is
-    * a cache miss here exactly as it is for the artifact roots in
-    * graft.sources.Stages (bpe, gatespec) — a path-only memo would replay the
-    * stale staged corpus while the freshly fingerprinted artifacts
-    * retrain, silently diverging batch from stream. Repeated
-    * bench/oracle drives on unchanged data still reuse the staged files
-    * instead of re-paying the corpus write + copies; superseded stages
-    * are deleted on rebuild. No sentinels are ever written into these dirs, so
-    * queries can share the staged dir directly (each brings its own
-    * checkpoint) — no private link views needed. Per-doc outputs are
-    * order-independent, so no tie-break discipline is needed either; the
-    * range split just guarantees real multi-batch replay. */
-  private val docsStageMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, String)]
-
-  /** Staged-dir memoization with SUPERSESSION — the graft.sources.Stages
-    * discipline applied to process-level on-disk stages: keyed by stable identity (source path +
-    * stage tag), the VALUE carries the staging-time dataset fingerprint.
-    * A hit under a changed fingerprint (dataset regenerated in place) is
-    * a miss that also DELETES the superseded staged dir, so a
-    * process-lifetime embedder can't accumulate one dead staged corpus /
-    * panel per regeneration (the r16 shape keyed by DatasetId.key —
-    * fingerprint inside the key — which made stale entries unreachable
-    * but never evicted). Rebuild-under-race can leak one dir (the
-    * streaming rows run serially in verify/bench; a leaked dir is temp
-    * space, not correctness). If the serial-drive assumption ever
-    * relaxes, switch the check-then-act to compute/putIfAbsent and
-    * defer deletion of the superseded dir to process exit — an eager
-    * delete could yank a stage a still-running stream is reading. */
-  private[graft] def stagedFor(dir: String, tag: String)(build: => String): String = {
-    val fp = graft.sources.DatasetId.fingerprint(dir)
-    docsStageMemo.get((dir, tag)) match {
-      case Some((`fp`, staged)) => staged
-      case stale =>
-        stale.foreach { case (_, old) =>
-          try graft.sources.ArtifactRoots.deleteRecursively(
-            java.nio.file.Paths.get(old))
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        val staged = build
-        docsStageMemo.put((dir, tag), (fp, staged))
-        staged
-    }
-  }
-
-  /** THE file-staging primitive of every bridge: write `df` as `n`
-    * range-split parquet files with ascending mtimes under a fresh temp
-    * dir — one file per micro-batch at `maxFilesPerTrigger=1`. One
-    * implementation (part-file filter, 1 s mtime spacing, name-sorted
-    * order) shared by the corpus stages, the IVF ingest delta, and the
-    * chunk-retrieval query panel, so the batch-ordering semantics every
-    * `stream_*_eq` oracle depends on cannot silently fork per caller. */
-  private[streaming] def stageRangedFiles(df: DataFrame, n: Int,
-      rangeCol: String, prefix: String): String = {
-    val build = graft.sources.TempDirs.create(s"${prefix}build_")
-    df.repartitionByRange(n, col(rangeCol)).write.mode("overwrite").parquet(build)
-    val out = graft.sources.TempDirs.create(prefix)
-    val parts = new java.io.File(build).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    val tsBase = System.currentTimeMillis() - 1000L * parts.length
-    parts.zipWithIndex.foreach { case (f, i) =>
-      val dst = java.nio.file.Paths.get(out, f"batch_$i%05d.parquet")
-      java.nio.file.Files.copy(f.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(tsBase + i * 1000L))
-    }
-    out
-  }
-
-  private def stageDocsRanged(spark: SparkSession, dir: String, n: Int,
-      cols: Seq[String]): String =
-    stagedFor(dir, s"docs:$n:${cols.mkString(",")}") {
-      stageRangedFiles(
-        Tables.documents(spark, dir).select(cols.map(col): _*),
-        n, "doc_id", "graft_stream_docs_")
-    }
-
   /** Streaming BPE encode — the tokenizer's inference half run as a
     * stream, closing the last batch/streaming pairing gap in the text
     * family: the PERSISTED merge table (the parquet artifact
@@ -1021,19 +894,11 @@ object StreamingBridge {
     import graft.operators.TextAnalysis
     val merges = TextAnalysis.bpeMergeTable(spark, dir)
     val docsDir = stageDocsRanged(spark, dir, 3, Seq("doc_id", "text"))
-    val schema = spark.read.parquet(docsDir).schema
-    val outDir = graft.sources.TempDirs.create("graft_stream_bpe_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_bpe_ck_")
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TextAnalysis.bpeEncodeDocs(batch, merges)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val outDir = TempDirs.create("graft_stream_bpe_out_")
+    foreachBatch(replay(spark, docsDir), "graft_stream_bpe_ck_") { (batch, _) =>
+      TextAnalysis.bpeEncodeDocs(batch, merges)
+        .write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir).orderBy("doc_id")
   }
 
@@ -1064,28 +929,20 @@ object StreamingBridge {
     val roster = spark.read.parquet(s"$specRoot/roster")
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     val docsDir = stageDocsRanged(spark, dir, 3, Seq("doc_id", "lang", "text"))
-    val schema = spark.read.parquet(docsDir).schema
-    val outDir = graft.sources.TempDirs.create("graft_stream_qg_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_qg_ck_")
+    val outDir = TempDirs.create("graft_stream_qg_out_")
     // gate predicate as a pure codegen'd Column over spec literals: the
     // per-lang threshold folds into a CASE chain, the roster into an IN
     // list — no join, no lambda, map-only per batch
     val qtExpr = qtRows.foldLeft(lit(Double.MaxValue)) { case (acc, (l, t)) =>
       when(col("lang") === lit(l), lit(t)).otherwise(acc)
     }
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TextAnalysis.scoreDocsFrame(batch)
-          .select("doc_id", "lang", "quality")
-          .filter(col("quality") > qtExpr ||
-            col("doc_id").isInCollection(roster))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    foreachBatch(replay(spark, docsDir), "graft_stream_qg_ck_") { (batch, _) =>
+      TextAnalysis.scoreDocsFrame(batch)
+        .select("doc_id", "lang", "quality")
+        .filter(col("quality") > qtExpr ||
+          col("doc_id").isInCollection(roster))
+        .write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir).orderBy("doc_id")
   }
 
@@ -1115,19 +972,11 @@ object StreamingBridge {
     val lrByBucket = Array.ofDim[Long](lrRows.length)
     lrRows.foreach(r => lrByBucket(r.getLong(0).toInt) = r.getLong(1))
     val docsDir = stageDocsRanged(spark, dir, 3, Seq("doc_id", "lang", "text"))
-    val schema = spark.read.parquet(docsDir).schema
-    val outDir = graft.sources.TempDirs.create("graft_stream_dsir_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_dsir_ck_")
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Dsir.scoreFrame(batch, lrByBucket)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val outDir = TempDirs.create("graft_stream_dsir_out_")
+    foreachBatch(replay(spark, docsDir), "graft_stream_dsir_ck_") { (batch, _) =>
+      Dsir.scoreFrame(batch, lrByBucket)
+        .write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir).orderBy("doc_id")
   }
 
@@ -1160,43 +1009,35 @@ object StreamingBridge {
     val bgB = spark.sparkContext.broadcast(benchGrams)
     val bfB = spark.sparkContext.broadcast(bf)
     val docsDir = stageDocsRanged(spark, dir, 3, Seq("doc_id", "text"))
-    val schema = spark.read.parquet(docsDir).schema
-    val outDir = graft.sources.TempDirs.create("graft_stream_decon_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_decon_ck_")
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val session = batch.sparkSession
-        import session.implicits._
-        batch.filter(col("doc_id") % 50 =!= 0)
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .mapPartitions { it =>
-            val bg = bgB.value
-            val f = bfB.value
-            it.map { case (id, text) =>
-              var shared = 0L
-              var flagged = 0L
-              Dedup.gramSet8(text).foreach { g =>
-                // both counts independently, like the batch pass: the
-                // exact binary-search count never consults the sketch,
-                // so `flagged >= shared` is a REAL per-doc check of the
-                // Bloom's no-false-negative guarantee — gating the
-                // exact check behind the Bloom probe would make the
-                // comparison true by construction and unable to fire
-                if (f.mightContainLong(g)) flagged += 1
-                if (java.util.Arrays.binarySearch(bg, g) >= 0) shared += 1
-              }
-              (id, shared, if (shared >= 5) 1 else 0, flagged >= shared)
+    val outDir = TempDirs.create("graft_stream_decon_out_")
+    foreachBatch(replay(spark, docsDir), "graft_stream_decon_ck_") { (batch, _) =>
+      val session = batch.sparkSession
+      import session.implicits._
+      batch.filter(col("doc_id") % 50 =!= 0)
+        .select(col("doc_id"), col("text"))
+        .as[(Long, String)]
+        .mapPartitions { it =>
+          val bg = bgB.value
+          val f = bfB.value
+          it.map { case (id, text) =>
+            var shared = 0L
+            var flagged = 0L
+            Dedup.gramSet8(text).foreach { g =>
+              // both counts independently, like the batch pass: the
+              // exact binary-search count never consults the sketch,
+              // so `flagged >= shared` is a REAL per-doc check of the
+              // Bloom's no-false-negative guarantee — gating the
+              // exact check behind the Bloom probe would make the
+              // comparison true by construction and unable to fire
+              if (f.mightContainLong(g)) flagged += 1
+              if (java.util.Arrays.binarySearch(bg, g) >= 0) shared += 1
             }
+            (id, shared, if (shared >= 5) 1 else 0, flagged >= shared)
           }
-          .toDF("doc_id", "n_shared", "contaminated", "no_false_negative")
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+        }
+        .toDF("doc_id", "n_shared", "contaminated", "no_false_negative")
+        .write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir).orderBy("doc_id")
   }
 
@@ -1214,7 +1055,7 @@ object StreamingBridge {
     * twin. Gated by bm25_model_refresh's full-retrain oracle. */
   def streamBm25RefreshEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
-    val stateRoot = graft.sources.TempDirs.create("graft_stream_bm25_")
+    val stateRoot = TempDirs.create("graft_stream_bm25_")
     def writeModel(df: DataFrame, sc: DataFrame, v: Long): Unit = {
       df.coalesce(1).write.mode("overwrite").parquet(s"$stateRoot/v$v/df")
       sc.coalesce(1).write.mode("overwrite").parquet(s"$stateRoot/v$v/sc")
@@ -1225,34 +1066,26 @@ object StreamingBridge {
     writeModel(dfB, scB, 0)
     val ver = new java.util.concurrent.atomic.AtomicLong(0)
     val docsDir = stageDocsRanged(spark, dir, 3, Seq("doc_id", "text"))
-    val schema = spark.read.parquet(docsDir).schema
-    val ck = graft.sources.TempDirs.create("graft_stream_bm25_ck_")
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val session = batch.sparkSession
-        // The state version is DERIVED from the batchId (v = batchId+1,
-        // prior = batchId), never from a driver-side counter: foreachBatch
-        // is at-least-once, and a counter incremented after the merge
-        // would let a retried batch fold its delta into a fresh version —
-        // double-counting df/N/TL. Keyed by batchId, a retry re-reads the
-        // same prior version (which its own earlier attempt never wrote)
-        // and OVERWRITES the same output version: idempotent by layout.
-        val cur = batchId
-        val (dfI, scI) = TextAnalysis.bm25ModelParts(
-          batch.filter(col("doc_id") % 10 === 0).select("doc_id", "text"))
-        val dfM = session.read.parquet(s"$stateRoot/v$cur/df")
-          .unionByName(dfI).groupBy("word").agg(sum("df").as("df"))
-        val scM = session.read.parquet(s"$stateRoot/v$cur/sc")
-          .crossJoin(scI.select(col("n").as("ni"), col("tl").as("tli")))
-          .select((col("n") + col("ni")).as("n"), (col("tl") + col("tli")).as("tl"))
-        writeModel(dfM, scM, cur + 1)
-        ver.getAndUpdate(v => math.max(v, cur + 1))
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    foreachBatch(replay(spark, docsDir), "graft_stream_bm25_ck_") { (batch, batchId) =>
+      val session = batch.sparkSession
+      // The state version is DERIVED from the batchId (v = batchId+1,
+      // prior = batchId), never from a driver-side counter: foreachBatch
+      // is at-least-once, and a counter incremented after the merge
+      // would let a retried batch fold its delta into a fresh version —
+      // double-counting df/N/TL. Keyed by batchId, a retry re-reads the
+      // same prior version (which its own earlier attempt never wrote)
+      // and OVERWRITES the same output version: idempotent by layout.
+      val cur = batchId
+      val (dfI, scI) = TextAnalysis.bm25ModelParts(
+        batch.filter(col("doc_id") % 10 === 0).select("doc_id", "text"))
+      val dfM = session.read.parquet(s"$stateRoot/v$cur/df")
+        .unionByName(dfI).groupBy("word").agg(sum("df").as("df"))
+      val scM = session.read.parquet(s"$stateRoot/v$cur/sc")
+        .crossJoin(scI.select(col("n").as("ni"), col("tl").as("tli")))
+        .select((col("n") + col("ni")).as("n"), (col("tl") + col("tli")).as("tl"))
+      writeModel(dfM, scM, cur + 1)
+      ver.getAndUpdate(v => math.max(v, cur + 1))
+    }
     val last = ver.get()
     spark.read.parquet(s"$stateRoot/v$last/df")
       .crossJoin(broadcast(spark.read.parquet(s"$stateRoot/v$last/sc")
@@ -1287,46 +1120,36 @@ object StreamingBridge {
     val scRow = spark.read.parquet(s"$root/model_sc").head()
     val (n, tl, maxdl) = (scRow.getAs[Long]("n"), scRow.getAs[Long]("tl"),
       scRow.getAs[Long]("maxdl"))
-    // stage the query panel as 3 id-ranged files with ascending mtimes —
-    // 3 real micro-batches at maxFilesPerTrigger=1
+    // the query panel as 3 id-ranged files → 3 real micro-batches
     val panelDir = stagedFor(dir, "panel:chunk") {
-      stageRangedFiles(
-        graft.sources.Tables.documents(spark, dir)
+      stageRangedFiles(Tables.documents(spark, dir)
           .filter(col("doc_id") < 10).select("doc_id", "text"),
-        3, "doc_id", "graft_stream_chunk_panel_")
+        3, "graft_stream_chunk_panel_", "doc_id")
     }
-    val schema = spark.read.parquet(panelDir).schema
-    val outDir = graft.sources.TempDirs.create("graft_stream_chunk_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_chunk_ck_")
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(panelDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val wQt = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(desc("bm25"), asc("word"))
-        val qterms = TextAnalysis.bm25ScoreAgainstModel(
-            batch.select("doc_id", "text"), modelDf, n, tl, maxdl)
-          .withColumn("rn", row_number().over(wQt))
-          .filter(col("rn") <= 3)
-          .select(col("doc_id").as("qid"), col("word"),
-            expr("bm25 div 1000").as("w"))
-          .withColumn("wb", TextAnalysis.wordBucket(col("word")))
-        val scored = postings.join(broadcast(qterms), Seq("wb", "word"))
-          .filter(col("doc_id") =!= col("qid"))
-          .groupBy("qid", "doc_id", "chunk_id")
-          .agg(sum(col("cnt") * col("w")).as("score"))
-        // per-batch OVERWRITE keyed by the deterministic batchId (the
-        // streamCdcEq discipline): foreachBatch is at-least-once, and a
-        // plain append would duplicate a retried batch's answers —
-        // rewriting b<batchId> makes retries idempotent. Dir name
-        // deliberately not `batch=<id>`: partition discovery would
-        // inject a spurious column; recursiveFileLookup disables it.
-        TextAnalysis.chunkDiversityCut(scored)
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val outDir = TempDirs.create("graft_stream_chunk_out_")
+    foreachBatch(replay(spark, panelDir), "graft_stream_chunk_ck_") { (batch, batchId) =>
+      val wQt = org.apache.spark.sql.expressions.Window
+        .partitionBy("doc_id").orderBy(desc("bm25"), asc("word"))
+      val qterms = TextAnalysis.bm25ScoreAgainstModel(
+          batch.select("doc_id", "text"), modelDf, n, tl, maxdl)
+        .withColumn("rn", row_number().over(wQt))
+        .filter(col("rn") <= 3)
+        .select(col("doc_id").as("qid"), col("word"),
+          expr("bm25 div 1000").as("w"))
+        .withColumn("wb", TextAnalysis.wordBucket(col("word")))
+      val scored = postings.join(broadcast(qterms), Seq("wb", "word"))
+        .filter(col("doc_id") =!= col("qid"))
+        .groupBy("qid", "doc_id", "chunk_id")
+        .agg(sum(col("cnt") * col("w")).as("score"))
+      // per-batch OVERWRITE keyed by the deterministic batchId (the
+      // streamCdcEq discipline): foreachBatch is at-least-once, and a
+      // plain append would duplicate a retried batch's answers —
+      // rewriting b<batchId> makes retries idempotent. Dir name
+      // deliberately not `batch=<id>`: partition discovery would
+      // inject a spurious column; recursiveFileLookup disables it.
+      TextAnalysis.chunkDiversityCut(scored)
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+    }
     spark.read.option("recursiveFileLookup", "true").parquet(outDir)
       .orderBy("qid", "chunk_rank")
   }
@@ -1369,44 +1192,36 @@ object StreamingBridge {
     // inner-joined panel would silently drop it from the stream while
     // the oracle answers it (the current fixture aligns the two 1:1,
     // which would mask the divergence until a generator change)
-    val panel = graft.sources.Tables.documents(spark, dir)
+    val panel = Tables.documents(spark, dir)
       .filter(col("doc_id") < 10).select("doc_id", "text")
       .join(Similarity.emb(spark, dir).filter(col("vec_id") < 10)
         .select(col("vec_id").as("doc_id"), col("v")), Seq("doc_id"), "full_outer")
     val panelDir = stagedFor(dir, "panel:hybrid") {
-      stageRangedFiles(panel, 3, "doc_id", "graft_stream_hybrid_panel_")
+      stageRangedFiles(panel, 3, "graft_stream_hybrid_panel_", "doc_id")
     }
-    val schema = spark.read.parquet(panelDir).schema
-    val outDir = graft.sources.TempDirs.create("graft_stream_hybrid_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_hybrid_ck_")
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(panelDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val depth = 10
-        val wQt = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(desc("bm25"), asc("word"))
-        val qterms = TextAnalysis.bm25ScoreAgainstModel(
-            batch.filter(col("text").isNotNull).select("doc_id", "text"),
-            modelDf, n, tl, maxdl)
-          .withColumn("rn", row_number().over(wQt))
-          .filter(col("rn") <= 3)
-          .select(col("doc_id").as("qid"), col("word"))
-          .withColumn("wb", TextAnalysis.wordBucket(col("word")))
-        val lex = Similarity.lexTopK(
-          lexPost.join(broadcast(qterms), Seq("wb", "word"))
-            .filter(col("doc_id") =!= col("qid")), depth)
-        val ann = Similarity.ivfServeTopK(spark, ivfRoot,
-            batch.filter(col("v").isNotNull)
-              .select(col("doc_id").as("qid"), col("v").as("qv")),
-            depth, admitted = None)
-          .select(col("qid"), col("cand_id"), col("rn").as("ar"))
-        Similarity.rrfFuse(ann, lex)
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val outDir = TempDirs.create("graft_stream_hybrid_out_")
+    foreachBatch(replay(spark, panelDir), "graft_stream_hybrid_ck_") { (batch, batchId) =>
+      val depth = 10
+      val wQt = org.apache.spark.sql.expressions.Window
+        .partitionBy("doc_id").orderBy(desc("bm25"), asc("word"))
+      val qterms = TextAnalysis.bm25ScoreAgainstModel(
+          batch.filter(col("text").isNotNull).select("doc_id", "text"),
+          modelDf, n, tl, maxdl)
+        .withColumn("rn", row_number().over(wQt))
+        .filter(col("rn") <= 3)
+        .select(col("doc_id").as("qid"), col("word"))
+        .withColumn("wb", TextAnalysis.wordBucket(col("word")))
+      val lex = Similarity.lexTopK(
+        lexPost.join(broadcast(qterms), Seq("wb", "word"))
+          .filter(col("doc_id") =!= col("qid")), depth)
+      val ann = Similarity.ivfServeTopK(spark, ivfRoot,
+          batch.filter(col("v").isNotNull)
+            .select(col("doc_id").as("qid"), col("v").as("qv")),
+          depth, admitted = None)
+        .select(col("qid"), col("cand_id"), col("rn").as("ar"))
+      Similarity.rrfFuse(ann, lex)
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+    }
     spark.read.option("recursiveFileLookup", "true").parquet(outDir)
       .orderBy("qid", "rrf_rank")
   }
@@ -1444,9 +1259,7 @@ object StreamingBridge {
     import graft.operators.Dedup
     val winRoot = graft.sources.ArtifactRoots.assertComplete(
       Dedup.winIndexRoot(spark, dir))
-    val arrivals = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id") % 10 === 0).select("doc_id", "text")
-    val docsDir = stageSubstrArrivals(spark, dir, arrivals)
+    val docsDir = stageSubstrArrivals(spark, dir)
     // arrival-hash state as per-trigger DELTA dirs folded into a
     // snapshot every K triggers (DeltaState): writing d<batchId>
     // (overwrite — retry-idempotent) costs O(batch) per trigger, the
@@ -1455,30 +1268,22 @@ object StreamingBridge {
     // O(triggers) union growth of unfolded deltas. Duplicate hashes
     // across deltas are harmless (the screen kernel distincts its probe
     // result); the fold distincts to keep the snapshot set-sized.
-    val stateRoot = graft.sources.TempDirs.create("graft_stream_substr_state_")
-    val outDir = graft.sources.TempDirs.create("graft_stream_substr_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_substr_ck_")
-    val schema = spark.read.parquet(docsDir).schema
+    val stateRoot = TempDirs.create("graft_stream_substr_state_")
+    val outDir = TempDirs.create("graft_stream_substr_out_")
     val foldK = DeltaState.foldK(spark, stateRoot) // pinned to the root — see foldK
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val session = batch.sparkSession
-        val statePaths = DeltaState.priorPaths(session, stateRoot, "d",
-          batchId, foldK, fold = _.distinct())
-        val prior =
-          if (statePaths.isEmpty) session.read.parquet(s"$winRoot/hashes")
-          else session.read.parquet(s"$winRoot/hashes")
-            .unionByName(session.read.parquet(statePaths: _*))
-        Dedup.screenArrivalsAgainst(batch, prior)
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        Dedup.windowHashSet(batch)
-          .write.mode("overwrite").parquet(s"$stateRoot/d$batchId")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    foreachBatch(replay(spark, docsDir), "graft_stream_substr_ck_") { (batch, batchId) =>
+      val session = batch.sparkSession
+      val statePaths = DeltaState.priorPaths(session, stateRoot, "d",
+        batchId, foldK, fold = _.distinct())
+      val prior =
+        if (statePaths.isEmpty) session.read.parquet(s"$winRoot/hashes")
+        else session.read.parquet(s"$winRoot/hashes")
+          .unionByName(session.read.parquet(statePaths: _*))
+      Dedup.screenArrivalsAgainst(batch, prior)
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+      Dedup.windowHashSet(batch)
+        .write.mode("overwrite").parquet(s"$stateRoot/d$batchId")
+    }
     spark.read.option("recursiveFileLookup", "true").parquet(outDir)
       .orderBy("doc_id")
   }
@@ -1511,132 +1316,62 @@ object StreamingBridge {
     import graft.operators.Dedup
     val root = graft.sources.ArtifactRoots.assertComplete(
       Dedup.setsimIndexRoot(spark, dir))
-    val arrivals = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id") % 10 === 0).select("doc_id", "text")
-    val docsDir = stageSubstrArrivals(spark, dir, arrivals)
-    val stateRoot = graft.sources.TempDirs.create("graft_stream_setsim_state_")
-    val outDir = graft.sources.TempDirs.create("graft_stream_setsim_out_")
-    val ck = graft.sources.TempDirs.create("graft_stream_setsim_ck_")
-    val schema = spark.read.parquet(docsDir).schema
+    val docsDir = stageSubstrArrivals(spark, dir)
+    val stateRoot = TempDirs.create("graft_stream_setsim_state_")
+    val outDir = TempDirs.create("graft_stream_setsim_out_")
     val foldK = DeltaState.foldK(spark, stateRoot) // pinned to the root — see foldK
-    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val session = batch.sparkSession
-        val df = session.read.parquet(s"$root/df")
-        val ag = Dedup.gramSetsOf(batch.select("doc_id", "text")).persist()
-        ag.write.mode("overwrite").parquet(s"$stateRoot/g$batchId")
-        Dedup.arrivalPrefix(ag, df)
-          .write.mode("overwrite").parquet(s"$stateRoot/p$batchId")
-        ag.unpersist()
-        val agW = session.read.parquet(s"$stateRoot/g$batchId")
-        val apW = session.read.parquet(s"$stateRoot/p$batchId")
-        // both state families fold every K triggers (DeltaState): a
-        // trigger reads O(snapshot + K) state dirs, never O(triggers)
-        val priorP = DeltaState.priorPaths(session, stateRoot, "p", batchId, foldK)
-        val priorG = DeltaState.priorPaths(session, stateRoot, "g", batchId, foldK)
-        val prefixAll =
-          if (priorP.isEmpty) session.read.parquet(s"$root/prefix")
-          else session.read.parquet(s"$root/prefix")
-            .unionByName(session.read.parquet(priorP: _*))
-        val gramsAll =
-          if (priorG.isEmpty) session.read.parquet(s"$root/grams")
-          else session.read.parquet(s"$root/grams")
-            .unionByName(session.read.parquet(priorG: _*))
-        Dedup.setsimScreenWith(agW, apW, prefixAll, gramsAll)
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    foreachBatch(replay(spark, docsDir), "graft_stream_setsim_ck_") { (batch, batchId) =>
+      val session = batch.sparkSession
+      val df = session.read.parquet(s"$root/df")
+      val ag = Dedup.gramSetsOf(batch.select("doc_id", "text")).persist()
+      ag.write.mode("overwrite").parquet(s"$stateRoot/g$batchId")
+      Dedup.arrivalPrefix(ag, df)
+        .write.mode("overwrite").parquet(s"$stateRoot/p$batchId")
+      ag.unpersist()
+      val agW = session.read.parquet(s"$stateRoot/g$batchId")
+      val apW = session.read.parquet(s"$stateRoot/p$batchId")
+      // both state families fold every K triggers (DeltaState): a
+      // trigger reads O(snapshot + K) state dirs, never O(triggers)
+      val priorP = DeltaState.priorPaths(session, stateRoot, "p", batchId, foldK)
+      val priorG = DeltaState.priorPaths(session, stateRoot, "g", batchId, foldK)
+      val prefixAll =
+        if (priorP.isEmpty) session.read.parquet(s"$root/prefix")
+        else session.read.parquet(s"$root/prefix")
+          .unionByName(session.read.parquet(priorP: _*))
+      val gramsAll =
+        if (priorG.isEmpty) session.read.parquet(s"$root/grams")
+        else session.read.parquet(s"$root/grams")
+          .unionByName(session.read.parquet(priorG: _*))
+      Dedup.setsimScreenWith(agW, apW, prefixAll, gramsAll)
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+    }
     spark.read.option("recursiveFileLookup", "true").parquet(outDir)
       .orderBy("id1", "id2")
   }
-
-  private val substrStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** Stage the arrival split as 5 EXPLICIT ntile(doc_id) files — not
-    * stageRangedFiles: repartitionByRange draws sampled boundaries, and
-    * this twin's oracle must reproduce the trigger assignment exactly,
-    * so the split is pinned to ntile(5) OVER (ORDER BY doc_id) on both
-    * sides. The window is arrival-sized (staging fixture, not the
-    * operator path). */
-  private def stageSubstrArrivals(spark: SparkSession, dir: String,
-      arrivals: DataFrame): String =
-    substrStageMemo.computeIfAbsent(graft.sources.DatasetId.key(dir), { _ =>
-      val wNt = org.apache.spark.sql.expressions.Window.orderBy("doc_id")
-      val withT = arrivals.withColumn("trg", ntile(5).over(wNt))
-      val build = graft.sources.TempDirs.create("graft_stream_substr_build_")
-      withT.coalesce(1).write.partitionBy("trg").mode("overwrite").parquet(build)
-      val out = graft.sources.TempDirs.create("graft_stream_substr_docs_")
-      val tsBase = System.currentTimeMillis() - 6000L
-      // ntile(5) over fewer than 5 rows emits fewer groups — stage the
-      // trigger dirs actually present (the oracle's ntile assignment is
-      // identical either way), rather than NPE-ing on a missing trg dir
-      (1 to 5).foreach { t =>
-        val partDir = new java.io.File(s"$build/trg=$t")
-        val srcs = Option(partDir.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-        srcs.headOption.foreach { src =>
-          val dst = java.nio.file.Paths.get(out, f"batch_$t%05d.parquet")
-          java.nio.file.Files.copy(src.toPath, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(tsBase + t * 1000L))
-        }
-      }
-      out
-    })
 
   /** Scope the state-partition count to the bridge call: stateful
     * operators bind `spark.sql.shuffle.partitions` into the checkpoint at
     * query start, and each state partition is a live store instance
     * (RocksDB database / HDFS-backed map) that pays open + commit +
-    * snapshot I/O EVERY micro-batch. The batch session's 32 is sized for
-    * corpus shuffles, not for the bridge feeds' key cardinality — 32
-    * stores × 4 triggers × 23 queries is pure fixed overhead, so the
-    * bridges pin 8 for the duration of the drive (results are
-    * partitioning-invariant and every bridge sorts its output). At 100 TB
-    * this is the same knob sized the other way: state partitions follow
-    * key volume and executor count, never the session default. Scoping is
-    * exact for the streaming side because every bridge drains its query
-    * eagerly before returning; the returned DataFrame is a batch read of
-    * the sink and executes under the caller's own partitions. */
-  // bridge-drive mutual exclusion. A PRIVATE lock, deliberately not the
-  // SparkSession's own monitor: Scala lazy-val initialization inside
-  // SparkSession synchronizes on the session instance, so holding that
-  // monitor across a whole streaming drive could deadlock against a
-  // streaming-execution thread touching a not-yet-initialized lazy val.
-  private val statePartsLock = new Object
-
-  private def withStateParts[T](spark: SparkSession)(body: => T): T =
-    // the save/set/restore mutates session-global conf, so serialize all
-    // bridge drives: concurrent callers from different threads would
-    // otherwise race the save/restore and could reinstate a stale value.
-    // The monitor is reentrant, so a nested scoped call on the same
-    // thread is safe (its restore writes back the outer pin).
-    statePartsLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(key)
-      // every state partition is a live store instance paying open +
-      // commit + snapshot I/O per trigger; the r16 fixed-cost probe
-      // (BENCH_r16_probe_streamcost) A/B'd 8 vs 4 across the family —
-      // results are partitioning-invariant (every bridge sorts its
-      // output), the knob exists to size stores to key volume
-      spark.conf.set(key,
-        spark.conf.getOption("spark.graft.streamStateParts")
-          .orElse(sys.env.get("GRAFT_STREAM_STATE_PARTS")).getOrElse("4"))
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    * snapshot I/O EVERY micro-batch. The session's shuffle partitions
+    * (one per core) are sized for corpus shuffles, not for the bridge
+    * feeds' key cardinality, so the bridges pin [[StateParts]] = 4 for
+    * the duration of the drive (results are partitioning-invariant and
+    * every bridge sorts its output; BENCH_r16_probe_streamcost A/B'd 8
+    * vs 4 across the family). At 100 TB state partitions follow key
+    * volume and executor count instead, never the session default.
+    * Scoping is exact for the streaming side because every bridge drains
+    * its query eagerly before returning; the returned DataFrame is a
+    * batch read of the sink and executes under the caller's own
+    * partitions. The save/set/restore mutates session-global conf, so
+    * all bridge drives serialize on [[bridgeLock]]: concurrent callers
+    * would otherwise race the restore and could reinstate a stale value.
+    * The monitor is reentrant, so a nested scoped call on the same
+    * thread is safe (its restore writes back the outer pin). */
+  private def scoped[T](f: (SparkSession, String) => T): (SparkSession, String) => T =
+    (spark, dir) => bridgeLock.synchronized {
+      withConf(spark, "spark.sql.shuffle.partitions", StateParts.toString)(f(spark, dir))
     }
-
-  private def scoped(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (spark, dir) => withStateParts(spark)(f(spark, dir))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_cdc_eq" -> scoped(streamCdcEq),
@@ -1673,6 +1408,34 @@ object StreamingBridge {
     "stream_substring_dedup_eq" -> scoped(streamSubstringDedupEq),
     "stream_setsim_dedup_eq" -> scoped(streamSetsimDedupEq),
   )
+
+  // Oracle SQL shared by several twins (one implementation family, one
+  // oracle): each string once.
+  private val hourlySql =
+    ("SELECT date_trunc('hour', ts) AS hour, count(*) AS n, " +
+      "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value " +
+      "FROM events GROUP BY 1 ORDER BY 1")
+  private val distinctTypesSql =
+    "SELECT DISTINCT user_id, event_type FROM events ORDER BY user_id, event_type"
+  private val latestSql =
+    ("SELECT user_id, last_us, last_event_id, last_type, n_events FROM " +
+      "(SELECT user_id, epoch_us(ts) AS last_us, event_id AS last_event_id, " +
+      "event_type AS last_type, " +
+      "row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn, " +
+      "count(*) OVER (PARTITION BY user_id) AS n_events FROM events) " +
+      "WHERE rn = 1 ORDER BY user_id")
+  private val sessionsSql =
+    ("WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events), " +
+      "flagged AS (SELECT user_id, event_id, us, " +
+      "CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 30*60*1000000 THEN 1 ELSE 0 END AS is_new " +
+      "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)), " +
+      "sessions AS (SELECT user_id, us, " +
+      "CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id " +
+      "FROM flagged) " +
+      "SELECT user_id, count(*) AS n_events, " +
+      "CAST(floor((max(us) - min(us)) / 1000000) AS BIGINT) AS duration_s " +
+      "FROM sessions GROUP BY user_id, session_id " +
+      "ORDER BY user_id, n_events, duration_s")
 
   // Oracles are the batch twins' SQL (graft.operators.Analytics): streaming
   // and batch must produce the same answer over the same finite input.
@@ -1751,53 +1514,21 @@ object StreamingBridge {
         "CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_quarantined, " +
         "CAST(sum(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE doc_id END) AS BIGINT) AS sum_ids " +
         "FROM documents GROUP BY 1 ORDER BY lang NULLS FIRST"),
-    // warm-start twin: backfill(first half) + stream(second half) must
-    // equal batch over everything - same oracle as the other latest twins
-    "stream_latest_warm_eq" ->
-      ("SELECT user_id, last_us, last_event_id, last_type, n_events FROM " +
-        "(SELECT user_id, epoch_us(ts) AS last_us, event_id AS last_event_id, " +
-        "event_type AS last_type, " +
-        "row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn, " +
-        "count(*) OVER (PARTITION BY user_id) AS n_events FROM events) " +
-        "WHERE rn = 1 ORDER BY user_id"),
-    // transformWithState twin: same fold, same oracle as stream_latest_eq
-    "stream_latest_tws_eq" ->
-      ("SELECT user_id, last_us, last_event_id, last_type, n_events FROM " +
-        "(SELECT user_id, epoch_us(ts) AS last_us, event_id AS last_event_id, " +
-        "event_type AS last_type, " +
-        "row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn, " +
-        "count(*) OVER (PARTITION BY user_id) AS n_events FROM events) " +
-        "WHERE rn = 1 ORDER BY user_id"),
-    "stream_latest_eq" ->
-      ("SELECT user_id, last_us, last_event_id, last_type, n_events FROM " +
-        "(SELECT user_id, epoch_us(ts) AS last_us, event_id AS last_event_id, " +
-        "event_type AS last_type, " +
-        "row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn, " +
-        "count(*) OVER (PARTITION BY user_id) AS n_events FROM events) " +
-        "WHERE rn = 1 ORDER BY user_id"),
-    "stream_hourly_eq" ->
-      ("SELECT date_trunc('hour', ts) AS hour, count(*) AS n, " +
-        "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-    "stream_foreachbatch_eq" ->
-      ("SELECT date_trunc('hour', ts) AS hour, count(*) AS n, " +
-        "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-    "stream_incremental_eq" ->
-      ("SELECT date_trunc('hour', ts) AS hour, count(*) AS n, " +
-        "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-    "stream_file_sink_eq" ->
-      ("SELECT date_trunc('hour', ts) AS hour, count(*) AS n, " +
-        "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-    "stream_dedup_eq" ->
-      "SELECT DISTINCT user_id, event_type FROM events ORDER BY user_id, event_type",
+    // the latest twins (mapGroupsWithState, transformWithState, and the
+    // warm start: backfill(first half) + stream(second half)) all equal
+    // batch over everything
+    "stream_latest_warm_eq" -> latestSql,
+    "stream_latest_tws_eq" -> latestSql,
+    "stream_latest_eq" -> latestSql,
+    "stream_hourly_eq" -> hourlySql,
+    "stream_foreachbatch_eq" -> hourlySql,
+    "stream_incremental_eq" -> hourlySql,
+    "stream_file_sink_eq" -> hourlySql,
+    "stream_dedup_eq" -> distinctTypesSql,
     "stream_enrich_eq" ->
       ("SELECT e.event_id, e.user_id, n.n_name FROM events e " +
         "JOIN nation n ON e.user_id % 25 = n.n_nationkey ORDER BY e.event_id"),
-    "stream_dedup_incr_eq" ->
-      "SELECT DISTINCT user_id, event_type FROM events ORDER BY user_id, event_type",
+    "stream_dedup_incr_eq" -> distinctTypesSql,
     // ListState recency buffer: batch top-3 window, -1 pads young keys
     "stream_recent3_eq" ->
       ("WITH ranked AS (SELECT user_id, event_id, " +
@@ -1846,57 +1577,12 @@ object StreamingBridge {
         "AND epoch_us(p.ts) >= epoch_us(v.ts) " +
         "AND epoch_us(p.ts) <= epoch_us(v.ts) + 3600000000 " +
         "ORDER BY v.user_id, view_id, purchase_id"),
-    "stream_sessionize_eq" ->
-      ("WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events), " +
-        "flagged AS (SELECT user_id, event_id, us, " +
-        "CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 30*60*1000000 THEN 1 ELSE 0 END AS is_new " +
-        "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)), " +
-        "sessions AS (SELECT user_id, us, " +
-        "CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id " +
-        "FROM flagged) " +
-        "SELECT user_id, count(*) AS n_events, " +
-        "CAST(floor((max(us) - min(us)) / 1000000) AS BIGINT) AS duration_s " +
-        "FROM sessions GROUP BY user_id, session_id " +
-        "ORDER BY user_id, n_events, duration_s"),
-    // transformWithState sessionizer (event-time timers): same sessions,
-    // same oracle as stream_sessionize_eq
-    "stream_sessionize_tws_eq" ->
-      ("WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events), " +
-        "flagged AS (SELECT user_id, event_id, us, " +
-        "CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 30*60*1000000 THEN 1 ELSE 0 END AS is_new " +
-        "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)), " +
-        "sessions AS (SELECT user_id, us, " +
-        "CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id " +
-        "FROM flagged) " +
-        "SELECT user_id, count(*) AS n_events, " +
-        "CAST(floor((max(us) - min(us)) / 1000000) AS BIGINT) AS duration_s " +
-        "FROM sessions GROUP BY user_id, session_id " +
-        "ORDER BY user_id, n_events, duration_s"),
-    // native session_window twin: same sessions, same oracle as
-    // stream_sessionize_eq (one oracle, three implementations)
-    "stream_session_window_eq" ->
-      ("WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events), " +
-        "flagged AS (SELECT user_id, event_id, us, " +
-        "CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 30*60*1000000 THEN 1 ELSE 0 END AS is_new " +
-        "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)), " +
-        "sessions AS (SELECT user_id, us, " +
-        "CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id " +
-        "FROM flagged) " +
-        "SELECT user_id, count(*) AS n_events, " +
-        "CAST(floor((max(us) - min(us)) / 1000000) AS BIGINT) AS duration_s " +
-        "FROM sessions GROUP BY user_id, session_id " +
-        "ORDER BY user_id, n_events, duration_s"),
-    "stream_sessionize_incr_eq" ->
-      ("WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events), " +
-        "flagged AS (SELECT user_id, event_id, us, " +
-        "CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 30*60*1000000 THEN 1 ELSE 0 END AS is_new " +
-        "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)), " +
-        "sessions AS (SELECT user_id, us, " +
-        "CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id " +
-        "FROM flagged) " +
-        "SELECT user_id, count(*) AS n_events, " +
-        "CAST(floor((max(us) - min(us)) / 1000000) AS BIGINT) AS duration_s " +
-        "FROM sessions GROUP BY user_id, session_id " +
-        "ORDER BY user_id, n_events, duration_s"),
+    // one oracle, four sessionizers: flatMapGroupsWithState (single and
+    // 4-batch replay), transformWithState event-time timers, and the
+    // native session_window aggregate
+    "stream_sessionize_eq" -> sessionsSql,
+    "stream_sessionize_tws_eq" -> sessionsSql,
+    "stream_session_window_eq" -> sessionsSql,
+    "stream_sessionize_incr_eq" -> sessionsSql,
   )
 }

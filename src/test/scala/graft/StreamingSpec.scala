@@ -163,8 +163,8 @@ class StreamingSpec extends SparkSpec {
       q2.processAllAvailable()
       val maxMs = Tables.events(spark, sf)
         .agg(max($"ts")).head().getTimestamp(0).getTime
-      graft.streaming.StreamingBridge
-        .writeSentinel(spark, streamDir, schema, maxMs + 24L * 3600 * 1000)
+      graft.streaming.StreamingBridge.writeSentinelNamed(spark, streamDir,
+        schema, maxMs + 24L * 3600 * 1000, "zz_sentinel.parquet")
       q2.processAllAvailable()
     } finally q2.stop()
 
@@ -736,4 +736,64 @@ class StreamingSpec extends SparkSpec {
     assert(Files.exists(Paths.get(s3, "staged")))
   }
 
+  test("stageTimeOrdered: regenerating the events file deletes the superseded staged base") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val ds = graft.sources.TempDirs.create("graft_stage_regen_ds_")
+    val events = Paths.get(ds, "events.parquet")
+    Files.copy(Paths.get(sf, "events.parquet"), events)
+    // the base a link view was made from: the one other staged dir
+    // holding the same inode as the view's first file
+    def baseOf(view: String): Option[Path] = {
+      val f = new java.io.File(view).listFiles().filter(_.getName.endsWith(".parquet"))
+        .minBy(_.getName).toPath
+      val siblings = Files.list(Paths.get(view).getParent)
+      try siblings.iterator().asScala.toList
+        .filter(d => d.getFileName.toString.startsWith("graft_") && d != Paths.get(view))
+        .find { d =>
+          val twin = d.resolve(f.getFileName)
+          scala.util.Try(Files.isSameFile(twin, f)).getOrElse(false)
+        }
+      finally siblings.close()
+    }
+    val base1 = baseOf(graft.streaming.StreamingBridge.stageTimeOrdered(spark, ds, 4))
+    assert(base1.exists(Files.isDirectory(_)), "first staging has no base dir")
+    // regenerate in place: same path, new mtime → new fingerprint
+    Files.copy(Paths.get(sf, "events.parquet"), events,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(events,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 2000))
+    val base2 = baseOf(graft.streaming.StreamingBridge.stageTimeOrdered(spark, ds, 4))
+    assert(base2.nonEmpty && base2 != base1, "regeneration must restage")
+    assert(!Files.exists(base1.get),
+      s"superseded staged base ${base1.get} was left on disk")
+  }
+
+  test("bridge drive: a throwing drive stops its query and restores the scoped confs") {
+    // a feed that stages and starts cleanly but fails inside the first
+    // micro-batch: a null user_id cannot decode into Event's Long
+    val ds = graft.sources.TempDirs.create("graft_drive_throw_ds_")
+    Seq((1L, new java.sql.Timestamp(0L), null.asInstanceOf[java.lang.Long], "view", 1.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+      .coalesce(1).write.parquet(s"$ds/events.parquet")
+    val session = spark.newSession()
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val explicit = Seq(Some("7"),
+      Some("org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
+    Seq(explicit, Seq(None, None)).foreach { prev =>
+      keys.zip(prev).foreach {
+        case (k, Some(v)) => session.conf.set(k, v)
+        case (k, None) => session.conf.unset(k)
+      }
+      val values = keys.map(session.conf.get)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        graft.streaming.StreamingBridge.queries("stream_latest_tws_eq")(session, ds)
+      }
+      assert(session.streams.active.isEmpty, "the failed query was left running")
+      assert(keys.map(session.conf.getAll.get) == prev,
+        s"explicit settings not restored: ${keys.map(session.conf.getAll.get)} vs $prev")
+      assert(keys.map(session.conf.get) == values)
+    }
+  }
 }
