@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -57,24 +55,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = graft.sources.SpillSafety.tune(SparkSession.builder(),
-        cpus.toInt, 0.6)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // probe hook, same contract as Verify: the driver never sets it
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty[String])
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Session.local()
     // untimed warmup: absorb one-time init (FS, codegen, committers) so it
     // isn't billed to whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Executor-loss recovery probe (r19 verdict order #6, stretch): the
   * multi-JVM probe proved the partitioning contracts carry across real
@@ -46,25 +46,14 @@ object ProbeExecutorLoss {
       sys.error("SPARK_GRAFT_JAR must point at the packaged graft jar " +
         "(sbt package) so local-cluster executors can load the operators"))
 
-    def contentHash(df: DataFrame): (String, Long) = {
-      val r = df.selectExpr(
-        "sum(cast(conv(substring(md5(to_json(struct(*))), 1, 14), 16, 10) as decimal(38,0))) as h",
-        "count(1) as n").head()
-      (Option(r.get(0)).map(_.toString).getOrElse("0"), r.getLong(1))
-    }
-
     def runOnce(tag: String, kill: Boolean)
         : (String, Long, Double, Stats, String) = {
       val stats = new Stats
-      val spark = graft.sources.SpillSafety
-        .sessionConf(16L << 30, 16, 0.6)
+      val spark = (graft.sources.Session.conf(32) ++
+          graft.sources.SpillSafety.sessionConf(16L << 30, 16, 0.6))
         .foldLeft(SparkSession.builder()
           .master("local-cluster[2,16,18432]")
           .appName(s"graft-execloss-$tag")
-          .config("spark.sql.shuffle.partitions", "32")
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
           .config("spark.jars", jar)
           .config("spark.executor.memory", "16g")) { case (b, (k, v)) => b.config(k, v) }
         .getOrCreate()
@@ -117,7 +106,7 @@ object ProbeExecutorLoss {
       killer.foreach { t => t.setDaemon(true); t.start() }
       val t0 = System.nanoTime()
       val root = operators.TextAnalysis.chunkIndexWarm(spark, sfDir)
-      val (h, n) = contentHash(spark.read.parquet(s"$root/postings"))
+      val (h, n) = ProbeSpill.contentHash(spark.read.parquet(s"$root/postings"))
       val wall = (System.nanoTime() - t0) / 1e9
       killer.foreach(_.join(10000))
       try org.apache.spark.GraftListenerBridge

@@ -37,23 +37,12 @@ object ProbeMultiJvm {
       sys.error("SPARK_GRAFT_JAR must point at the packaged graft jar " +
         "(sbt package) so local-cluster executors can load the operators"))
 
-    def contentHash(df: DataFrame): (String, Long) = {
-      val r = df.selectExpr(
-        "sum(cast(conv(substring(md5(to_json(struct(*))), 1, 14), 16, 10) as decimal(38,0))) as h",
-        "count(1) as n").head()
-      (Option(r.get(0)).map(_.toString).getOrElse("0"), r.getLong(1))
-    }
-
     def runUnder(master: String, tag: String,
         extra: Seq[(String, String)]): (Seq[(String, String, Long, Double)], String) = {
       val execs = new java.util.concurrent.ConcurrentHashMap[String, ExecStats]()
-      val spark = extra.foldLeft(SparkSession.builder()
+      val spark = (graft.sources.Session.conf(32) ++ extra).foldLeft(SparkSession.builder()
           .master(master)
           .appName(s"graft-multijvm-$tag")
-          .config("spark.sql.shuffle.partitions", "32")
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
           .config("spark.jars", jar)) { case (b, (k, v)) => b.config(k, v) }
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
@@ -82,7 +71,7 @@ object ProbeMultiJvm {
         }))
       val out = rows.map { case (name, mk) =>
         val t0 = System.nanoTime()
-        val (h, n) = contentHash(mk())
+        val (h, n) = ProbeSpill.contentHash(mk())
         (name, h, n, (System.nanoTime() - t0) / 1e9)
       }
       try org.apache.spark.GraftListenerBridge

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** r18 planted-duplicate recall probe (verdict order #2): the
@@ -40,17 +40,7 @@ object ProbePlantedRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/repo/probedata/sf1.0h_planted")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.SpillSafety.tune(SparkSession.builder(),
-        cpus.toInt, 0.6)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Session.local()
 
     val truthPairs = spark.read.parquet(s"$sfDir/planted_pairs.parquet")
     val truthSub = spark.read.parquet(s"$sfDir/planted_substring.parquet")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** r17 spill probe (verdict order #1): drive the heaviest shuffle/sort
   * rows at 10× data in a heap-constrained JVM so Spark's external
@@ -29,26 +29,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * private artifact root — each JVM rebuilds its own).
   */
 object ProbeSpill {
+
+  /** Order-independent content hash + row count of a frame: SUM of a
+    * 56-bit prefix of each row's md5 over its canonical JSON. Column
+    * formatting is engine-deterministic, so two runs of the same Spark
+    * version agree iff the row multisets agree. Shared by the
+    * hash-comparing probes (this one, ProbeMultiJvm, ProbeExecutorLoss). */
+  def contentHash(df: DataFrame): (String, Long) = {
+    val r = df.selectExpr(
+      "sum(cast(conv(substring(md5(to_json(struct(*))), 1, 14), 16, 10) as decimal(38,0))) as h",
+      "count(1) as n").head()
+    (Option(r.get(0)).map(_.toString).getOrElse("0"), r.getLong(1))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/probedata/sf1.0h")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // second pressure axis: floor the unified-memory fraction so the
     // execution pool is tiny even when the heap fits the data — forces
     // UnsafeExternalSorter/aggregation onto their spill paths on rows
     // whose working set fits 4g comfortably (the 2020s-hardware analogue
     // of a busy multi-tenant executor)
     val memFraction = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.6")
-    val spark = graft.sources.SpillSafety.tune(SparkSession.builder(),
-        cpus.toInt, memFraction.toDouble)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.memory.fraction", memFraction)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Session.local(
+      extra = Seq("spark.memory.fraction" -> memFraction))
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
     val memSpill = new java.util.concurrent.atomic.AtomicLong(0)
@@ -62,17 +65,6 @@ object ProbeSpill {
         }
       }
     })
-
-    /** Order-independent content hash + row count of a frame: SUM of a
-      * 56-bit prefix of each row's md5 over its canonical JSON. Column
-      * formatting is engine-deterministic, so two runs of the same
-      * Spark version agree iff the row multisets agree. */
-    def contentHash(df: DataFrame): (String, Long) = {
-      val r = df.selectExpr(
-        "sum(cast(conv(substring(md5(to_json(struct(*))), 1, 14), 16, 10) as decimal(38,0))) as h",
-        "count(1) as n").head()
-      (Option(r.get(0)).map(_.toString).getOrElse("0"), r.getLong(1))
-    }
 
     // optional row filter (comma-separated names) — the 30× scaling run
     // drops dedup_setsim_join because that corpus shape trips its pair
@@ -112,7 +104,7 @@ object ProbeSpill {
 
     val heap = Runtime.getRuntime.maxMemory() / (1024 * 1024)
     println(
-      s"""{"probe": "spill", "sf": "$sfDir", "heap_mb": $heap, "cpus": $cpus, "rows": {
+      s"""{"probe": "spill", "sf": "$sfDir", "heap_mb": $heap, "cpus": ${graft.sources.Session.defaultCores}, "rows": {
          |${out.mkString(",\n")}
          |}}""".stripMargin)
     spark.stop()

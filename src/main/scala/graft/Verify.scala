@@ -1,31 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = graft.sources.SpillSafety.tune(SparkSession.builder(),
-        cpus.toInt, 0.6)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // probe hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" lets a probe drive
-    // the SAME oracle gate under a conf override (e.g. the 10k-bucket
-    // DSIR run: spark.graft.dsirBuckets=10000). The driver never sets
-    // it, so the contracted default-conf behavior is unchanged.
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty[String])
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Session.local()
     new java.io.File(outDir).mkdirs()
     // Builder-side iteration aid: SPARK_GRAFT_ONLY=q1,q2 dumps just those
     // queries. The driver never sets it, so the contracted behavior

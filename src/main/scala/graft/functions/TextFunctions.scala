@@ -74,12 +74,6 @@ object TextFunctions {
           element_at(codes, i + lit(j)) * lit(p)
         }.reduce(_ + _)))
 
-  /** Inline convenience form (tests / small inputs): tokenizes the string
-    * to codes inside the expression. Operators should materialize
-    * asciiCodes first. */
-  def charNGramHashes(c: Column, n: Int): Column =
-    charNGramHashesFromCodes(asciiCodes(c), n)
-
   /** 32-bit base hash of a string: unsigned value of the first 8 hex chars
     * of its md5. Engine-portable — DuckDB computes the identical value via
     * `CAST('0x' || substr(md5(s), 1, 8) AS BIGINT)`. */

@@ -30,9 +30,10 @@ package graft.sources
   * at session BUILD time — hence a builder hook, not a runtime set.
   *
   * The same hook sizes Spark's generated-class cache, another static
-  * conf ([[CodegenCacheEntries]]). Every graft session — the CLIs, the
-  * probes, the test base and the benchmark driver — is built through
-  * [[tune]] (or folds [[sessionConf]] for a non-local master). */
+  * conf ([[CodegenCacheEntries]]). Every local graft session is built by
+  * the factory [[Session.local]], which builds through [[tune]] and fails
+  * loudly if the cache did not take the cap; the `local-cluster` probes
+  * fold [[sessionConf]], and the benchmark driver calls [[tune]]. */
 object SpillSafety {
   /** Per-slot execution-pool floor below which the guardrails engage. */
   val StarvedPoolPerSlotBytes: Long = 16L << 20
@@ -63,13 +64,16 @@ object SpillSafety {
     * 4,183 at sf0.1. The cap is at least twice the largest. */
   val CodegenCacheEntries: Int = 16384
 
+  /** The static conf that carries [[CodegenCacheEntries]]. */
+  val CodegenCacheKey: String = "spark.sql.codegen.cache.maxEntries"
+
   /** Every conf pair the build hook sets: the starved-sorter guard (see
     * [[starvedSorterConf]]) plus the codegen cache capacity. Pure; a
     * non-local master folds it with its EXECUTOR heap and slots. */
   def sessionConf(heapBytes: Long, slots: Int,
       memFraction: Double): Seq[(String, String)] =
     starvedSorterConf(heapBytes, slots, memFraction) :+
-      ("spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
+      (CodegenCacheKey -> CodegenCacheEntries.toString)
 
   /** Apply [[sessionConf]] to a session builder using this JVM's max heap
     * (the executor heap in local mode, where all graft CLIs run). */

@@ -33,7 +33,7 @@ object Tables {
     * testdata generations, all normalized here to µs TimestampType so
     * every event-time operator sees ONE type:
     *  - TIMESTAMP(NANOS): Spark 4 refuses to map it to TimestampType;
-    *    sessions set `spark.sql.legacy.parquet.nanosAsLong=true`, so it
+    *    [[Session.conf]] reads it as longs (the legacy parquet flag), so it
     *    arrives as LongType nanos — truncate to micros (matches DuckDB's
     *    `epoch_us(ts)` exactly).
     *  - timestamp[us] without timezone → TimestampNTZType: `unix_micros`

@@ -414,22 +414,16 @@ object StreamingBridge {
     spark.read.parquet(outDir).orderBy("hour")
   }
 
-  /** Hourly aggregation processed as MANY micro-batches — the events
-    * table is re-staged as 4 separate files and the source capped at
-    * `maxFilesPerTrigger = 1`, so the aggregate state must accumulate
-    * across 4 genuine micro-batch boundaries (the single-big-batch runs
-    * above never exercise cross-batch state merge for the windowed agg).
-    * Complete mode: the final emission is the batch answer iff every
-    * intermediate state handoff was correct. */
-  def streamIncrementalEq(spark: SparkSession, dir: String): DataFrame = {
-    val staged = TempDirs.create("graft_stream_incr_")
-    Tables.events(spark, dir)
-      .select(eventCols.map(col): _*)
-      .repartition(4)
-      .write.mode("overwrite").parquet(staged)
+  /** Hourly aggregation processed as MANY micro-batches — the shared
+    * 4-file chronological feed ([[timeOrdered]]), one file per trigger,
+    * so the aggregate state must accumulate across 4 genuine micro-batch
+    * boundaries (the single-big-batch runs above never exercise
+    * cross-batch state merge for the windowed agg). Complete mode: the
+    * final emission is the batch answer iff every intermediate state
+    * handoff was correct, whatever the split. */
+  def streamIncrementalEq(spark: SparkSession, dir: String): DataFrame =
     memorySink(spark, "graft_stream_incr", "complete")(
-      StreamingOps.hourlyCounts(replay(spark, staged))).orderBy("hour")
-  }
+      StreamingOps.hourlyCounts(events(spark, timeOrdered(spark, dir)))).orderBy("hour")
 
   /** Streaming dead-letter quarantine — json_quarantine's streaming
     * twin, the split every production ingest stream runs: a text feed

@@ -356,6 +356,27 @@ class DedupSpec extends SparkSpec {
       (2L, 1L, L, total, 1000000L * L / total),
       (3L, 0L, 0L, total, 0L),
       (4L, 1L, total, total, 1000000L)))
+    // long documents, the regime the rolling window hash exists for: a
+    // 400-char span shared by three of five 40k–60k-char docs is one
+    // span of exactly 400 chars in each carrier and nothing elsewhere.
+    // Random lowercase filler shares no window across docs, and the
+    // digits flanking the span differ per carrier, so no match extends
+    // past it.
+    val rnd = new scala.util.Random(11)
+    def filler(n: Int): String = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    val span = (1 to 50).map(i => f"BOIL$i%03dZ").mkString
+    assert(span.length == 400)
+    val long = (0 until 5).map { i =>
+      val half = 20000 + 2500 * i
+      i.toLong -> (if (i % 2 == 0) filler(half) + i + span + (i + 5) + filler(half)
+        else filler(2 * half))
+    }
+    val longGot = Dedup.substringCoverage(long.toDF("doc_id", "text"))
+      .orderBy("doc_id").as[(Long, Long, Long, Long, Long)].collect().toSeq
+    assert(longGot == long.map { case (id, text) =>
+      val n = text.length.toLong
+      if (id % 2 == 0) (id, 1L, 400L, n, 1000000L * 400 / n) else (id, 0L, 0L, n, 0L)
+    })
     // real corpus: coverage must be a true union (never exceeds the doc),
     // every span carries at least one full window, and document-level
     // exact dups are fully covered at position level (cross-operator

@@ -5,19 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one local SparkSession per JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = graft.sources.SpillSafety.tune(SparkSession.builder(), 4, 0.6)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.sources.Session.local(cores = 4, extra = Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> "target/spark-warehouse"))
   val sf: String = "/root/testdata/sf0.001"
   /** The next scale factor beside [[sf]]: a second, different dataset for
     * specs that switch datasets or regenerate one in place. */

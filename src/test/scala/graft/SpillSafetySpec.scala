@@ -37,6 +37,9 @@ class SpillSafetySpec extends AnyFunSuite {
     // is live on its context
     assert(TestSpark.spark.sparkContext.getConf.get(key) ==
       SpillSafety.CodegenCacheEntries.toString)
+    // ... and live in Spark's cache, read the way the factory checks it
+    assert(graft.sources.Session.codegenCacheCapacity.contains(
+      SpillSafety.CodegenCacheEntries.toLong))
   }
 
   test("artifact row-group bound clamps to the parquet default at production heap/slot ratios") {

@@ -769,6 +769,31 @@ class StreamingSpec extends SparkSpec {
       s"superseded staged base ${base1.get} was left on disk")
   }
 
+  test("stream_incremental_eq: a second call replays the shared events staging, writing none") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // graft dirs under java.io.tmpdir holding a Spark write's output
+    // (part-* files); a staging's per-query link views hold only its
+    // batch_* files
+    def written(): Set[String] = {
+      val dirs = Files.list(Paths.get(sys.props("java.io.tmpdir")))
+      try dirs.iterator().asScala.filter { d =>
+          d.getFileName.toString.startsWith("graft_") &&
+            Option(d.toFile.listFiles()).exists(_.exists { f =>
+              f.getName.startsWith("part-") && f.getName.endsWith(".parquet")
+            })
+        }.map(_.toString).toSet
+      finally dirs.close()
+    }
+    val run = SparkEntry.queries("stream_incremental_eq")
+    val first = run(spark, sf).collect()
+    val before = written()
+    val second = run(spark, sf).collect()
+    val fresh = written() -- before
+    assert(fresh.isEmpty, s"the second call wrote a new staging: $fresh")
+    assert(first.nonEmpty && second.sameElements(first))
+  }
+
   test("bridge drive: a throwing drive stops its query and restores the scoped confs") {
     // a feed that stages and starts cleanly but fails inside the first
     // micro-batch: a null user_id cannot decode into Event's Long
