@@ -1,33 +1,41 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.plans.Tokens
 
 /** Column-level text primitives shared by the word-count parity query and the
   * LLM-pipeline operators (dedup / text analysis).
   *
   * Tokenization reproduces the reference's `wc::map`
   * (/root/reference/src/mr/function.rs:9-16): strip non-word, non-space
-  * characters with a regex, split on whitespace, drop empty tokens, and do
-  * NOT lowercase. The `(?U)` flag makes Java's `\w` Unicode-aware to match
-  * Rust-regex semantics (SURVEY.md §7.4-1).
+  * characters, split on whitespace, drop empty tokens, and do NOT
+  * lowercase. There is one tokenizer kernel, [[graft.plans.TokensAlgo]]:
+  * [[tokens]] runs it as a Catalyst expression and
+  * `graft.mr.MapReduce.wordCountMap` runs it on a JVM string, so the
+  * Column and typed paths share one definition of `wc::map`. The regex
+  * `s.replaceAll("(?U)[^\\w\\s]+", "").split("\\s+").filter(_.nonEmpty)`
+  * is kept only as that kernel's definition (and as the test oracle); the
+  * `(?U)` flag makes Java's `\w` Unicode-aware to match Rust-regex
+  * semantics (SURVEY.md §7.4-1).
   *
   * Everything here is a pure `Column` expression — codegen'd by Tungsten,
   * no Scala UDF in the hot path, so whole-stage codegen spans stay wide.
   */
 object TextFunctions {
 
-  /** Tokens of `c` after punctuation strip; empty tokens removed.
-    * Array stays row-local — no explode, no shuffle. */
-  def tokens(c: Column): Column =
-    filter(split(regexp_replace(c, "(?U)[^\\w\\s]+", ""), "\\s+"),
-      t => length(t) > lit(0))
+  /** Tokens of `c` after punctuation strip; empty tokens removed
+    * (`array<string>`, no null elements; null for a null input). Array
+    * stays row-local — no explode, no shuffle. */
+  def tokens(c: Column): Column = column(Tokens(expression(c)))
 
   /** Word n-gram shingles over a MATERIALIZED token-array column ("a b c"
     * for n=3; slice is 1-based). `toks` must be a plain column reference:
     * the slice inside the lambda evaluates its array argument once per
     * shingle index, so passing the raw `tokens(text)` expression here
-    * would re-run the regex tokenizer O(len) times per row. */
+    * would re-run the tokenizer O(len) times per row. */
   def wordShinglesFromTokens(toks: Column, n: Int): Column =
     when(size(toks) < n, array().cast("array<string>"))
       .otherwise(transform(
@@ -45,34 +53,6 @@ object TextFunctions {
       .otherwise(transform(
         sequence(lit(1), length(c) - lit(n - 1)),
         i => c.substr(i, lit(n))))
-
-  /** Character codes of a string as array<long> — materialize this ONCE
-    * per row (as its own projection) and window over it with O(1)
-    * element_at; per-position substr would re-scan the UTF-8 string from
-    * the start each time. */
-  def asciiCodes(c: Column): Column =
-    transform(split(c, ""), ch => ascii(ch).cast("long"))
-
-  /** Base-31 polynomial rolling hashes of every char n-gram over a
-    * MATERIALIZED asciiCodes column: h(i) = Σ_j codes[i+j] * 31^(n-1-j).
-    * Pure integer arithmetic — identical on both engines, far cheaper
-    * than hashing materialized substrings, and set ops over longs beat
-    * set ops over strings. Base-31 collisions are identical on both
-    * engines, so oracle comparisons stay exact.
-    *
-    * CAUTION (measured, not theoretical): never follow this with a
-    * `.filter` on a derived column like size(g) — Catalyst pushes the
-    * filter below the projection by substituting the whole expression
-    * chain, turning an O(len) pipeline into O(len²) per row. Pre-filter
-    * on the base column (length(text) >= n) instead. */
-  def charNGramHashesFromCodes(codes: Column, n: Int): Column =
-    when(size(codes) < n, array().cast("array<long>"))
-      .otherwise(transform(
-        sequence(lit(1), size(codes) - lit(n - 1)),
-        i => (0 until n).map { j =>
-          val p = math.pow(31, n - 1 - j).toLong
-          element_at(codes, i + lit(j)) * lit(p)
-        }.reduce(_ + _)))
 
   /** 32-bit base hash of a string: unsigned value of the first 8 hex chars
     * of its md5. Engine-portable — DuckDB computes the identical value via

@@ -2,6 +2,7 @@ package graft.mr
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference engine's generic map/reduce UDF surface (SURVEY.md §2.2),
   * re-expressed as typed Dataset combinators.
@@ -79,12 +80,12 @@ object MapReduce {
   }
 
   /** Word count through the generic surface — the reference's only
-    * registered (map, reduce) pair (/root/reference/src/mr/function.rs:4-21),
-    * tokenization semantics identical to graft.functions.TextFunctions. */
-  def wordCountMap(line: String): Seq[(String, Long)] =
-    line.replaceAll("(?U)[^\\w\\s]+", "")
-      .split("\\s+").iterator
-      .filter(_.nonEmpty)
-      .map(w => (w, 1L))
-      .toSeq
+    * registered (map, reduce) pair (/root/reference/src/mr/function.rs:4-21).
+    * It runs the same tokenizer kernel as graft.functions.TextFunctions.tokens;
+    * a lone surrogate encodes as `?`, which the kernel drops like the
+    * definition drops the surrogate. */
+  def wordCountMap(line: String): Seq[(String, Long)] = {
+    val toks = graft.plans.TokensAlgo.compute(UTF8String.fromString(line))
+    (0 until toks.numElements()).map(i => (toks.getUTF8String(i).toString, 1L))
+  }
 }

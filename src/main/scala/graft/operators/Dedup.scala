@@ -1912,12 +1912,12 @@ object Dedup {
     * pipeline, and within one policy the plan referenced it three times
     * (recurrence aggregate, join-back side, reassembly accounting) —
     * measured: 3 parquet scans + 7 reflow-transform evaluations per
-    * query, ~16 CPU-s each at sf0.1, the lambda-heavy tokenizer
-    * defeating exchange reuse (the scoredDocs/docBucketCounts
-    * precedent). Persisted once per (session, dataset), the pipeline
-    * runs once; Bench bills the build as `chain_line_frames`. The
-    * frames are corpus-linear ((doc_id, lines) + the exploded
-    * (doc_id, pos, line, fp)); persist() spills past memory. */
+    * query, ~16 CPU-s each at sf0.1, with exchange reuse deduplicating
+    * none of them (the scoredDocs/docBucketCounts precedent). Persisted
+    * once per (session, dataset), the pipeline runs once; Bench bills
+    * the build as `chain_line_frames`. The frames are corpus-linear
+    * ((doc_id, lines) + the exploded (doc_id, pos, line, fp)); persist()
+    * spills past memory. */
   private def linedFramesMemo(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val (l, e) = linedFrames(Tables.documentsKernelWide(spark, dir)

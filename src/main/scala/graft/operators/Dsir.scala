@@ -65,10 +65,12 @@ object Dsir {
 
   private val HexDenom = "16777217.0" // 16^6 + 1: md5-derived uniform in (0,1)
 
-  /** doc_id, lang, grams (unigrams ++ bigram shingles) — row-local. */
+  /** doc_id, lang, grams (unigrams ++ bigram shingles) — row-local, over
+    * the kernel-wide scan: tokenizing, shingling and bucketing every
+    * document is the cost of the counts stage, not the scan. */
   private def gramsDf(spark: SparkSession, dir: String): DataFrame = {
     val tk = TextFunctions.tokens(col("text"))
-    Tables.documents(spark, dir)
+    Tables.documentsKernelWide(spark, dir)
       .select(col("doc_id"), col("lang"), tk.as("tk"))
       .select(col("doc_id"), col("lang"),
         concat(col("tk"), TextFunctions.wordShinglesFromTokens(col("tk"), 2))
@@ -84,9 +86,9 @@ object Dsir {
     * their totals, and the per-doc weights), and exchange reuse cannot
     * deduplicate them structurally (the roster's left join pushes an
     * IsNotNull(doc_id) into one branch, breaking canonical equality; the
-    * lambda-heavy tokenizer defeats AQE's canonicalized matching for the
-    * rest — observed, not hypothesized: the unmemoized plan ran the gram
-    * pass three times). The persisted aggregate is ≤ |docs|·min(Buckets,
+    * rest did not match under AQE's canonicalization either — observed,
+    * not hypothesized: the unmemoized plan ran the gram pass three
+    * times). The persisted aggregate is ≤ |docs|·min(Buckets,
     * doc_len) narrow rows — orders of magnitude smaller than the corpus —
     * and persist() spills to disk, so it is the cheap side of the
     * recompute-vs-materialize tradeoff at any scale. */

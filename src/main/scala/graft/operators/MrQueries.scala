@@ -8,7 +8,8 @@ import graft.sources.Tables
 
 /** The generic map/reduce surface (SURVEY.md §2.2) exercised as queries:
   * word count re-expressed through both reduce paths, cross-checked against
-  * the DataFrame version by sharing its DuckDB oracle.
+  * the DataFrame version by sharing its DuckDB oracle. The map side reads
+  * the kernel-wide documents scan, like the DataFrame word count.
   */
 object MrQueries {
 
@@ -16,7 +17,7 @@ object MrQueries {
     * exact execution shape (whole group materialized per key). */
   def mrWordcount(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val text = Tables.documents(spark, dir).select("text").as[String]
+    val text = Tables.documentsKernelWide(spark, dir).select("text").as[String]
     MapReduce.mapReduce(
       text,
       MapReduce.wordCountMap,
@@ -29,7 +30,7 @@ object MrQueries {
     * the scale-correct version for associative reductions. */
   def mrWordcountCombine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val text = Tables.documents(spark, dir).select("text").as[String]
+    val text = Tables.documentsKernelWide(spark, dir).select("text").as[String]
     MapReduce.mapReduceCombine[String, String, Long, Long, Long](
       text,
       MapReduce.wordCountMap,
@@ -45,7 +46,7 @@ object MrQueries {
     * comparison. */
   def mrInvertedIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
+    val docs = Tables.documentsKernelWide(spark, dir)
       .select("doc_id", "text").as[(Long, String)]
     MapReduce.mapReduce(
       docs,

@@ -10,8 +10,9 @@ import graft.sources.Tables
   *
   * Reproduces the full reference dataflow
   * (/root/reference/src/mr/worker.rs + /root/reference/src/mr/function.rs):
-  *   O1 scan → O2/O3 flatMap tokenize (regex strip, whitespace split, no
-  *   lowercasing) → O4/O5/O6 hash-partition shuffle → O7-O10 group + count
+  *   O1 scan → O2/O3 flatMap tokenize (strip, whitespace split, no
+  *   lowercasing: one kernel, graft.plans.Tokens) → O4/O5/O6
+  *   hash-partition shuffle → O7-O10 group + count
   *   → O12 global sort.
   * In Spark this is scan → Generate(explode) → partial HashAggregate →
   * ShuffleExchange(HashPartitioning) → final HashAggregate → Sort — the
@@ -26,17 +27,21 @@ import graft.sources.Tables
   */
 object WordCount {
 
+  /** The map stage (tokenize, explode, partial count) reads the
+    * kernel-wide documents scan, so a one-file corpus still maps on every
+    * core (Tables.floorParallelism). */
   def wordcount(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
+    Tables.documentsKernelWide(spark, dir)
       .select(explode(TextFunctions.tokens(col("text"))).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
   /** Word count restricted by a pushed-down predicate — demonstrates that
-    * the filter reaches the parquet scan (PushedFilters) before tokenizing. */
+    * the filter reaches the parquet scan (PushedFilters) before tokenizing;
+    * Catalyst pushes it below the kernel-wide repartition. */
   def wordcountFiltered(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
+    Tables.documentsKernelWide(spark, dir)
       .filter(col("lang") === "en")
       .select(explode(TextFunctions.tokens(col("text"))).as("word"))
       .groupBy("word")

@@ -3,9 +3,10 @@ package graft.plans
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge.{column, expression, AbstractType}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler scalar kernel, matching DuckDB's
@@ -173,6 +174,141 @@ case class RollingWindowHashes(child: Expression, k: Int)
       s"graft.plans.RollingWindowHashAlgo.compute($a, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): RollingWindowHashes =
+    copy(child = newChild)
+}
+
+/** The word-count tokenizer (the reference's `wc::map`) as one linear
+  * pass over a string's UTF-8 bytes. Its definition is the regex chain
+  * `s.replaceAll("(?U)[^\\w\\s]+", "").split("\\s+").filter(_.nonEmpty)`:
+  *  - a code point in neither `(?U)\w` nor `(?U)\s` is deleted, so
+  *    fragments around it merge (`a.b` → `ab`);
+  *  - tokens split only on Java's ASCII `\s` (space, `\t`, `\n`, `\x0B`,
+  *    `\f`, `\r`): a non-ASCII space such as U+00A0 stays inside its token;
+  *  - bytes that are not well-formed UTF-8 decode to U+FFFD under
+  *    `toString`, which is neither class, so they are deleted too.
+  * An ASCII byte is classified by table; a non-ASCII code point by the
+  * same `Character` predicates `java.util.regex` uses for the `(?U)`
+  * classes. Kept bytes are copied once into one buffer the tokens slice,
+  * with no `String` decode or regex state per row. */
+object TokensAlgo {
+  private final val Drop: Byte = 0
+  private final val Keep: Byte = 1
+  private final val Split: Byte = 2
+
+  private final val WordTypes: Int =
+    (1 << Character.NON_SPACING_MARK) | (1 << Character.ENCLOSING_MARK) |
+      (1 << Character.COMBINING_SPACING_MARK) | (1 << Character.DECIMAL_DIGIT_NUMBER) |
+      (1 << Character.CONNECTOR_PUNCTUATION)
+  private final val SpaceTypes: Int =
+    (1 << Character.SPACE_SEPARATOR) | (1 << Character.LINE_SEPARATOR) |
+      (1 << Character.PARAGRAPH_SEPARATOR)
+
+  /** `(?U)\w` or `(?U)\s` outside U+0009–U+000D: java.util.regex's
+    * UNICODE_CHARACTER_CLASS definitions (Alphabetic, Mn/Me/Mc/Nd/Pc,
+    * Join_Control; White_Space). */
+  private def kept(cp: Int): Boolean = {
+    val t = Character.getType(cp)
+    Character.isAlphabetic(cp) || ((WordTypes >> t) & 1) != 0 || cp == 0x200C || cp == 0x200D ||
+      ((SpaceTypes >> t) & 1) != 0 || cp == 0x85
+  }
+
+  /** Class of each ASCII byte: ASCII `\s` splits, the rest is kept or
+    * dropped by [[kept]] (so `[A-Za-z0-9_]` is kept). */
+  private val ascii: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    if (c == ' ' || (c >= 0x09 && c <= 0x0D)) Split
+    else if (kept(c)) Keep
+    else Drop
+  }
+
+  def compute(s: UTF8String): ArrayData = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    val buf = new Array[Byte](n)
+    // token t is buf[ends(t - 1), ends(t)): kept bytes are written only
+    // inside tokens, so each token starts where the previous one ended
+    var ends = new Array[Int](16)
+    var nTok = 0
+    var w = 0
+    var i = 0
+    while (i <= n) {
+      val b = if (i < n) Platform.getByte(base, off + i) & 0xFF else ' '.toInt
+      var len = 1
+      var keep = false
+      if (b < 0x80) {
+        val c = ascii(b)
+        keep = c == Keep
+        if (c == Split && w > (if (nTok == 0) 0 else ends(nTok - 1))) {
+          if (nTok == ends.length) ends = java.util.Arrays.copyOf(ends, nTok * 2)
+          ends(nTok) = w
+          nTok += 1
+        }
+      } else {
+        // a well-formed sequence is kept or dropped whole; any other byte
+        // is dropped alone (as its U+FFFD would be), and since it is never
+        // an ASCII byte or a lead byte, nothing after it is lost
+        val cp = codePointAt(base, off, i, n, b)
+        if (cp >= 0) {
+          len = if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4
+          keep = kept(cp)
+        }
+      }
+      if (keep) {
+        var k = 0
+        while (k < len) { buf(w) = Platform.getByte(base, off + i + k); w += 1; k += 1 }
+      }
+      i += len
+    }
+    val out = new Array[Any](nTok)
+    var t = 0
+    while (t < nTok) {
+      val from = if (t == 0) 0 else ends(t - 1)
+      out(t) = UTF8String.fromBytes(buf, from, ends(t) - from)
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The code point of the well-formed UTF-8 sequence led by byte `b` at
+    * `i`, or -1 (truncated, overlong, an encoded surrogate, or past
+    * U+10FFFF: what the JDK's decoder reports as malformed). */
+  private def codePointAt(base: AnyRef, off: Long, i: Int, n: Int, b: Int): Int = {
+    def at(j: Int): Int = if (j < n) Platform.getByte(base, off + j) & 0xFF else 0
+    def cont(j: Int): Boolean = (at(j) & 0xC0) == 0x80
+    if (b >= 0xC2 && b <= 0xDF) {
+      if (cont(i + 1)) ((b & 0x1F) << 6) | (at(i + 1) & 0x3F) else -1
+    } else if (b >= 0xE0 && b <= 0xEF) {
+      if (!cont(i + 1) || !cont(i + 2)) -1
+      else {
+        val cp = ((b & 0x0F) << 12) | ((at(i + 1) & 0x3F) << 6) | (at(i + 2) & 0x3F)
+        if (cp < 0x800 || (cp >= 0xD800 && cp <= 0xDFFF)) -1 else cp
+      }
+    } else if (b >= 0xF0 && b <= 0xF4) {
+      if (!cont(i + 1) || !cont(i + 2) || !cont(i + 3)) -1
+      else {
+        val cp = ((b & 0x07) << 18) | ((at(i + 1) & 0x3F) << 12) |
+          ((at(i + 2) & 0x3F) << 6) | (at(i + 3) & 0x3F)
+        if (cp < 0x10000 || cp > 0x10FFFF) -1 else cp
+      }
+    } else -1
+  }
+}
+
+/** The tokenizer as a Catalyst expression: `array<string>` with no null
+  * elements; a null input gives a null result. */
+case class Tokens(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def inputTypes: Seq[AbstractType] = Seq(StringType)
+
+  override def nullSafeEval(a: Any): Any = TokensAlgo.compute(a.asInstanceOf[UTF8String])
+
+  // one static call inside whole-stage codegen (the RollingWindowHashes pattern)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.plans.TokensAlgo.compute($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): Tokens =
     copy(child = newChild)
 }
 

@@ -19,8 +19,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of the dataset at `dir`. Its schema is inferred once
+    * per (session, dataset identity) through [[Stages]] (stage
+    * `schema/<name>`), and every later read passes it in: inference reads
+    * the parquet footers in a one-task Spark job, which each read would
+    * otherwise rerun. A regenerated dataset changes its identity and is
+    * inferred again; [[Stages.clear]] drops the schemas with every other
+    * stage. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = Stages(spark, s"schema/$name", dir)(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
@@ -69,7 +79,14 @@ object Tables {
     * passes through with NO added exchange, and hash partitioning (not
     * round-robin) avoids the retry-determinism sort on wide text rows.
     * Row-local kernels are partitioning-invariant, so results are
-    * unchanged under the floor. */
+    * unchanged under the floor.
+    *
+    * Every consumer reads through [[documentsKernelWide]]: the word-count
+    * family's map stages (`wordcount`, `wordcount_filtered`,
+    * `mr_wordcount`, `mr_wordcount_combine`, `mr_inverted_index`), DSIR's
+    * gram pass, Dedup's per-doc kernels (minhash signatures, shingle
+    * and n-gram gram sets, decontamination grams, substring window
+    * hashes, line frames) and TextAnalysis's doc fingerprints. */
   def floorParallelism(df: DataFrame, key: String): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 < target) df.repartition(target, col(key))
@@ -77,8 +94,8 @@ object Tables {
   }
 
   /** The documents scan floored to kernel width — for the CPU-heavy
-    * per-doc stages (gram sets, minhash signatures, window hashes,
-    * fingerprints); use plain [[documents]] wherever the work is
+    * per-doc stages (tokenizing, gram sets, minhash signatures, window
+    * hashes, fingerprints); use plain [[documents]] wherever the work is
     * scan-bound rather than kernel-bound. */
   def documentsKernelWide(spark: SparkSession, dir: String): DataFrame =
     floorParallelism(documents(spark, dir), "doc_id")

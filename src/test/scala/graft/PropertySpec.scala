@@ -9,8 +9,8 @@ import graft.mr.MapReduce
 import graft.operators.Dedup
 
 /** Property-style tests (SURVEY.md §5-3): scalacheck generators drive a
-  * batch of inputs through the Column-expression tokenizer and compare
-  * against the plain-Scala reference implementation row by row. */
+  * batch of inputs through the Column-expression and typed tokenizers and
+  * compare them against the regex reference definition row by row. */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
@@ -26,15 +26,78 @@ class PropertySpec extends SparkSpec {
   private def samples(n: Int): Seq[String] =
     (0 until n).flatMap(i => lineGen.apply(Gen.Parameters.default, Seed(i.toLong)))
 
+  /** The tokenizer's definition, the reference's `wc::map` as a regex
+    * chain: the oracle both tokenizer paths are checked against. It lives
+    * only here, so the checks never compare the kernel with itself. */
+  private def referenceTokens(s: String): Seq[String] =
+    s.replaceAll("(?U)[^\\w\\s]+", "").split("\\s+").filter(_.nonEmpty).toSeq
+
+  /** Both tokenizer paths (the Column expression and the typed map) equal
+    * [[referenceTokens]] on every line. */
+  private def assertTokenizersMatchReference(data: Seq[String]): Unit = {
+    val got = data.toDF("text")
+      .select(TextFunctions.tokens(col("text")).as("t"))
+      .as[Seq[String]].collect()
+    assert(got.length == data.length)
+    data.zip(got).zipWithIndex.foreach { case ((s, g), i) =>
+      val want = referenceTokens(s)
+      def show(x: String) = x.codePoints().toArray.map(c => f"U+$c%04X").mkString(" ")
+      assert(g == want, s"Column path, line $i: ${show(s)}")
+      val typed = MapReduce.wordCountMap(s)
+      assert(typed.map(_._1) == want && typed.forall(_._2 == 1L), s"typed path, line $i: ${show(s)}")
+    }
+  }
+
   test("property: Column tokenizer == Scala reference tokenizer on 300 random lines") {
     val data = samples(300)
     val got = data.toDF("text")
       .select(TextFunctions.tokens(col("text")).as("t"))
       .as[Seq[String]].collect()
-    val want = data.map(s => MapReduce.wordCountMap(s).map(_._1))
+    val want = data.map(referenceTokens)
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
       assert(g == w, s"line $i: ${data(i)}")
     }
+    assertTokenizersMatchReference(data)
+  }
+
+  test("property: both tokenizer paths == the regex definition on every BMP code point") {
+    val cps = (0 until 0x10000).map(cp => new String(Character.toChars(cp)))
+    assertTokenizersMatchReference(cps ++ cps.map(c => s"a${c}b"))
+  }
+
+  test("property: both tokenizer paths == the regex definition on mixed-script lines") {
+    // non-ASCII spaces (kept inside tokens), U+001C-U+001F (deleted),
+    // combining marks, ZWNJ/ZWJ, non-Latin digits, supplementary letters
+    // and emoji, and lone surrogates
+    val odd = Seq("\u00A0", "\u2003", "\u3000", "\u0085", "\u001C", "\u001D", "\u001E",
+      "\u001F", "\u0301", "e\u0301", "\u20DD", "\u200C", "\u200D", "\u0663", "\u0967",
+      "\uFF11", "\uD835\uDC00", "\uD801\uDC37", "\uD83D\uDE00", "\uD83D\uDC4D\uD83C\uDFFD",
+      "\uD800", "\uDC00", "\uFEFF", "\u2028", "\u00AD", "\u203F", "_", "-", ".", "\u00BF")
+    val pieceGen = Gen.frequency(
+      3 -> Gen.oneOf(odd), 2 -> wordGen, 2 -> sepGen, 1 -> Gen.oneOf("\t", "\n", "\r", "\u000B", "\f"))
+    val mixedGen = Gen.choose(0, 16).flatMap(n => Gen.listOfN(n, pieceGen)).map(_.mkString)
+    val data = (0 until 500).flatMap(i => mixedGen.apply(Gen.Parameters.default, Seed(i.toLong)))
+    assert(data.exists(_.contains("\u00A0")) && data.exists(_.contains("\uD800")))
+    assertTokenizersMatchReference(data)
+  }
+
+  test("property: the tokenizer kernel drops malformed UTF-8 bytes as their U+FFFD would be") {
+    // strings Spark holds as raw bytes (a binary cast) need not be valid
+    // UTF-8: the definition runs on their `toString` decoding
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(7)
+    val alphabet = "a b.\u00e9\u00A0\u20ac\uD83D\uDE00".getBytes("UTF-8") ++
+      Array(0x80, 0xBF, 0xC0, 0xC1, 0xE0, 0xED, 0xF4, 0xF5, 0xFF).map(_.toByte)
+    val lines = Seq.fill(2000)(Array.fill(rnd.nextInt(24))(alphabet(rnd.nextInt(alphabet.length))))
+    lines.foreach { bytes =>
+      val u = UTF8String.fromBytes(bytes)
+      val got = graft.plans.TokensAlgo.compute(u).toObjectArray(
+        org.apache.spark.sql.types.StringType).map(_.toString).toSeq
+      assert(got == referenceTokens(u.toString), s"bytes ${bytes.map(b => f"${b & 0xFF}%02x").mkString(" ")}")
+    }
+    val viaCast = lines.toDF("b").select(TextFunctions.tokens(col("b").cast("string")).as("t"))
+      .as[Seq[String]].collect().toSeq
+    assert(viaCast == lines.map(b => referenceTokens(UTF8String.fromBytes(b).toString)))
   }
 
   test("property: sum of wordcount == total token count on random corpus") {
