@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -16,6 +18,19 @@ package graft
   * slowest entries first up to a hard character budget (failures always
   * included) plus an `omitted` count; the complete per-query wall/cpu/gc
   * detail goes to BENCH_DETAIL.json in the working directory.
+  *
+  * Billing of shared stages: a stage several queries share is built by
+  * whichever of them runs first, so without care its whole build cost
+  * lands on that query and per-query numbers aren't comparable across
+  * rounds or subsets. The operator code labels each such stage where it
+  * registers it in [[graft.sources.Stages]]; during pass 1 Bench meters
+  * the registry, times every build of a labeled stage (plus one
+  * `count()` when it is a DataFrame, which is what materializes it) as
+  * its own `chain_<label>` entry, and subtracts it from the entry that
+  * triggered it. A build nested in another labeled build is billed to
+  * its own chain only. So a subset run (`SPARK_GRAFT_ONLY`) reports
+  * exactly the chains its queries build, and `total` still counts every
+  * second once.
   */
 object Bench {
 
@@ -50,8 +65,75 @@ object Bench {
   private def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  /** One entry's figures. A field that failed (wall) or that the
+    * platform can't read (cpu, jit) is −1, and stays −1 under + and −. */
   final case class Timing(name: String, wallS: Double, cpuS: Double, gcS: Double,
-      jitS: Double, compiles: Long)
+      jitS: Double, compiles: Long) {
+    def +(o: Timing): Timing = zip(o, 1)
+    def -(o: Timing): Timing = zip(o, -1)
+    private def zip(o: Timing, sign: Int): Timing = {
+      def f(a: Double, b: Double) = if (a < 0 || b < 0) -1.0 else a + sign * b
+      Timing(name, f(wallS, o.wallS), f(cpuS, o.cpuS), f(gcS, o.gcS), f(jitS, o.jitS),
+        compiles + sign * o.compiles)
+    }
+  }
+
+  /** Times Bench's entries and, while it meters [[graft.sources.Stages]],
+    * the labeled stage builds they trigger (see the billing note above).
+    * Bench runs one entry at a time and every labeled stage is built on
+    * the thread that drives the entry, so the nesting is a plain stack. */
+  private final class Billing extends graft.sources.Stages.Meter {
+    /** `chain_<label>` entries in build order; a label built twice (two
+      * registry entries, or a retry) sums into one entry. */
+    val chains = scala.collection.mutable.LinkedHashMap.empty[String, Timing]
+    /** Gross figures of the builds finished inside each open section,
+      * innermost first. */
+    private var nested = List.empty[Timing]
+
+    /** `body`'s figures less those of the builds it triggered; a throwing
+      * body gets the −1 wall sentinel, so a failure is unmistakable in
+      * the JSON, not billed a normal-looking duration. */
+    def timed[T](label: String)(body: => T): (Timing, Either[Throwable, T]) = {
+      val t0 = System.nanoTime(); val c0 = cpuNanos; val g0 = gcMillis
+      val j0 = jitMillis; val k0 = codegenCompiles
+      nested = Timing(label, 0, 0, 0, 0, 0) :: nested
+      val r = try Right(body) catch { case e: Throwable => Left(e) }
+      val gross = Timing(label, (System.nanoTime() - t0) / 1e9,
+        if (c0 >= 0) (cpuNanos - c0) / 1e9 else -1.0, (gcMillis - g0) / 1e3,
+        if (j0 >= 0) (jitMillis - j0) / 1e3 else -1.0, codegenCompiles - k0)
+      val net = gross - nested.head
+      nested = nested.tail match {
+        case outer :: rest => (outer + gross) :: rest
+        case Nil => Nil
+      }
+      r.left.foreach(e => System.err.println(s"[bench] $label failed: ${e.getMessage}"))
+      (if (r.isLeft) net.copy(wallS = -1.0) else net, r)
+    }
+
+    def apply[T](label: String)(build: => T): T = {
+      val (t, r) = timed(s"chain_$label") {
+        val v = build
+        v match { case df: Dataset[_] => df.count(); case _ => () }
+        v
+      }
+      chains(t.name) = chains.get(t.name).fold(t)(_ + t)
+      r.fold(e => throw e, identity)
+    }
+  }
+
+  /** One timed pass of `queries`, each driven through the `noop` sink:
+    * (chain entries, query entries). Only a `metered` pass bills labeled
+    * stage builds to chain entries; otherwise the first list is empty. */
+  private[graft] def pass(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      metered: Boolean): (Seq[Timing], Seq[Timing]) = {
+    val billing = new Billing
+    def run() = queries.map { case (name, fn) =>
+      billing.timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._1
+    }
+    val results = if (metered) graft.sources.Stages.metered(billing)(run()) else run()
+    (billing.chains.values.toSeq, results)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -63,95 +145,12 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val names = selected.map(_._1).toSet
-
-    def timed(label: String)(body: => Unit): Timing = {
-      val t0 = System.nanoTime(); val c0 = cpuNanos; val g0 = gcMillis
-      val j0 = jitMillis; val k0 = codegenCompiles
-      val ok =
-        try { body; true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          false
-        }
-      // -1 sentinel: a throwing query must be unmistakable in the JSON,
-      // not silently billed a normal-looking duration
-      val wall = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      Timing(label, wall,
-        if (c0 >= 0) (cpuNanos - c0) / 1e9 else -1.0, (gcMillis - g0) / 1e3,
-        if (j0 >= 0) (jitMillis - j0) / 1e3 else -1.0, codegenCompiles - k0)
-    }
 
     val gc0 = gcMillis
     val cpu0 = cpuNanos
-    // Shared-stage builds, billed explicitly: the dedup chain, ANN pair,
-    // and IVF index stages are memoized across queries, so without this
-    // the whole build cost lands on whichever consumer runs first
-    // (alphabetical order) and per-query numbers aren't comparable across
-    // rounds. Each build below is timed as its own `chain_*` entry (still
-    // part of `total`); the per-query entries then measure marginal cost.
-    val dedupChainConsumers = Set(
-      "dedup_minhash_lsh", "dedup_verify_candidates", "dedup_clusters",
-      "dedup_apply", "minhash_est_vs_exact", "dedup_editdist", "dedup_jaro",
-      "dedup_triangles", "dedup_cluster_sizes", "dedup_incremental",
-      "dedup_bfs_levels", "lsh_exact_eval")
-    val chainDefs: Seq[(String, Set[String], () => Unit)] = Seq(
-      ("chain_dedup_sigs", dedupChainConsumers + "lsh_recall_audit",
-        () => { operators.Dedup.cachedSignatures(spark, sfDir).count(); () }),
-      ("chain_shingle_grams", dedupChainConsumers ++
-          Set("dedup_setsim_join", "dedup_setsim_incr"),
-        () => { operators.Dedup.shingleGramSets(spark, sfDir).count(); () }),
-      ("chain_dedup_verified", dedupChainConsumers,
-        () => { operators.Dedup.verifiedCandidates(spark, sfDir).count(); () }),
-      ("chain_setsim_index", Set("dedup_setsim_incr", "stream_setsim_dedup_eq"),
-        () => { operators.Dedup.setsimIndexWarm(spark, sfDir); () }),
-      ("chain_setsim_pairs", Set("dedup_setsim_join", "lsh_exact_eval"),
-        () => { operators.Dedup.setsimPairs(spark, sfDir).count(); () }),
-      ("chain_dedup_clusters", Set("dedup_clusters", "dedup_apply", "dedup_cluster_sizes"),
-        () => { operators.Dedup.clusterLabels(spark, sfDir).count(); () }),
-      ("chain_ann_pairs", Set("ann_lsh_pairs", "dedup_embedding"),
-        () => { operators.Similarity.scoredLshPairs(spark, sfDir).count(); () }),
-      ("chain_ivf_index", Set("ivf_assign", "ivf_search", "ivf_search_filtered",
-          "ivf_pq_search", "ivf_pq_recall", "ivf_filtered_recall", "hybrid_rrf_ivf",
-          "retrieval_rank_eval", "stream_hybrid_rrf_eq"),
-        () => { operators.Similarity.ivfWarmIndex(spark, sfDir); () }),
-      ("chain_ivf_incr", Set("ivf_incremental", "ivf_refresh"),
-        () => { operators.Similarity.ivfIncrWarmIndex(spark, sfDir); () }),
-      ("chain_ivf_refresh", Set("ivf_refresh"),
-        () => { operators.Similarity.ivfRefreshWarm(spark, sfDir); () }),
-      ("chain_stream_ivf", Set("stream_ivf_ingest_eq"),
-        () => { streaming.StreamingBridge.streamIvfIngestWarm(spark, sfDir); () }),
-      ("chain_doc_scores", Set("quality_gate", "quality_score"),
-        () => { operators.TextAnalysis.scoredDocs(spark, sfDir).count(); () }),
-      ("chain_bpe_merges", Set("bpe_learn_merges", "bpe_encode"),
-        () => { operators.TextAnalysis.bpeMergeTable(spark, sfDir); () }),
-      ("chain_bm25_scored", Set("bm25_top_terms", "hybrid_rrf", "hybrid_rrf_filtered", "hybrid_rrf_ivf", "retrieval_rank_eval", "chunk_retrieval", "stream_hybrid_rrf_eq"),
-        () => { operators.TextAnalysis.bm25Scored(spark, sfDir).count(); () }),
-      ("chain_bench_grams", Set("stream_decontaminate_eq"),
-        () => { operators.Dedup.benchGramRoot(spark, sfDir); () }),
-      ("chain_win_index", Set("substring_dedup_incr", "stream_substring_dedup_eq"),
-        () => { operators.Dedup.winIndexWarm(spark, sfDir); () }),
-      ("chain_substring_spans", Set("dedup_substring", "substring_dedup_apply"),
-        () => { operators.Dedup.corpusSpans(spark, sfDir).count(); () }),
-      ("chain_chunk_index", Set("stream_chunk_retrieval_eq", "stream_hybrid_rrf_eq"),
-        () => { operators.TextAnalysis.chunkIndexWarm(spark, sfDir); () }),
-      ("chain_lex_index", Set("stream_hybrid_rrf_eq"),
-        () => { operators.TextAnalysis.lexIndexWarm(spark, sfDir); () }),
-      ("chain_pq_codes", Set("pq_encode", "pq_recon_error", "ivf_pq_search", "ivf_pq_recall"),
-        () => { operators.Similarity.pqCodes(spark, sfDir).count(); () }),
-      ("chain_line_frames", Set("line_dedup_apply", "line_dedup_keep_first"),
-        () => { operators.Dedup.lineFramesWarm(spark, sfDir); () }),
-      ("chain_dsir_counts", Set("dsir_bucket_stats", "dsir_weights",
-          "dsir_sample", "stream_dsir_weights_eq"),
-        () => { operators.Dsir.dsirCountsWarm(spark, sfDir); () }),
-    )
-    val chainResults = chainDefs.collect {
-      case (label, consumers, build) if consumers.exists(names.contains) =>
-        timed(label)(build())
-    }
-    val results = selected.map { case (name, fn) =>
-      timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-    }
+    // pass 1 meters the registry: every labeled stage build becomes its
+    // own chain entry (steady passes hit every stage, so they carry none)
+    val (chainResults, results) = pass(spark, sfDir, selected, metered = true)
     // Optional steady-state passes (SPARK_GRAFT_PASSES=N, N >= 2): rerun
     // the query set N-1 more times in the SAME JVM. Pass 1 pays each
     // plan's one-time cost: Janino compiles its generated classes
@@ -169,11 +168,7 @@ object Bench {
     // it. Pass 1 remains the of-record COLD number.
     val nPasses = sys.env.get("SPARK_GRAFT_PASSES").flatMap(_.toIntOption).getOrElse(1)
     val steadyPasses: Seq[Seq[Timing]] =
-      (2 to nPasses).map { _ =>
-        selected.map { case (name, fn) =>
-          timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-        }
-      }
+      (2 to nPasses).map(_ => pass(spark, sfDir, selected, metered = false)._2)
     val results2 = steadyPasses.headOption
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Executor-loss recovery probe (r19 verdict order #6, stretch): the
   * multi-JVM probe proved the partitioning contracts carry across real
@@ -38,6 +38,17 @@ object ProbeExecutorLoss {
     val resubmittedStages = new java.util.concurrent.atomic.AtomicLong
     val executorsRemoved = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val executorsAdded = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  }
+
+  /** Order-independent content hash + row count of a frame: SUM of a
+    * 56-bit prefix of each row's md5 over its canonical JSON. Column
+    * formatting is engine-deterministic, so two runs of the same Spark
+    * version agree iff the row multisets agree. */
+  def contentHash(df: DataFrame): (String, Long) = {
+    val r = df.selectExpr(
+      "sum(cast(conv(substring(md5(to_json(struct(*))), 1, 14), 16, 10) as decimal(38,0))) as h",
+      "count(1) as n").head()
+    (Option(r.get(0)).map(_.toString).getOrElse("0"), r.getLong(1))
   }
 
   def main(args: Array[String]): Unit = {
@@ -105,8 +116,8 @@ object ProbeExecutorLoss {
         }, "graft-execloss-killer"))
       killer.foreach { t => t.setDaemon(true); t.start() }
       val t0 = System.nanoTime()
-      val root = operators.TextAnalysis.chunkIndexWarm(spark, sfDir)
-      val (h, n) = ProbeSpill.contentHash(spark.read.parquet(s"$root/postings"))
+      val root = operators.TextAnalysis.chunkIndexRoot(spark, sfDir)
+      val (h, n) = contentHash(spark.read.parquet(s"$root/postings"))
       val wall = (System.nanoTime() - t0) / 1e9
       killer.foreach(_.join(10000))
       try org.apache.spark.GraftListenerBridge

@@ -40,10 +40,11 @@ object Dedup {
     * re-ran CC) — ~3× the unique work per bench/verify run. The cached
     * frames are `persist()`ed once; they are tiny (candidate pairs and
     * labels — ints and one double per row, pair count bounded by LSH
-    * bucket occupancy), so retention is cents of memory, not a leak. */
-  private def memoized(spark: SparkSession, dir: String, stage: String)
-      (build: => DataFrame): DataFrame =
-    graft.sources.Stages(spark, s"dedup/$stage", dir)(build)
+    * bucket occupancy), so retention is cents of memory, not a leak.
+    * `chain` labels a stage several queries share (see Stages). */
+  private def memoized(spark: SparkSession, dir: String, stage: String,
+      chain: String = "", conf: String = "")(build: => DataFrame): DataFrame =
+    graft.sources.Stages(spark, s"dedup/$stage", dir, conf, chain)(build)
 
   /** Drop and unpersist every registered stage (test/embedder hook for
     * callers that regenerate datasets or want the storage back). */
@@ -111,7 +112,7 @@ object Dedup {
     * (measured 2.5 s → sub-second for minhash_est_vs_exact at sf0.1).
     * Tiny residency: doc_id + 8 ints per doc. */
   def cachedSignatures(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "sigs") {
+    memoized(spark, dir, "sigs", chain = "dedup_sigs") {
       minhashSignatures(Tables.documentsKernelWide(spark, dir)).persist()
     }
 
@@ -160,7 +161,7 @@ object Dedup {
     * any pair without a per-pair hash set — one sort per document, not
     * per pair. */
   def shingleGramSets(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "shinglegrams") {
+    memoized(spark, dir, "shinglegrams", chain = "shingle_grams") {
       gramSetsOf(Tables.documentsKernelWide(spark, dir)).persist()
     }
 
@@ -181,7 +182,7 @@ object Dedup {
     * consumer (verify query, clusters, apply) reuses the same cached
     * frame instead of re-deriving the LSH→verify prefix. */
   def verifiedCandidates(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "verified") {
+    memoized(spark, dir, "verified", chain = "dedup_verified") {
       val cands = lshPairsFromSigs(cachedSignatures(spark, dir))
       val grams = shingleGramSets(spark, dir)
       cands
@@ -249,14 +250,14 @@ object Dedup {
   /** Memoized exact pair set (UNSORTED — the registered query adds the
     * output sort; lsh_exact_eval aggregates it directly, so the pair
     * set and its verify work compute once however many consumers). The
-    * budget guard literal is baked into the cached plan, so the memo
-    * stage is KEYED by the configured budget — a mid-session knob change
+    * budget guard literal is baked into the cached plan, so the stage's
+    * conf parameter is the configured budget — a mid-session knob change
     * is a memo miss, not a silently stale guard (the artifactVersion
     * lesson); stale entries are pair-set-sized, bounded by the number of
     * distinct budget settings in a session. */
   private[graft] def setsimPairs(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "setsim_pairs_b" +
-        spark.conf.getOption("spark.graft.setsimPairBudget").getOrElse("default")) {
+    memoized(spark, dir, "setsim_pairs", chain = "setsim_pairs",
+        conf = spark.conf.getOption("spark.graft.setsimPairBudget").getOrElse("")) {
       val prefix = setsimBudgetGuarded(spark, setsimPrefixMemo(spark, dir))
       val cands = prefix.as("a")
         .join(prefix.as("b"),
@@ -371,7 +372,7 @@ object Dedup {
     * the corpus-wide self-join. */
   private[graft] def setsimIndexRoot(spark: SparkSession, dir: String): String =
     graft.sources.ArtifactRoots.built(spark, "setsimidx", dir,
-        Seq("df", "prefix", "grams")) { stage =>
+        Seq("df", "prefix", "grams"), chain = "setsim_index") { stage =>
       val gramSets = shingleGramSets(spark, dir).filter(col("doc_id") % 10 =!= 0)
       setsimDf(setsimTok(gramSets)).write.mode("overwrite").parquet(s"$stage/df")
       // the prefix pass reads the df part JUST WRITTEN instead of
@@ -383,11 +384,6 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$stage/prefix")
       gramSets.write.mode("overwrite").parquet(s"$stage/grams")
     }
-
-  /** Public warm-up for Bench: bill the one-time index build separately
-    * from the per-batch screening cost. */
-  def setsimIndexWarm(spark: SparkSession, dir: String): String =
-    setsimIndexRoot(spark, dir)
 
   /** Prefix postings of a persisted arrival gram-set frame under the
     * resident-df order (unseen grams rank rarest, cnt 0). `ag` MUST be
@@ -578,7 +574,7 @@ object Dedup {
     * persisted and materialized — no second cache entry; the memo owns
     * that handle for the process lifetime. */
   def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "clusters") {
+    memoized(spark, dir, "clusters", chain = "dedup_clusters") {
       connectedComponents(
         verifiedCandidates(spark, dir)
           .filter(col("is_dup") === 1)
@@ -1453,7 +1449,8 @@ object Dedup {
     * ingest service rather than every consumer rescanning the split. The
     * set is bounded by benchmark size (MBs while the corpus is TBs). */
   private[graft] def benchGramRoot(spark: SparkSession, dir: String): String =
-    graft.sources.ArtifactRoots.built(spark, "benchgrams", dir, Seq("grams")) { stage =>
+    graft.sources.ArtifactRoots.built(spark, "benchgrams", dir, Seq("grams"),
+        chain = "bench_grams") { stage =>
       gramsFrame(spark, dir).filter(col("doc_id") % 50 === 0)
         .select("gr").distinct()
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/grams")
@@ -1564,7 +1561,7 @@ object Dedup {
     * (registered in graft.sources.Stages: the frame is island-sized, cents of memory;
     * Bench bills the build as `chain_substring_spans`). */
   private[graft] def corpusSpans(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "substring_spans") {
+    memoized(spark, dir, "substring_spans", chain = "substring_spans") {
       spansFrom(dupPosOf(Tables.documentsKernelWide(spark, dir)
         .select(col("doc_id"), col("text")))).persist()
     }
@@ -1686,16 +1683,12 @@ object Dedup {
     * position-level dedup INCREMENTAL: an arriving batch is screened
     * against it instead of re-running the corpus-global audit. */
   private[graft] def winIndexRoot(spark: SparkSession, dir: String): String =
-    graft.sources.ArtifactRoots.built(spark, "winidx", dir, Seq("hashes")) { stage =>
+    graft.sources.ArtifactRoots.built(spark, "winidx", dir, Seq("hashes"),
+        chain = "win_index") { stage =>
       winHashes(Tables.documentsKernelWide(spark, dir).filter(col("doc_id") % 10 =!= 0))
         .select("h").distinct()
         .write.mode("overwrite").parquet(s"$stage/hashes")
     }
-
-  /** Public warm-up for Bench: bill the one-time index build separately
-    * from the per-batch screening cost. */
-  def winIndexWarm(spark: SparkSession, dir: String): String =
-    winIndexRoot(spark, dir)
 
   /** Incremental duplicated-span coverage — dedup_substring as the
     * O(delta) screen a production ingest runs: only the ARRIVING docs
@@ -1922,15 +1915,8 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     val (l, e) = linedFrames(Tables.documentsKernelWide(spark, dir)
       .select(col("doc_id"), col("text")))
-    (memoized(spark, dir, "line_lined") { l.persist() },
-      memoized(spark, dir, "line_ex") { e.persist() })
-  }
-
-  /** Public warm-up for Bench: bill the shared reflow build separately
-    * from the two policies' marginal cost. */
-  def lineFramesWarm(spark: SparkSession, dir: String): Unit = {
-    val (l, e) = linedFramesMemo(spark, dir)
-    l.count(); e.count(); ()
+    (memoized(spark, dir, "line_lined", chain = "line_frames") { l.persist() },
+      memoized(spark, dir, "line_ex", chain = "line_frames") { e.persist() })
   }
 
   def lineDedupApply(spark: SparkSession, dir: String): DataFrame = {

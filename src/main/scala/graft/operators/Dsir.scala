@@ -94,7 +94,7 @@ object Dsir {
     * recompute-vs-materialize tradeoff at any scale. */
   private def docBucketCounts(spark: SparkSession, dir: String): DataFrame = {
     val w = bucketsOf(spark)
-    graft.sources.Stages(spark, "dsir/counts", dir, s"b$w") {
+    graft.sources.Stages(spark, "dsir/counts", dir, s"b$w", chain = "dsir_counts") {
       gramsDf(spark, dir)
         .select(col("doc_id"), col("lang"), explode(col("grams")).as("g"))
         .select(col("doc_id"), col("lang"), bucketOf(col("g"), w).as("bucket"))
@@ -165,7 +165,7 @@ object Dsir {
 
   private def lrRows(spark: SparkSession, dir: String): IndexedSeq[LrRow] = {
     val w = bucketsOf(spark)
-    graft.sources.Stages(spark, LrStage, dir, s"b$w") {
+    graft.sources.Stages(spark, LrStage, dir, s"b$w", chain = "dsir_counts") {
       val counts = docBucketCounts(spark, dir)
         .groupBy("bucket")
         .agg(sum("c").as("raw_g"),
@@ -205,18 +205,6 @@ object Dsir {
       .select(col("doc_id"), col("lang"))
       .join(perDoc, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_grams", "weight_nano"))
-  }
-
-  /** Public warm-up for Bench: force the one-time shared stages — the
-    * memoized per-(doc, bucket) count pass (the corpus tokenization) and
-    * the driver-side model fit — so the build is billed as its own
-    * `chain_dsir_counts` entry instead of landing on whichever dsir
-    * consumer runs first alphabetically (dsir_bucket_stats: 7.9 s cold
-    * vs 0.24 s steady at sf0.1 — almost all of it this build). */
-  def dsirCountsWarm(spark: SparkSession, dir: String): Unit = {
-    docBucketCounts(spark, dir).count()
-    lrRows(spark, dir)
-    ()
   }
 
   /** Per-document DSIR importance weight in nano-nats. */

@@ -110,7 +110,7 @@ object Similarity {
     * one LSH generate+verify per (session, dataset) instead of one per
     * declared query, registered in [[graft.sources.Stages]]. */
   def scoredLshPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Stages(spark, "similarity/lsh_pairs", dir) {
+    graft.sources.Stages(spark, "similarity/lsh_pairs", dir, chain = "ann_pairs") {
       val e = emb(spark, dir)
       val keys = annBandedKeys(e, Bands, RowsPerBand)
       val pairs = keys.as("x")
@@ -207,12 +207,13 @@ object Similarity {
     * Every access re-asserts the reader-side `.complete` check. */
   private def ivfIndexRoot(spark: SparkSession, dir: String): String =
     graft.sources.ArtifactRoots.assertComplete(
-      graft.sources.Stages(spark, "ivf", dir, graft.sources.ArtifactRoots.stageConf(spark))(
+      graft.sources.Stages(spark, "ivf", dir, graft.sources.ArtifactRoots.stageConf(spark),
+          chain = "ivf_index")(
         ivfBuildIndex(spark, dir,
           graft.sources.ArtifactRoots.rootFor(spark, "ivf", dir))))
 
-  /** Public warm-up: force the one-time index build so harnesses (Bench)
-    * can bill it separately from the per-query probe cost. */
+  /** Public warm-up: force the one-time index build so a harness can
+    * time it apart from the per-query probe cost. */
   def ivfWarmIndex(spark: SparkSession, dir: String): String =
     ivfIndexRoot(spark, dir)
 
@@ -685,8 +686,8 @@ object Similarity {
     * half-appended index is never exposed. Centroids intentionally do NOT
     * drift with the delta — re-clustering is the periodic REBUILD
     * operation (ivfBuildIndex), not the ingest path. */
-  private def ivfIncrRoot(spark: SparkSession, dir: String): String =
-    graft.sources.Stages(spark, "similarity/ivf_incr", dir) {
+  private[graft] def ivfIncrRoot(spark: SparkSession, dir: String): String =
+    graft.sources.Stages(spark, "similarity/ivf_incr", dir, chain = "ivf_incr") {
       val root = graft.sources.TempDirs.create("graft_ivf_incr_")
       val isNew = col("vec_id") % 10 === 0
       ivfBuildIndexFrom(emb(spark, dir).filter(!isNew), spark, root)
@@ -696,11 +697,6 @@ object Similarity {
         .mode("append").partitionBy("cell").parquet(s"$root/lists")
       root
     }
-
-  /** Public warm-up for Bench: force the one-time resident build + delta
-    * append so the chain is billed separately from the probe cost. */
-  def ivfIncrWarmIndex(spark: SparkSession, dir: String): String =
-    ivfIncrRoot(spark, dir)
 
   /** Merged assignment read back from the incrementally-maintained index:
     * resident rows keep their build-time cells, delta rows carry the
@@ -735,8 +731,8 @@ object Similarity {
     * oracle recomputes the refreshed centroids from the raw embeddings
     * end to end, so hash-green means refresh-from-stored-stats ≡
     * from-scratch recomputation exactly. */
-  private def ivfRefreshRoot(spark: SparkSession, dir: String): String =
-    graft.sources.Stages(spark, "similarity/ivf_refresh", dir) {
+  private[graft] def ivfRefreshRoot(spark: SparkSession, dir: String): String =
+    graft.sources.Stages(spark, "similarity/ivf_refresh", dir, chain = "ivf_refresh") {
       val stale = ivfIncrRoot(spark, dir)
       val root = graft.sources.TempDirs.create("graft_ivf_refresh_")
       graft.sources.ArtifactRoots.atomicBuild(root, Seq("centroids", "lists")) { stage =>
@@ -758,10 +754,6 @@ object Similarity {
           .mode("overwrite").partitionBy("cell").parquet(s"$stage/lists")
       }
     }
-
-  /** Public warm-up for Bench: bill the refresh build separately. */
-  def ivfRefreshWarm(spark: SparkSession, dir: String): String =
-    ivfRefreshRoot(spark, dir)
 
   /** Recall-delta report of the refreshed index vs the stale one it
     * replaces, against exact ground truth — the instrumented answer to
@@ -1032,7 +1024,7 @@ object Similarity {
       .select(col("vec_id"), col("m"), col("c.cid").as("code"), col("c.d2").as("d2"))
 
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Stages(spark, "similarity/pq_codes", dir)(
+    graft.sources.Stages(spark, "similarity/pq_codes", dir, chain = "pq_codes")(
       pqEncodeWith(emb(spark, dir), pqBooks(spark, dir)).persist())
 
   /** PQ codebook REFRESH — the quantization twin of ivf_refresh, closing

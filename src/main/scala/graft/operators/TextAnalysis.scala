@@ -72,7 +72,7 @@ object TextAnalysis {
     * the cache is the cheap side of the recompute-vs-materialize tradeoff
     * at any scale. */
   private[graft] def scoredDocs(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Stages(spark, "text/scored", dir)(
+    graft.sources.Stages(spark, "text/scored", dir, chain = "doc_scores")(
       scoreDocsFrame(Tables.documents(spark, dir)).persist())
 
   /** The row-local scoring pass over ANY (doc_id, lang, text) frame —
@@ -296,7 +296,8 @@ object TextAnalysis {
     * racing writers, assertComplete gates every reader — are what make a
     * killed build unreadable rather than half-read. */
   private[graft] def bpeIndexRoot(spark: SparkSession, dir: String): String =
-    graft.sources.ArtifactRoots.built(spark, "bpe", dir, Seq("merges")) { stage =>
+    graft.sources.ArtifactRoots.built(spark, "bpe", dir, Seq("merges"),
+        chain = "bpe_merges") { stage =>
       import spark.implicits._
       trainBpeMerges(spark, dir)
         .toDF("step", "left_sym", "right_sym", "pair_count")
@@ -720,7 +721,7 @@ object TextAnalysis {
     * the corpus-wide tokenize + tf/df/dl aggregation would re-execute
     * per branch. */
   private[graft] def bm25Scored(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Stages(spark, "text/bm25", dir)(
+    graft.sources.Stages(spark, "text/bm25", dir, chain = "bm25_scored")(
       bm25ScoredImpl(spark, dir, forceDecimal = false).persist())
 
   /** `forceDecimal` lets the spec exercise the huge-corpus DECIMAL kernel
@@ -925,7 +926,7 @@ object TextAnalysis {
     */
   private[graft] def chunkIndexRoot(spark: SparkSession, dir: String): String =
     graft.sources.ArtifactRoots.built(spark, "chunkidx", dir,
-        Seq("postings", "model_df", "model_sc")) { stage =>
+        Seq("postings", "model_df", "model_sc"), chain = "chunk_index") { stage =>
       graft.sources.ArtifactRoots.boundedWrite(chunkWordsFrame(spark, dir)
         .groupBy("word", "doc_id", "chunk_id").agg(count(lit(1)).as("cnt"))
         .withColumn("wb", wordBucket(col("word"))))
@@ -938,11 +939,6 @@ object TextAnalysis {
         .coalesce(1).write.mode("overwrite").parquet(s"$stage/model_sc")
     }
 
-  /** Public warm-up for Bench: bill the one-time serving-index build
-    * separately from the per-query serving cost. */
-  def chunkIndexWarm(spark: SparkSession, dir: String): String =
-    chunkIndexRoot(spark, dir)
-
   /** Persisted lexical-retrieval index: the per-(doc, word) integer
     * BM25 kernel — the exact frame bm25_top_terms gates — written as
     * postings bucketed by wb = xxhash64(word) mod 64 (the chunkidx
@@ -952,15 +948,12 @@ object TextAnalysis {
     * query doc), this is everything the streaming hybrid needs — the
     * lexical half of a RAG serving stack as a durable artifact. */
   private[graft] def lexIndexRoot(spark: SparkSession, dir: String): String =
-    graft.sources.ArtifactRoots.built(spark, "lexidx", dir, Seq("postings")) { stage =>
+    graft.sources.ArtifactRoots.built(spark, "lexidx", dir, Seq("postings"),
+        chain = "lex_index") { stage =>
       graft.sources.ArtifactRoots.boundedWrite(bm25Scored(spark, dir)
         .withColumn("wb", wordBucket(col("word"))))
         .partitionBy("wb").mode("overwrite").parquet(s"$stage/postings")
     }
-
-  /** Public warm-up for Bench. */
-  def lexIndexWarm(spark: SparkSession, dir: String): String =
-    lexIndexRoot(spark, dir)
 
   /** The diversity cut shared by chunk_retrieval and its streaming twin:
     * per-doc cap (top-2 chunks) then global top-5 per query, both as

@@ -106,10 +106,10 @@ object ArtifactRoots {
     * `write` runs under [[atomicBuild]] into [[rootFor]] at most once per
     * (session, kind, root config, dataset identity) — the [[Stages]]
     * entry is the per-process dedup, the marker protocol the
-    * cross-process one. */
-  def built(spark: SparkSession, kind: String, dir: String, parts: Seq[String])
-      (write: String => Unit): String =
-    Stages(spark, kind, dir, stageConf(spark)) {
+    * cross-process one. `chain` labels the build as [[Stages]] does. */
+  def built(spark: SparkSession, kind: String, dir: String, parts: Seq[String],
+      chain: String = "")(write: String => Unit): String =
+    Stages(spark, kind, dir, stageConf(spark), chain) {
       atomicBuild(rootFor(spark, kind, dir), parts)(write)
     }
 
@@ -165,10 +165,9 @@ object ArtifactRoots {
   /** No-heartbeat bound after which a waiter may conclude the claim
     * holder is hard-dead and take the claim over. Generous relative to
     * the heartbeat period (lease/8) — a takeover needs ~8 consecutive
-    * missed beats, far beyond any healthy GC pause. Overridable via
-    * system property for the takeover specs. */
-  def defaultLeaseMs: Long =
-    sys.props.get("graft.artifact.leaseMs").map(_.toLong).getOrElse(60000L)
+    * missed beats, far beyond any healthy GC pause. The takeover specs
+    * pass a shorter lease to [[atomicBuild]]. */
+  val defaultLeaseMs: Long = 60000L
 
   /** Run `write(stagePath)` to produce the artifact's `parts` under the
     * staging dir, then publish them atomically under `root`. Safe against

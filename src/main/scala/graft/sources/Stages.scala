@@ -30,6 +30,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * they live in its one process-level memo, `StreamingBridge.stagedFor`,
   * which applies the same fingerprint check (a regenerated dataset
   * deletes and rebuilds its staging); [[clear]] leaves them alone.
+  *
+  * '''Chain labels.''' A stage shared by several queries carries a chain
+  * label where it is registered. While a [[Meter]] is set ([[metered]]),
+  * every miss of a labeled stage builds through it, so a benchmark can
+  * bill that build to `chain_<label>` instead of to whichever query
+  * happened to trigger it. Unset (the default), a label changes nothing.
   */
 object Stages {
 
@@ -38,26 +44,42 @@ object Stages {
 
   private val entries = new scala.collection.concurrent.TrieMap[Key, Entry]
 
+  /** Receives every build of a labeled stage while set: `build` runs
+    * inside it, and its value is what the registry stores. */
+  trait Meter { def apply[T](label: String)(build: => T): T }
+
+  @volatile private var meter: Option[Meter] = None
+
+  /** Run `body` with `m` metering the labeled builds it triggers. */
+  def metered[T](m: Meter)(body: => T): T = {
+    meter = Some(m)
+    try body finally meter = None
+  }
+
   /** Stage `stage` of the dataset at `dir`, built under the conf
     * parameters `conf`: the registered value when it was built under the
-    * dataset's current identity, else `build`, registered. */
-  def apply[T](spark: SparkSession, stage: String, dir: String, conf: String = "")
-      (build: => T): T =
-    lookup(Key(spark, stage, conf, dir), DatasetId.key(dir))(build)
+    * dataset's current identity, else `build`, registered. `chain` labels
+    * a shared stage for the [[Meter]]. */
+  def apply[T](spark: SparkSession, stage: String, dir: String, conf: String = "",
+      chain: String = "")(build: => T): T =
+    lookup(Key(spark, stage, conf, dir), DatasetId.key(dir), chain)(build)
 
   /** A stage whose result is global to the session (fixed catalog table
     * names): one entry per stage, so building it for another dataset
     * supersedes the previous dataset's. */
   def sessionWide[T](spark: SparkSession, stage: String, dir: String)(build: => T): T =
-    lookup(Key(spark, stage, "", ""), DatasetId.key(dir))(build)
+    lookup(Key(spark, stage, "", ""), DatasetId.key(dir), "")(build)
 
-  private def lookup[T](k: Key, identity: String)(build: => T): T = {
+  private def lookup[T](k: Key, identity: String, chain: String)(build: => T): T = {
     evictStopped()
     entries.get(k) match {
       case Some(Entry(`identity`, v)) => v.asInstanceOf[T]
       case stale =>
         stale.foreach(e => release(e.value))
-        val v = build
+        val v = meter match {
+          case Some(m) if chain.nonEmpty => m(chain)(build)
+          case _ => build
+        }
         entries.put(k, Entry(identity, v))
         v
     }

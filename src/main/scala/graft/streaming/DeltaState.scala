@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * O(triggers) dirs read is not: a long-running ingest pays file-listing +
   * plan growth per trigger forever — fine at 5 triggers, the wrong shape at
   * 10⁴. This helper folds the accumulated deltas into a snapshot dir every
-  * `k` triggers (`spark.graft.streamStateFoldK`, default 4), so a trigger
+  * `k` triggers ([[FoldK]] for the twins), so a trigger
   * reads O(snapshot + k) dirs regardless of stream age.
   *
   * '''Retry discipline''' (the twins' overwrite-by-batchId contract,
@@ -29,59 +29,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object DeltaState {
 
-  /** Resolve the fold period ONCE, before the stream starts: the dir
-    * layout is a function of K, so a mid-stream K change would make a
-    * later fold read a snapshot base that was never written (read
-    * failure) or skip deltas it believes were folded (silent loss).
-    * The period is therefore PINNED to the state root itself: the first
-    * call writes the session-conf value to a `_foldK` marker file under
-    * `stateRoot`; every later call — including a checkpoint restart in a
-    * fresh session with a different conf — adopts the marker, so the
-    * layout stays consistent for the root's lifetime. Callers capture
-    * the result outside foreachBatch and close over it. */
-  def foldK(session: SparkSession, stateRoot: String): Int = {
-    val confK = session.conf.getOption("spark.graft.streamStateFoldK")
-      .map(_.toInt).filter(_ >= 1).getOrElse(4)
-    val marker = java.nio.file.Paths.get(stateRoot, "_foldK")
-    if (java.nio.file.Files.exists(marker)) {
-      // marker wins over conf — a restart with a different conf K adopts
-      // the layout the root was written under
-      new String(java.nio.file.Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-    } else {
-      java.nio.file.Files.createDirectories(marker.getParent)
-      // write-then-LINK: the hard link publishes the fully-written value
-      // atomically AND fails if a marker already exists (a rename would
-      // silently REPLACE an existing target on POSIX, letting a racing
-      // pinner overwrite the adopted K), so exactly one pinner wins and
-      // every reader sees a complete value
-      val tmp = java.nio.file.Paths.get(stateRoot, s"_foldK.tmp${java.util.UUID.randomUUID}")
-      java.nio.file.Files.write(tmp,
-        confK.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      try java.nio.file.Files.createLink(marker, tmp)
-      catch {
-        // lost the race to another pinner: adopt theirs below
-        case _: java.nio.file.FileAlreadyExistsException => ()
-        // filesystem without hard-link support: CREATE_NEW gives the
-        // same exactly-one-winner semantics (single write syscall of a
-        // tiny value; the partial-read window rename closed is moot at
-        // <16 bytes, and the alternative is failing every stream start)
-        case _: UnsupportedOperationException =>
-          try java.nio.file.Files.write(marker,
-            confK.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-      new String(java.nio.file.Files.readAllBytes(marker),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-    }
-  }
+  /** The fold period the ingest twins run with. The dir layout is a
+    * function of it, so it is fixed for the life of a state root. */
+  val FoldK = 4
 
   /** Parquet paths holding the accumulated `prefix`-family state from all
     * triggers before `batchId` (empty on the first trigger). Runs the fold
-    * + prune when `batchId` is a fold boundary. `k` is the period
-    * captured at stream start ([[foldK]]); `fold` post-processes the
+    * + prune when `batchId` is a fold boundary. `k` is the fold period,
+    * the same on every trigger of a root; `fold` post-processes the
     * snapshot frame before it lands (e.g. `distinct()` for hash-set state,
     * where cross-delta duplicates are semantic no-ops but dead weight). */
   def priorPaths(session: SparkSession, stateRoot: String, prefix: String,

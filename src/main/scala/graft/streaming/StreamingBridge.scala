@@ -828,7 +828,7 @@ object StreamingBridge {
     * exposed because the stage registers only after the stream drains
     * cleanly. */
   private def ivfIngestRoot(spark: SparkSession, dir: String): String =
-    graft.sources.Stages(spark, "streaming/ivf_ingest", dir) {
+    graft.sources.Stages(spark, "streaming/ivf_ingest", dir, chain = "stream_ivf") {
       import graft.operators.Similarity
       val root = TempDirs.create("graft_stream_ivf_")
       val isNew = col("vec_id") % 10 === 0
@@ -845,11 +845,6 @@ object StreamingBridge {
       }
       root
     }
-
-  /** Public warm-up for Bench: force the one-time resident build + stream
-    * ingest so the chain is billed separately from the read-back cost. */
-  def streamIvfIngestWarm(spark: SparkSession, dir: String): String =
-    scoped(ivfIngestRoot)(spark, dir)
 
   /** Streaming ANN ingest — the streaming twin of batch ivf_incremental,
     * closing the last batch/streaming pairing gap in the similarity
@@ -1264,11 +1259,10 @@ object StreamingBridge {
     // result); the fold distincts to keep the snapshot set-sized.
     val stateRoot = TempDirs.create("graft_stream_substr_state_")
     val outDir = TempDirs.create("graft_stream_substr_out_")
-    val foldK = DeltaState.foldK(spark, stateRoot) // pinned to the root — see foldK
     foreachBatch(replay(spark, docsDir), "graft_stream_substr_ck_") { (batch, batchId) =>
       val session = batch.sparkSession
       val statePaths = DeltaState.priorPaths(session, stateRoot, "d",
-        batchId, foldK, fold = _.distinct())
+        batchId, DeltaState.FoldK, fold = _.distinct())
       val prior =
         if (statePaths.isEmpty) session.read.parquet(s"$winRoot/hashes")
         else session.read.parquet(s"$winRoot/hashes")
@@ -1313,7 +1307,6 @@ object StreamingBridge {
     val docsDir = stageSubstrArrivals(spark, dir)
     val stateRoot = TempDirs.create("graft_stream_setsim_state_")
     val outDir = TempDirs.create("graft_stream_setsim_out_")
-    val foldK = DeltaState.foldK(spark, stateRoot) // pinned to the root — see foldK
     foreachBatch(replay(spark, docsDir), "graft_stream_setsim_ck_") { (batch, batchId) =>
       val session = batch.sparkSession
       val df = session.read.parquet(s"$root/df")
@@ -1326,8 +1319,8 @@ object StreamingBridge {
       val apW = session.read.parquet(s"$stateRoot/p$batchId")
       // both state families fold every K triggers (DeltaState): a
       // trigger reads O(snapshot + K) state dirs, never O(triggers)
-      val priorP = DeltaState.priorPaths(session, stateRoot, "p", batchId, foldK)
-      val priorG = DeltaState.priorPaths(session, stateRoot, "g", batchId, foldK)
+      val priorP = DeltaState.priorPaths(session, stateRoot, "p", batchId, DeltaState.FoldK)
+      val priorG = DeltaState.priorPaths(session, stateRoot, "g", batchId, DeltaState.FoldK)
       val prefixAll =
         if (priorP.isEmpty) session.read.parquet(s"$root/prefix")
         else session.read.parquet(s"$root/prefix")

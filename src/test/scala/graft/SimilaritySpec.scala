@@ -176,9 +176,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivf_refresh: published index complete, centroids moved, report well-formed") {
     import graft.operators.Similarity
-    val staleRoot = Similarity.ivfIncrWarmIndex(spark, sf)
+    val staleRoot = Similarity.ivfIncrRoot(spark, sf)
     val freshRoot = graft.sources.ArtifactRoots.assertComplete(
-      Similarity.ivfRefreshWarm(spark, sf))
+      Similarity.ivfRefreshRoot(spark, sf))
     // the refreshed lists cover every vector exactly once (the
     // reassignment half of the Lloyd step lost/duplicated nothing)
     val n = graft.sources.Tables.embeddings(spark, sf).count()

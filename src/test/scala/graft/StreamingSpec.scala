@@ -597,85 +597,73 @@ class StreamingSpec extends SparkSpec {
     def doc(t: Int): String =
       if (t == 0) block("A", t) + block("B", t) + run(t) + block("C", t)
       else block("A", t) + run(t - 1) + block("B", t) + run(t) + block("C", t)
-    spark.conf.set("spark.graft.streamStateFoldK", "2")
+    val foldK = 2
     val feed = graft.sources.TempDirs.create("graft_deltastate_feed_")
     val stateRoot = graft.sources.TempDirs.create("graft_deltastate_state_")
     val outDir = graft.sources.TempDirs.create("graft_deltastate_out_")
     val ck = graft.sources.TempDirs.create("graft_deltastate_ck_")
-    try {
-      val tsBase = System.currentTimeMillis() - 20000L
-      val build = graft.sources.TempDirs.create("graft_deltastate_build_")
-      (0 until 12).foreach { t =>
-        val f = f"$feed/batch_$t%05d.parquet"
-        Seq((t.toLong, doc(t))).toDF("doc_id", "text").coalesce(1)
-          .write.mode("overwrite").parquet(s"$build/t$t")
-        val src = new java.io.File(s"$build/t$t").listFiles()
-          .filter(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet")).head
-        java.nio.file.Files.copy(src.toPath, java.nio.file.Paths.get(f))
-        java.nio.file.Files.setLastModifiedTime(java.nio.file.Paths.get(f),
-          java.nio.file.attribute.FileTime.fromMillis(tsBase + t * 1000L))
+    val tsBase = System.currentTimeMillis() - 20000L
+    val build = graft.sources.TempDirs.create("graft_deltastate_build_")
+    (0 until 12).foreach { t =>
+      val f = f"$feed/batch_$t%05d.parquet"
+      Seq((t.toLong, doc(t))).toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$build/t$t")
+      val src = new java.io.File(s"$build/t$t").listFiles()
+        .filter(x => x.getName.startsWith("part-") && x.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(src.toPath, java.nio.file.Paths.get(f))
+      java.nio.file.Files.setLastModifiedTime(java.nio.file.Paths.get(f),
+        java.nio.file.attribute.FileTime.fromMillis(tsBase + t * 1000L))
+    }
+    val schema = spark.read.parquet(s"$feed/batch_00000.parquet").schema
+    val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(feed)
+      .writeStream.option("checkpointLocation", ck)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        val session = batch.sparkSession
+        val statePaths = DeltaState.priorPaths(session, stateRoot, "d",
+          batchId, foldK, fold = _.distinct())
+        val prior =
+          if (statePaths.isEmpty)
+            session.range(0).select(col("id").as("h"))
+          else session.read.parquet(statePaths: _*)
+        Dedup.screenArrivalsAgainst(batch, prior)
+          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+        Dedup.windowHashSet(batch)
+          .write.mode("overwrite").parquet(s"$stateRoot/d$batchId")
+        ()
       }
-      val schema = spark.read.parquet(s"$feed/batch_00000.parquet").schema
-      val foldK = DeltaState.foldK(spark, stateRoot)
-      val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream.option("checkpointLocation", ck)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val session = batch.sparkSession
-          val statePaths = DeltaState.priorPaths(session, stateRoot, "d",
-            batchId, foldK, fold = _.distinct())
-          val prior =
-            if (statePaths.isEmpty)
-              session.range(0).select(col("id").as("h"))
-            else session.read.parquet(statePaths: _*)
-          Dedup.screenArrivalsAgainst(batch, prior)
-            .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-          Dedup.windowHashSet(batch)
-            .write.mode("overwrite").parquet(s"$stateRoot/d$batchId")
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // cross-fold correctness: doc 0 clean, every later doc exactly the
-      // previous doc's 50-char run
-      val got = spark.read.option("recursiveFileLookup", "true").parquet(outDir)
-        .orderBy("doc_id")
-        .as[(Long, Long, Long, Long, Long)].collect().toSeq
-      val want = (0 until 12).map { t =>
-        val total = doc(t).length.toLong
-        if (t == 0) (0L, 0L, 0L, total, 0L)
-        else (t.toLong, 1L, 50L, total, 1000000L * 50 / total)
-      }
-      assert(got == want, s"screen diverged across folds:\n$got\nvs\n$want")
-      // the bound the compaction exists for: ≤ 2 snapshots + 2K deltas
-      // after 12 triggers (unfolded deltas would be 12 dirs)
-      val dirs = new java.io.File(stateRoot).listFiles().filter(_.isDirectory)
-        .map(_.getName).sorted.toSeq
-      assert(dirs.size <= 6, s"state dirs unbounded: $dirs")
-      assert(dirs.exists(_.startsWith("sd")), s"no snapshot dir materialized: $dirs")
-      // retry idempotence: re-entering a FOLD trigger (structured
-      // streaming re-runs the last uncommitted batch after a crash)
-      // must rebuild the identical snapshot from the retained inputs
-      // and return the same paths
-      val lastFold = dirs.filter(_.startsWith("sd")).map(_.stripPrefix("sd").toLong).max
-      val before = spark.read.parquet(s"$stateRoot/sd$lastFold")
-        .as[Long].collect().sorted.toSeq
-      val p1 = DeltaState.priorPaths(spark, stateRoot, "d", lastFold, foldK, _.distinct())
-      val p2 = DeltaState.priorPaths(spark, stateRoot, "d", lastFold, foldK, _.distinct())
-      assert(p1 == p2, "retried fold trigger must see identical state paths")
-      val after = spark.read.parquet(s"$stateRoot/sd$lastFold")
-        .as[Long].collect().sorted.toSeq
-      assert(after == before, "retried fold must rebuild the identical snapshot")
-      // K is PINNED to the root via the _foldK marker: a checkpoint
-      // restart in a session with a DIFFERENT conf K must adopt the
-      // marker (the dir layout is a function of K — a new K would read
-      // snapshot bases that were never written or skip unfolded deltas)
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(stateRoot, "_foldK")), "fold-K marker missing")
-      spark.conf.set("spark.graft.streamStateFoldK", "5")
-      assert(DeltaState.foldK(spark, stateRoot) == foldK,
-        "restart with a different conf K must adopt the root's pinned K")
-    } finally spark.conf.unset("spark.graft.streamStateFoldK")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    // cross-fold correctness: doc 0 clean, every later doc exactly the
+    // previous doc's 50-char run
+    val got = spark.read.option("recursiveFileLookup", "true").parquet(outDir)
+      .orderBy("doc_id")
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    val want = (0 until 12).map { t =>
+      val total = doc(t).length.toLong
+      if (t == 0) (0L, 0L, 0L, total, 0L)
+      else (t.toLong, 1L, 50L, total, 1000000L * 50 / total)
+    }
+    assert(got == want, s"screen diverged across folds:\n$got\nvs\n$want")
+    // the bound the compaction exists for: ≤ 2 snapshots + 2K deltas
+    // after 12 triggers (unfolded deltas would be 12 dirs)
+    val dirs = new java.io.File(stateRoot).listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted.toSeq
+    assert(dirs.size <= 6, s"state dirs unbounded: $dirs")
+    assert(dirs.exists(_.startsWith("sd")), s"no snapshot dir materialized: $dirs")
+    // retry idempotence: re-entering a FOLD trigger (structured
+    // streaming re-runs the last uncommitted batch after a crash)
+    // must rebuild the identical snapshot from the retained inputs
+    // and return the same paths
+    val lastFold = dirs.filter(_.startsWith("sd")).map(_.stripPrefix("sd").toLong).max
+    val before = spark.read.parquet(s"$stateRoot/sd$lastFold")
+      .as[Long].collect().sorted.toSeq
+    val p1 = DeltaState.priorPaths(spark, stateRoot, "d", lastFold, foldK, _.distinct())
+    val p2 = DeltaState.priorPaths(spark, stateRoot, "d", lastFold, foldK, _.distinct())
+    assert(p1 == p2, "retried fold trigger must see identical state paths")
+    val after = spark.read.parquet(s"$stateRoot/sd$lastFold")
+      .as[Long].collect().sorted.toSeq
+    assert(after == before, "retried fold must rebuild the identical snapshot")
   }
 
   test("setsim stream screen: exactly-once pair emission across triggers (synthetic)") {
