@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.sources.Tables
+import graft.sources.{Stages, Tables}
 
 /** Deduplication operators for LLM-training-data pipelines (north star in
   * /root/repo/BASELINE.json; no equivalent in the reference, whose only
@@ -33,18 +33,14 @@ object Dedup {
   private val K = 8 // minhash signature length
   private val B = 4 // LSH bands (rows per band = K/B = 2)
 
-  /** The dedup chain's shared stages, registered per (session, dataset)
-    * in [[graft.sources.Stages]]. The chain verify ⊂ clusters ⊂ apply
-    * shares its prefix: without the registry, each of the three declared
-    * queries re-derived the whole LSH→verify (and apply additionally
-    * re-ran CC) — ~3× the unique work per bench/verify run. The cached
-    * frames are `persist()`ed once; they are tiny (candidate pairs and
-    * labels — ints and one double per row, pair count bounded by LSH
-    * bucket occupancy), so retention is cents of memory, not a leak.
-    * `chain` labels a stage several queries share (see Stages). */
-  private def memoized(spark: SparkSession, dir: String, stage: String,
-      chain: String = "", conf: String = "")(build: => DataFrame): DataFrame =
-    graft.sources.Stages(spark, s"dedup/$stage", dir, conf, chain)(build)
+  // The dedup chain's shared stages are registered per (session,
+  // dataset) in graft.sources.Stages, which stores each frame once. The
+  // chain verify ⊂ clusters ⊂ apply shares its prefix: without the
+  // registry, each of the three declared queries re-derived the whole
+  // LSH→verify (and apply additionally re-ran CC) — ~3× the unique work
+  // per bench/verify run. The frames are tiny (candidate pairs and
+  // labels — ints and one double per row, pair count bounded by LSH
+  // bucket occupancy), so retention is cents of memory, not a leak.
 
   /** Drop and unpersist every registered stage (test/embedder hook for
     * callers that regenerate datasets or want the storage back). */
@@ -112,8 +108,8 @@ object Dedup {
     * (measured 2.5 s → sub-second for minhash_est_vs_exact at sf0.1).
     * Tiny residency: doc_id + 8 ints per doc. */
   def cachedSignatures(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "sigs", chain = "dedup_sigs") {
-      minhashSignatures(Tables.documentsKernelWide(spark, dir)).persist()
+    Stages(spark, "dedup/sigs", dir, chain = "dedup_sigs") {
+      minhashSignatures(Tables.documentsKernelWide(spark, dir))
     }
 
   def minhashLshPairs(docs: DataFrame): DataFrame =
@@ -161,8 +157,8 @@ object Dedup {
     * any pair without a per-pair hash set — one sort per document, not
     * per pair. */
   def shingleGramSets(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "shinglegrams", chain = "shingle_grams") {
-      gramSetsOf(Tables.documentsKernelWide(spark, dir)).persist()
+    Stages(spark, "dedup/shinglegrams", dir, chain = "shingle_grams") {
+      gramSetsOf(Tables.documentsKernelWide(spark, dir))
     }
 
   /** The sorted shingle-gram set of ANY (doc_id, text) frame — the one
@@ -182,7 +178,7 @@ object Dedup {
     * consumer (verify query, clusters, apply) reuses the same cached
     * frame instead of re-deriving the LSH→verify prefix. */
   def verifiedCandidates(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "verified", chain = "dedup_verified") {
+    Stages(spark, "dedup/verified", dir, chain = "dedup_verified") {
       val cands = lshPairsFromSigs(cachedSignatures(spark, dir))
       val grams = shingleGramSets(spark, dir)
       cands
@@ -197,7 +193,6 @@ object Dedup {
           round(col("inter") / (col("tot") - col("inter")), 6).as("jaccard"),
           // integer threshold algebra: J = i/(tot−i) ≥ 0.2 ⟺ 6i ≥ tot
           (col("inter") * 6 >= col("tot")).cast("int").as("is_dup"))
-        .persist()
     }
 
   /** Exact set-similarity self-join via prefix filtering — the AllPairs /
@@ -234,17 +229,17 @@ object Dedup {
 
   /** Memoized corpus-wide prefix postings (rarest-first rank window run
     * ONCE per session/dataset): the budget gate, both self-join sides,
-    * and the exact eval all read this persisted frame instead of
+    * and the exact eval all read this stored frame instead of
     * re-deriving the explode→df-join→window pass per consumer. */
   private def setsimPrefixMemo(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "setsim_prefix") {
-      // checkpoint the vocab-sized df so the prefix plan references a
-      // leaf instead of inlining the explode + full gram-count aggregate
-      // a second time (the tok stream feeds BOTH the df aggregate and
-      // the rank join — guide §3.3)
+    Stages(spark, "dedup/setsim_prefix", dir) {
+      // the vocab-sized df is a stage of its own, so the prefix plan
+      // reads it stored instead of inlining the explode + full
+      // gram-count aggregate a second time (the tok stream feeds BOTH
+      // the df aggregate and the rank join — guide §3.3)
       val tok = setsimTok(shingleGramSets(spark, dir))
-      val df = setsimDf(tok).localCheckpoint(true)
-      prefixOf(tok.join(df, "gram")).persist()
+      val df = Stages(spark, "dedup/setsim_df", dir)(setsimDf(tok))
+      prefixOf(tok.join(df, "gram"))
     }
 
   /** Memoized exact pair set (UNSORTED — the registered query adds the
@@ -256,7 +251,7 @@ object Dedup {
     * lesson); stale entries are pair-set-sized, bounded by the number of
     * distinct budget settings in a session. */
   private[graft] def setsimPairs(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "setsim_pairs", chain = "setsim_pairs",
+    Stages(spark, "dedup/setsim_pairs", dir, chain = "setsim_pairs",
         conf = spark.conf.getOption("spark.graft.setsimPairBudget").getOrElse("")) {
       val prefix = setsimBudgetGuarded(spark, setsimPrefixMemo(spark, dir))
       val cands = prefix.as("a")
@@ -267,7 +262,6 @@ object Dedup {
         .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
         .distinct() // a pair may share several prefix grams
       verifySetsimCands(cands, shingleGramSets(spark, dir), broadcastCands = false)
-        .persist()
     }
 
   /** In-plan candidate-pair budget for the exact self-join — the
@@ -504,15 +498,15 @@ object Dedup {
     * batch join would have found. */
   def dedupSetsimIncr(spark: SparkSession, dir: String): DataFrame = {
     val root = setsimIndexRoot(spark, dir)
-    // the arrival frames go through the chain memo, not per-call persist:
+    // the arrival frames are registry stages, not per-call persists:
     // repeated calls (two-pass bench, verify + spec in one JVM) must not
-    // accumulate cache entries — same persistence barrier, one owner
-    val ag = memoized(spark, dir, "setsim_arrival_grams") {
+    // accumulate cache entries — one owner stores and releases them
+    val ag = Stages(spark, "dedup/setsim_arrival_grams", dir) {
       gramSetsOf(Tables.documents(spark, dir)
-        .filter(col("doc_id") % 10 === 0).select("doc_id", "text")).persist()
+        .filter(col("doc_id") % 10 === 0).select("doc_id", "text"))
     }
-    val aprefix = memoized(spark, dir, "setsim_arrival_prefix") {
-      arrivalPrefix(ag, spark.read.parquet(s"$root/df")).persist()
+    val aprefix = Stages(spark, "dedup/setsim_arrival_prefix", dir) {
+      arrivalPrefix(ag, spark.read.parquet(s"$root/df"))
     }
     setsimScreenWith(ag, aprefix,
       spark.read.parquet(s"$root/prefix"),
@@ -569,12 +563,10 @@ object Dedup {
     clusterLabels(spark, dir).orderBy("doc_id")
 
   /** Memoized cluster stage: connected components over the memoized
-    * verified pairs, computed once per (session, dataset). The returned
-    * projection reads the labels frame that connectedComponents left
-    * persisted and materialized — no second cache entry; the memo owns
-    * that handle for the process lifetime. */
+    * verified pairs, computed once per (session, dataset); the registry
+    * stores the labels and releases them. */
   def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "clusters", chain = "dedup_clusters") {
+    Stages(spark, "dedup/clusters", dir, chain = "dedup_clusters") {
       connectedComponents(
         verifiedCandidates(spark, dir)
           .filter(col("is_dup") === 1)
@@ -792,10 +784,10 @@ object Dedup {
     * iteration state here is tiny — two longs per node — so
     * executor-local is the right default.)
     *
-    * The returned frame is persisted and materialized (the final
-    * convergence count forced it); the caller owns the handle —
-    * clusterLabels keeps it for the process, direct callers (specs)
-    * should unpersist when done. */
+    * The returned frame is a projection of the last round's checkpoint,
+    * not persisted: a caller that reads it more than once registers it
+    * as a stage (clusterLabels, Similarity.embedClusters), and the
+    * registry stores and releases it. */
   def connectedComponents(edges: DataFrame): DataFrame = {
     // undirected adjacency, cached: re-read every round
     val adj = edges.select(col("id1").as("id"), col("id2").as("nbr"))
@@ -832,11 +824,7 @@ object Dedup {
       state = jumped.select("id", "label")
     }
     adj.unpersist()
-    // cache the clean projection over the final checkpoint leaf: the
-    // returned frame is the one whose unpersist() releases the storage
-    val result = state.persist()
-    result.count()
-    result
+    state
   }
 
   /** Deduplicated corpus: drop exact-dup non-keepers (min doc_id per
@@ -1322,18 +1310,25 @@ object Dedup {
     * guarded ([[wedgeBudgetGuarded]]): listing triangles of a
     * mass-duplicate clique refuses loudly instead of emitting Θ(k³). */
   def dedupTriangles(spark: SparkSession, dir: String): DataFrame =
-    // checkpoint the guarded edges ONCE: trianglesOf references its edge
-    // frame 3× (both wedge sides + the closing join), and each reference
-    // re-executes the 1-row budget gate's aggregate + broadcast subplan
-    // (r22 plan audit: the un-truncated local_cc variant carried 228
-    // Exchanges / 130 cache scans for a verified-pair-sized input). The
-    // guarded list is tiny — bounded by LSH bucket occupancy — and an
-    // over-budget graph still refuses loudly, at the checkpoint instead
-    // of the first wedge.
-    Graph.trianglesOf(wedgeBudgetGuarded(spark,
-      verifiedCandidates(spark, dir).filter(col("is_dup") === 1).select("id1", "id2"),
-      "dedup_triangles").localCheckpoint(true))
+    Graph.trianglesOf(guardedDupEdges(spark, dir, "dedup_triangles"))
       .orderBy("a", "b", "c")
+
+  /** The verified dup edges behind `row`'s wedge-budget guard, registered
+    * as a stage so the guard runs ONCE: the enumeration references its
+    * edge frame several times (trianglesOf 3×, local_cc 7×), and each
+    * reference of an unstored frame re-executes the 1-row budget gate's
+    * aggregate + broadcast subplan (r22 plan audit: the un-truncated
+    * local_cc variant carried 228 Exchanges / 130 cache scans for a
+    * verified-pair-sized input). The list is tiny — bounded by LSH
+    * bucket occupancy — and an over-budget graph still refuses loudly,
+    * at the first action that reads it. The budget is the stage's conf
+    * parameter, so a mid-session budget change is a miss. */
+  private def guardedDupEdges(spark: SparkSession, dir: String, row: String): DataFrame =
+    Stages(spark, s"dedup/${row}_edges", dir,
+        conf = spark.conf.getOption("spark.graft.wedgeBudget").getOrElse("")) {
+      wedgeBudgetGuarded(spark,
+        verifiedCandidates(spark, dir).filter(col("is_dup") === 1).select("id1", "id2"), row)
+    }
 
   /** Per-node local clustering coefficient of the verified dup graph —
     * the node-level refinement of dedup_cluster_cohesion's per-component
@@ -1354,18 +1349,7 @@ object Dedup {
     * instead of melting — the r16 probe finding); integer ppm via
     * `div`, exact cross-engine. */
   def dedupLocalCc(spark: SparkSession, dir: String): DataFrame = {
-    // Checkpoint the guarded edges ONCE (guide §3.3): the frame is
-    // referenced 7× downstream (deg 2×, former wedge self-join 4×, the
-    // closing join 1×) and every reference re-executed the 1-row wedge
-    // budget gate — its union + aggregate + broadcast + BNLJ subplan ran
-    // 7 times per query (r22 plan audit: 228 Exchanges / 130 cache scans
-    // / 2440 plan lines before; a leaf scan after). The verified pair
-    // list is LSH-occupancy-bounded, so the checkpoint is tiny; an
-    // over-budget graph still refuses loudly, at the checkpoint.
-    val e = wedgeBudgetGuarded(spark,
-      verifiedCandidates(spark, dir).filter(col("is_dup") === 1)
-        .select("id1", "id2"),
-      "dedup_local_cc").localCheckpoint(true)
+    val e = guardedDupEdges(spark, dir, "dedup_local_cc")
     val edges = e.unionByName(e.select(col("id2").as("id1"), col("id1").as("id2")))
     val deg = edges.groupBy("id1").agg(count(lit(1)).as("deg"))
     // Per-node triangle counts from the ORIENTED enumeration (a<b<c, the
@@ -1561,9 +1545,9 @@ object Dedup {
     * (registered in graft.sources.Stages: the frame is island-sized, cents of memory;
     * Bench bills the build as `chain_substring_spans`). */
   private[graft] def corpusSpans(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "substring_spans", chain = "substring_spans") {
+    Stages(spark, "dedup/substring_spans", dir, chain = "substring_spans") {
       spansFrom(dupPosOf(Tables.documentsKernelWide(spark, dir)
-        .select(col("doc_id"), col("text")))).persist()
+        .select(col("doc_id"), col("text"))))
     }
 
   /** Positional window hashes of a (doc_id, text) frame: one
@@ -1915,8 +1899,8 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     val (l, e) = linedFrames(Tables.documentsKernelWide(spark, dir)
       .select(col("doc_id"), col("text")))
-    (memoized(spark, dir, "line_lined", chain = "line_frames") { l.persist() },
-      memoized(spark, dir, "line_ex", chain = "line_frames") { e.persist() })
+    (Stages(spark, "dedup/line_lined", dir, chain = "line_frames")(l),
+      Stages(spark, "dedup/line_ex", dir, chain = "line_frames")(e))
   }
 
   def lineDedupApply(spark: SparkSession, dir: String): DataFrame = {

@@ -99,7 +99,6 @@ object Dsir {
         .select(col("doc_id"), col("lang"), explode(col("grams")).as("g"))
         .select(col("doc_id"), col("lang"), bucketOf(col("g"), w).as("bucket"))
         .groupBy("doc_id", "lang", "bucket").agg(count(lit(1)).as("c"))
-        .persist()
     }
   }
 

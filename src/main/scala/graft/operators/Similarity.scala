@@ -124,7 +124,6 @@ object Similarity {
         .join(e.select(col("vec_id").as("id2"), col("v").as("v2")), "id2")
         .select(col("id1"), col("id2"),
           round(vec_cosine(col("v1"), col("v2")), 6).as("cos"))
-        .persist()
     }
 
   private val IvfK = 16     // coarse centroids
@@ -188,12 +187,17 @@ object Similarity {
     * incremental path builds from the resident corpus only). */
   private[graft] def ivfBuildIndexFrom(e: DataFrame, spark: SparkSession,
       root: String): String =
-    graft.sources.ArtifactRoots.atomicBuild(root, Seq("centroids", "lists")) { stage =>
-      refinedCentroids(e).write.mode("overwrite").parquet(s"$stage/centroids")
-      graft.sources.ArtifactRoots.boundedWrite(
-          assignCells(e, spark.read.parquet(s"$stage/centroids")))
-        .mode("overwrite").partitionBy("cell").parquet(s"$stage/lists")
-    }
+    graft.sources.ArtifactRoots.atomicBuild(root, IvfParts)(writeIvfIndex(e, spark, _))
+
+  private val IvfParts = Seq("centroids", "lists")
+
+  /** The index's parts, written under a build's staging dir `stage`. */
+  private def writeIvfIndex(e: DataFrame, spark: SparkSession, stage: String): Unit = {
+    refinedCentroids(e).write.mode("overwrite").parquet(s"$stage/centroids")
+    graft.sources.ArtifactRoots.boundedWrite(
+        assignCells(e, spark.read.parquet(s"$stage/centroids")))
+      .mode("overwrite").partitionBy("cell").parquet(s"$stage/lists")
+  }
 
   /** Per-process index roots, one build per (session, dataset). By
     * default the index lands in a fresh process-private temp dir: cold
@@ -206,11 +210,8 @@ object Similarity {
     * arbitrate concurrent builders and staleness is impossible by key.
     * Every access re-asserts the reader-side `.complete` check. */
   private def ivfIndexRoot(spark: SparkSession, dir: String): String =
-    graft.sources.ArtifactRoots.assertComplete(
-      graft.sources.Stages(spark, "ivf", dir, graft.sources.ArtifactRoots.stageConf(spark),
-          chain = "ivf_index")(
-        ivfBuildIndex(spark, dir,
-          graft.sources.ArtifactRoots.rootFor(spark, "ivf", dir))))
+    graft.sources.ArtifactRoots.built(spark, "ivf", dir, IvfParts, chain = "ivf_index")(
+      writeIvfIndex(emb(spark, dir), spark, _))
 
   /** Public warm-up: force the one-time index build so a harness can
     * time it apart from the per-query probe cost. */
@@ -773,14 +774,15 @@ object Similarity {
     val exactScored = e.join(broadcast(qv), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand_id"),
         round(vec_cosine(col("v"), col("qv")), 6).as("cos"))
-    // Checkpoint the exact ground truth (guide §3.3): it is referenced by
-    // BOTH overlap branches, and without a barrier the corpus-sized
-    // exact-top-k subtree inlines into each — two full corpus scans +
-    // folds where one suffices (r22 plan audit: ivf_refresh 729 plan
-    // lines / 40 Exchanges before). The checkpointed frame is 10·k rows.
-    val exact = topKFold(exactScored, Seq("qid"), col("cos"), col("cand_id"), 3)
-      .select(col("qid"), col("id").as("cand_id"))
-      .localCheckpoint(true)
+    // The exact ground truth is a stage (guide §3.3): it is referenced by
+    // BOTH overlap branches, and unstored the corpus-sized exact-top-k
+    // subtree inlines into each — two full corpus scans + folds where
+    // one suffices (r22 plan audit: ivf_refresh 729 plan lines / 40
+    // Exchanges before). The stored frame is 10·k rows.
+    val exact = graft.sources.Stages(spark, "similarity/ivf_exact_top3", dir) {
+      topKFold(exactScored, Seq("qid"), col("cos"), col("cand_id"), 3)
+        .select(col("qid"), col("id").as("cand_id"))
+    }
     def overlap(root: String, as: String) =
       ivfServeTopK(spark, root, qv, 3, admitted = None)
         .select("qid", "cand_id")
@@ -988,7 +990,6 @@ object Similarity {
       (0 until PqM)
         .map(m => pqCodebook(e, m).withColumn("m", lit(m)))
         .reduce(_.unionByName(_))
-        .persist()
     }
 
   /** Memoized PQ encoding stage: (vec_id, m, code, d2). Product
@@ -1025,7 +1026,7 @@ object Similarity {
 
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Stages(spark, "similarity/pq_codes", dir, chain = "pq_codes")(
-      pqEncodeWith(emb(spark, dir), pqBooks(spark, dir)).persist())
+      pqEncodeWith(emb(spark, dir), pqBooks(spark, dir)))
 
   /** PQ codebook REFRESH — the quantization twin of ivf_refresh, closing
     * the same staleness class for the OTHER persisted vector artifact:
@@ -1046,33 +1047,34 @@ object Similarity {
   def pqRefresh(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val resident = e.filter(col("vec_id") % 10 =!= 0)
-    // Materialization barriers on the shared stages (localCheckpoint —
-    // cleaned by the ContextCleaner when the frame is unreferenced, so
-    // repeated bench passes don't pin blocks): staleCodes is referenced
-    // by BOTH the stale-SSE branch and the fresh-books train, and without
-    // a barrier the DataFrame DAG inlines the 4-codebook build subtree
-    // into every reference — the final plan then carries the stale
-    // codebook train MULTIPLICATIVELY (the r20 close measured a 215 s
-    // pass-1 on this row when the duplicated subtrees landed behind a C2
-    // backlog; the steady-state median was ~8 s). The books frames are
-    // 64 rows, staleCodes is 4 rows per vector — cents of memory.
-    val staleBooks = (0 until PqM)
-      .map(m => pqCodebook(resident, m).withColumn("m", lit(m)))
-      .reduce(_.unionByName(_))
-      .localCheckpoint()
-    val staleCodes = pqEncodeWith(e, staleBooks).localCheckpoint()
+    // staleCodes is a stage: it is referenced by BOTH the stale-SSE
+    // branch and the fresh-books train, and unstored the DataFrame DAG
+    // inlines the 4-codebook build subtree into every reference — the
+    // final plan then carries the stale codebook train MULTIPLICATIVELY
+    // (the r20 close measured a 215 s pass-1 on this row when the
+    // duplicated subtrees landed behind a C2 backlog; the steady-state
+    // median was ~8 s). The fresh books are a stage too, so the query's
+    // own plan reads both as leaves; the stale books are read once, by
+    // staleCodes' encode, and need no storing. The books are 64 rows,
+    // staleCodes 4 rows per vector — cents of memory.
+    val staleCodes = graft.sources.Stages(spark, "similarity/pq_stale_codes", dir) {
+      pqEncodeWith(e, (0 until PqM)
+        .map(m => pqCodebook(resident, m).withColumn("m", lit(m)))
+        .reduce(_.unionByName(_)))
+    }
     // one Lloyd step from the stored assignment: per (m, code) exact
     // means of the accumulated corpus's assigned sub-vectors
-    val freshBooks = pqSubRows(e)
-      .join(staleCodes.select("vec_id", "m", "code"), Seq("vec_id", "m"))
-      .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-      .groupBy("m", "code", "pos")
-      .agg((sum(col("x").cast("decimal(28,12)")).cast("double") / count(lit(1))).as("mx"))
-      .groupBy("m", "code")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-        s => s.getField("mx")).as("cv"))
-      .select(col("m"), col("code").as("cid"), col("cv"))
-      .localCheckpoint()
+    val freshBooks = graft.sources.Stages(spark, "similarity/pq_fresh_books", dir) {
+      pqSubRows(e)
+        .join(staleCodes.select("vec_id", "m", "code"), Seq("vec_id", "m"))
+        .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
+        .groupBy("m", "code", "pos")
+        .agg((sum(col("x").cast("decimal(28,12)")).cast("double") / count(lit(1))).as("mx"))
+        .groupBy("m", "code")
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
+          s => s.getField("mx")).as("cv"))
+        .select(col("m"), col("code").as("cid"), col("cv"))
+    }
     val freshCodes = pqEncodeWith(e, freshBooks)
     def sse(codes: DataFrame, as: String) = codes.groupBy("m")
       .agg(count(lit(1)).as(s"n_$as"),

@@ -73,7 +73,7 @@ object TextAnalysis {
     * at any scale. */
   private[graft] def scoredDocs(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Stages(spark, "text/scored", dir, chain = "doc_scores")(
-      scoreDocsFrame(Tables.documents(spark, dir)).persist())
+      scoreDocsFrame(Tables.documents(spark, dir)))
 
   /** The row-local scoring pass over ANY (doc_id, lang, text) frame —
     * shared by the memoized corpus stage above and the streaming
@@ -309,12 +309,11 @@ object TextAnalysis {
     * artifact — both bpe_learn_merges and bpe_encode (and the streaming
     * encode twin) consume the parquet file, never the trainer directly,
     * so the artifact is the contract between training and inference.
-    * The read is gated on the `.complete` marker like every artifact
-    * consumer. */
+    * The root comes through `ArtifactRoots.built`, which checks its
+    * `.complete` marker. */
   private[graft] def bpeMergeTable(
       spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    spark.read.parquet(s"${graft.sources.ArtifactRoots.assertComplete(
-        bpeIndexRoot(spark, dir))}/merges")
+    spark.read.parquet(s"${bpeIndexRoot(spark, dir)}/merges")
       .orderBy("step").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq
@@ -722,7 +721,7 @@ object TextAnalysis {
     * per branch. */
   private[graft] def bm25Scored(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Stages(spark, "text/bm25", dir, chain = "bm25_scored")(
-      bm25ScoredImpl(spark, dir, forceDecimal = false).persist())
+      bm25ScoredImpl(spark, dir, forceDecimal = false))
 
   /** `forceDecimal` lets the spec exercise the huge-corpus DECIMAL kernel
     * at test scale and prove it value-identical to the Long fast path —
@@ -1318,7 +1317,9 @@ object TextAnalysis {
     * covered by the corpus-global top-200 vocabulary — the tokenizer-fit
     * audit run before committing a vocab (a language whose coverage
     * craters will fragment into bytes at training time). One corpus
-    * explode feeds a persisted (lang, word) count table; everything
+    * explode feeds a (lang, word) count table, registered as a stage so
+    * it is stored once per (session, dataset) and released with the
+    * registry; everything
     * downstream — the global top-200 (count desc, word asc: a total
     * order, so the cut is engine-independent), per-lang totals, and the
     * covered subset — re-aggregates that vocab-sized table instead of
@@ -1326,10 +1327,11 @@ object TextAnalysis {
     * broadcast into a semi-join; coverage is exact integer ppm so no
     * float ratio sits on the hash boundary. */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val byLangW = Tables.documents(spark, dir)
-      .select(col("lang"), explode(toks).as("w"))
-      .groupBy("lang", "w").agg(count(lit(1)).as("c"))
-      .persist()
+    val byLangW = graft.sources.Stages(spark, "text/lang_words", dir) {
+      Tables.documents(spark, dir)
+        .select(col("lang"), explode(toks).as("w"))
+        .groupBy("lang", "w").agg(count(lit(1)).as("c"))
+    }
     val vocab = byLangW.groupBy("w").agg(sum(col("c")).as("cw"))
       .orderBy(desc("cw"), col("w")).limit(200).select("w")
     val totals = byLangW.groupBy("lang").agg(sum(col("c")).as("total_tokens"))

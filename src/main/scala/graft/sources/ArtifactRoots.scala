@@ -49,9 +49,10 @@ import org.apache.spark.sql.SparkSession
   * a healthy JVM sees, and the worst case is a rebuild, never a
   * half-read — readers still gate on the marker.
   *
-  * '''Reader check.''' Every consumer calls [[assertComplete]] before
-  * reading, so the marker is enforced on BOTH sides of the race, not
-  * just documented on the writer side.
+  * '''Reader check.''' [[built]] calls [[assertComplete]] on every root it
+  * returns, on a registry hit as on a fresh build, so the marker is
+  * enforced on BOTH sides of the race, not just documented on the writer
+  * side, and no reader can skip it.
   */
 object ArtifactRoots {
 
@@ -106,12 +107,14 @@ object ArtifactRoots {
     * `write` runs under [[atomicBuild]] into [[rootFor]] at most once per
     * (session, kind, root config, dataset identity) — the [[Stages]]
     * entry is the per-process dedup, the marker protocol the
-    * cross-process one. `chain` labels the build as [[Stages]] does. */
+    * cross-process one. Every return is checked by [[assertComplete]]:
+    * a root whose marker went missing after the build throws instead of
+    * being read. `chain` labels the build as [[Stages]] does. */
   def built(spark: SparkSession, kind: String, dir: String, parts: Seq[String],
       chain: String = "")(write: String => Unit): String =
-    Stages(spark, kind, dir, stageConf(spark), chain) {
+    assertComplete(Stages(spark, kind, dir, stageConf(spark), chain) {
       atomicBuild(rootFor(spark, kind, dir), parts)(write)
-    }
+    })
 
   /** Root directory for artifact `kind` trained on the dataset at `dir`:
     * `<sharedRoot>/<kind>/v<version>/<fingerprint(dir)>` when a shared
@@ -799,8 +802,8 @@ object ArtifactRoots {
   /** Reader-side protocol check: the artifact at `root` must carry the
     * `.complete` marker. Failing loudly here is what makes a killed
     * build "unreadable rather than half-read" — without this, the
-    * marker protects only the writer side of the race. Returns `root`
-    * so call sites compose: `read.parquet(s"${assertComplete(r)}/part")`. */
+    * marker protects only the writer side of the race. Returns `root`,
+    * so [[built]] wraps its registry lookup in it. */
   def assertComplete(root: String): String = {
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, ".complete")))
       sys.error(s"artifact root $root has no .complete marker — " +

@@ -3,9 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The session-scoped registry of shared pipeline stages: the one place
-  * that decides when a built stage (a persisted or checkpointed frame, an
-  * artifact root, a driver-side model) is reused by the next query that
-  * reads it instead of being rebuilt.
+  * that decides when a built stage (a frame, an artifact root, a
+  * driver-side model) is reused by the next query that reads it instead
+  * of being rebuilt, and how it is stored.
   *
   * '''Key.''' (session, stage name, the conf parameters the build bakes
   * in, dataset path). Keying by session keeps specs with their own
@@ -24,8 +24,24 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * access: their cached blocks died with the session, and the strong key
   * would otherwise pin the stopped session for the process lifetime.
   *
-  * How a stage materializes (persist, localCheckpoint, an
-  * [[ArtifactRoots]] root) stays the builder's choice. The streaming
+  * '''Materialization.''' The registry decides how a stage is stored; a
+  * call site only declares the stage. A `Dataset` value is `persist()`ed
+  * at its default level as it is registered: lazy (nothing runs until
+  * the first action reads it, so building a query's DataFrame starts no
+  * Spark job) and recomputable (the cached blocks keep their lineage, so
+  * an executor loss recomputes them). The persist happens inside the
+  * build a [[Meter]] receives, so the meter's action fills the cache
+  * the consumers read. Releasing unpersists the frame. An artifact root
+  * ([[ArtifactRoots.built]]) or a driver-side model is stored as the
+  * value itself. The one exception is lineage truncation inside an
+  * iterative function (the graph rounds in `Graph`, connected
+  * components' rounds, BPE training): a `localCheckpoint` per round
+  * keeps the plan from growing with the round count; the frame such a
+  * loop returns is registered like any other. Beside those, four
+  * functions persist a frame they reread and unpersist it before they
+  * return (the BFS and connected-components adjacency lists, the
+  * decontamination benchmark grams, a streaming trigger's arrival
+  * grams); `MaterializationGuardSpec` lists every such site. The streaming
   * bridge's input stagings are files on disk, not stages of a session:
   * they live in its one process-level memo, `StreamingBridge.stagedFor`,
   * which applies the same fingerprint check (a regenerated dataset
@@ -77,8 +93,8 @@ object Stages {
       case stale =>
         stale.foreach(e => release(e.value))
         val v = meter match {
-          case Some(m) if chain.nonEmpty => m(chain)(build)
-          case _ => build
+          case Some(m) if chain.nonEmpty => m(chain)(stored(build))
+          case _ => stored(build)
         }
         entries.put(k, Entry(identity, v))
         v
@@ -100,6 +116,11 @@ object Stages {
   def clear(): Unit = {
     entries.values.foreach(e => release(e.value))
     entries.clear()
+  }
+
+  private def stored[T](v: T): T = {
+    v match { case df: Dataset[_] => df.persist(); case _ => () }
+    v
   }
 
   private def evictStopped(): Unit =

@@ -908,8 +908,7 @@ object StreamingBridge {
     * equal batch quality_gate row for row; same oracle. */
   def streamQualityGateEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
-    val specRoot = graft.sources.ArtifactRoots.assertComplete(
-      TextAnalysis.gateSpecRoot(spark, dir))
+    val specRoot = TextAnalysis.gateSpecRoot(spark, dir)
     // the shipped spec: a per-lang threshold table (≤ #langs rows) and the
     // tie roster (≤ Σ per-lang tie-group), reloaded as driver literals
     val qtRows = spark.read.parquet(s"$specRoot/thresholds")
@@ -952,8 +951,7 @@ object StreamingBridge {
     * documents at the door. */
   def streamDsirWeightsEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dsir
-    val root = graft.sources.ArtifactRoots.assertComplete(
-      Dsir.modelRoot(spark, dir))
+    val root = Dsir.modelRoot(spark, dir)
     // the artifact's own row count IS the model width — a 10k-bucket
     // model scores at 10k; the serving side never consults session conf
     val lrRows = spark.read.parquet(s"$root/lr")
@@ -988,9 +986,7 @@ object StreamingBridge {
     * decontaminate_bloom gates the result. */
   def streamDecontaminateEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val benchGrams = spark.read.parquet(
-        s"${graft.sources.ArtifactRoots.assertComplete(
-          Dedup.benchGramRoot(spark, dir))}/grams")
+    val benchGrams = spark.read.parquet(s"${Dedup.benchGramRoot(spark, dir)}/grams")
       .collect().map(_.getLong(0)).sorted
     val bf = org.apache.spark.util.sketch.BloomFilter.create(
       math.max(benchGrams.length.toLong, 10000L), 0.01)
@@ -1102,8 +1098,7 @@ object StreamingBridge {
     * batch pass: the SAME oracle as chunk_retrieval gates the result. */
   def streamChunkRetrievalEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
-    val root = graft.sources.ArtifactRoots.assertComplete(
-      TextAnalysis.chunkIndexRoot(spark, dir))
+    val root = TextAnalysis.chunkIndexRoot(spark, dir)
     val postings = spark.read.parquet(s"$root/postings")
     val modelDf = spark.read.parquet(s"$root/model_df")
     val scRow = spark.read.parquet(s"$root/model_sc").head()
@@ -1165,10 +1160,8 @@ object StreamingBridge {
     * value-invisible: gated by hybrid_rrf_ivf's exact oracle. */
   def streamHybridRrfEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Similarity, TextAnalysis}
-    val chunkRoot = graft.sources.ArtifactRoots.assertComplete(
-      TextAnalysis.chunkIndexRoot(spark, dir))
-    val lexRoot = graft.sources.ArtifactRoots.assertComplete(
-      TextAnalysis.lexIndexRoot(spark, dir))
+    val chunkRoot = TextAnalysis.chunkIndexRoot(spark, dir)
+    val lexRoot = TextAnalysis.lexIndexRoot(spark, dir)
     val ivfRoot = Similarity.ivfWarmIndex(spark, dir)
     val modelDf = spark.read.parquet(s"$chunkRoot/model_df")
     val scRow = spark.read.parquet(s"$chunkRoot/model_sc").head()
@@ -1246,8 +1239,7 @@ object StreamingBridge {
     * is never re-read; state grows with DISTINCT arrival hashes only. */
   def streamSubstringDedupEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val winRoot = graft.sources.ArtifactRoots.assertComplete(
-      Dedup.winIndexRoot(spark, dir))
+    val winRoot = Dedup.winIndexRoot(spark, dir)
     val docsDir = stageSubstrArrivals(spark, dir)
     // arrival-hash state as per-trigger DELTA dirs folded into a
     // snapshot every K triggers (DeltaState): writing d<batchId>
@@ -1302,8 +1294,7 @@ object StreamingBridge {
     * unpersisted before the trigger returns. */
   def streamSetsimDedupEq(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val root = graft.sources.ArtifactRoots.assertComplete(
-      Dedup.setsimIndexRoot(spark, dir))
+    val root = Dedup.setsimIndexRoot(spark, dir)
     val docsDir = stageSubstrArrivals(spark, dir)
     val stateRoot = TempDirs.create("graft_stream_setsim_state_")
     val outDir = TempDirs.create("graft_stream_setsim_out_")

@@ -112,6 +112,22 @@ class ArtifactProtocolSpec extends SparkSpec {
     assert(e.getMessage.contains(".complete"))
   }
 
+  test("built checks the marker on every return: a registry hit on a root that lost it throws") {
+    val ds = graft.sources.TempDirs.create("graft_marker_ds_")
+    java.nio.file.Files.write(java.nio.file.Paths.get(ds, "data"), "gen1".getBytes)
+    var builds = 0
+    def root(): String = ArtifactRoots.built(spark, "spec_marker", ds, Seq("data")) { stage =>
+      builds += 1
+      spark.range(3).coalesce(1).write.parquet(s"$stage/data")
+    }
+    val r = root()
+    assert(root() == r && builds == 1, "an unchanged dataset must be a registry hit")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(r, ".complete"))
+    val e = intercept[RuntimeException](root())
+    assert(e.getMessage.contains(".complete") && builds == 1,
+      s"the hit must be refused, not rebuilt or returned: $e")
+  }
+
   test("a hard-killed winner's stale claim is taken over: the root self-heals without manual cleanup") {
     val root = graft.sources.TempDirs.create("graft_dead_winner_root_")
     // Fabricate exactly what a process-killed winner leaves behind: a

@@ -52,6 +52,21 @@ class BenchSpec extends SparkSpec {
     assert(again.isEmpty, s"a pass over built stages billed chains: $again")
   }
 
+  test("the stdout line's omitted entries are exactly the ones it does not show") {
+    def t(name: String, wall: Double) = Bench.Timing(name, wall, 0, 0, 0, 0)
+    // registry order (chains first, then alphabetical) differs from the
+    // line's order (failures first, then slowest first)
+    val all = Seq(t("chain_a", 0.5), t("q_fast", 0.1), t("q_failed", -1.0),
+      t("q_slow", 9.0), t("q_mid", 2.0), t("q_tiny", 0.01))
+    val (kept, omitted) = Bench.stdoutEntries(all, budget = 45)
+    assert(kept.map(_.name) == Seq("q_failed", "q_slow", "q_mid"))
+    assert(omitted.map(_.name).toSet == Set("chain_a", "q_fast", "q_tiny"))
+    assert((kept ++ omitted).map(_.name).sorted == all.map(_.name).sorted)
+    val total = all.map(_.wallS).filter(_ >= 0).sum
+    val shown = kept.map(_.wallS).filter(_ >= 0).sum
+    assert(math.abs(shown + omitted.map(_.wallS).filter(_ >= 0).sum - total) < 1e-9)
+  }
+
   test("a wordcount-only pass bills no chain") {
     Stages.clear()
     val (chains, results) = Bench.pass(spark, sf, queries("wordcount"), metered = true)

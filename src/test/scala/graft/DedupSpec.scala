@@ -158,7 +158,6 @@ class DedupSpec extends SparkSpec {
       (10L, 12L), (20L, 21L)).toDF("id1", "id2")
     val labels = Dedup.connectedComponents(edges)
     val got = labels.as[(Long, Long)].collect().toMap
-    labels.unpersist() // direct callers own the persisted handle
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }

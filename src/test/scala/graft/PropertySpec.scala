@@ -168,7 +168,6 @@ class PropertySpec extends SparkSpec {
           .flatMap(ms => { val m = ms.min; ms.map(_ -> m) }).toMap
         val labels = Dedup.connectedComponents(edges.toDF("id1", "id2"))
         val got = labels.as[(Long, Long)].collect().toMap
-        labels.unpersist()
         assert(got == want, s"seed=$seed n=$n edges=$edges")
       }
     }
@@ -184,7 +183,6 @@ class PropertySpec extends SparkSpec {
     val chain = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))
     val labels = Dedup.connectedComponents(chain.toDF("id1", "id2"))
     val got = labels.as[(Long, Long)].collect().toMap
-    labels.unpersist()
     assert(got == (0 until n).map(_.toLong -> 0L).toMap)
   }
 
@@ -200,7 +198,6 @@ class PropertySpec extends SparkSpec {
     val chain = (0 until n - 1).map(i => (base + i, base + i + 1))
     val labels = Dedup.connectedComponents(chain.toDF("id1", "id2"))
     val got = labels.as[(Long, Long)].collect().toMap
-    labels.unpersist()
     assert(got == (0 until n).map(i => (base + i) -> base).toMap)
   }
 
