@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** THE session factory: every local graft session — Bench, Verify,
   * Explain, the probes and the test base — is built by [[local]], so the
-  * oracle dump, the bench and the tests run one conf by construction.
+  * oracle dump, the bench and the tests run one conf by construction,
+  * and it refuses a session whose JVM lost a conf it cannot take late
+  * (the generated-class cache size, the `file://` binding).
   * The two `local-cluster` probes fold [[conf]] with their own master and
   * executor-heap [[SpillSafety.sessionConf]]. */
 object Session {
@@ -32,7 +34,11 @@ object Session {
   /** The `local[cores]` session: [[conf]], then `extra`, then the probe
     * hook, built through [[SpillSafety.tune]] at the session's memory
     * fraction, log level WARN. Throws if Spark's generated-class cache
-    * did not take the session's capacity (see [[codegenCacheCapacity]]). */
+    * did not take the session's capacity (see [[codegenCacheCapacity]]),
+    * or if `file://` is not served by [[InProcessLocalFs]] through both
+    * Hadoop APIs: Hadoop caches one local `FileSystem` per JVM, so one
+    * created before the first session keeps the stock class, and every
+    * file written after would fork `chmod` again. */
   def local(cores: Int = defaultCores,
       extra: Seq[(String, String)] = Nil): SparkSession = {
     val pairs = conf(cores) ++ extra ++ envConf
@@ -49,7 +55,25 @@ object Session {
         "the session existed, and the cache reads its size once, when the code " +
         "generator first loads")
     }
+    localFsClasses(spark).filterNot { case (live, want) => want.isAssignableFrom(live) }
+      .foreach { case (live, want) =>
+        spark.stop()
+        throw new IllegalStateException(s"Hadoop serves file:// with ${live.getName}, " +
+          s"not ${want.getName}: something created a local FileSystem before the " +
+          "session existed, and Hadoop caches one per JVM")
+      }
     spark
+  }
+
+  /** (live class, graft's class) of `file://` on the session's Hadoop
+    * conf: the raw `FileSystem` under `FileSystem.getLocal`, and the
+    * `AbstractFileSystem` that `FileContext` (the streaming WAL) uses. */
+  private[graft] def localFsClasses(spark: SparkSession): Seq[(Class[_], Class[_])] = {
+    import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem}
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    Seq(FileSystem.getLocal(hadoop).getRaw.getClass -> classOf[InProcessRawLocalFileSystem],
+      AbstractFileSystem.get(java.net.URI.create("file:///"), hadoop).getClass ->
+        classOf[InProcessLocalFs])
   }
 
   /** Live capacity of Spark's JVM-wide generated-class cache (the shaded

@@ -30,10 +30,12 @@ package graft.sources
   * at session BUILD time — hence a builder hook, not a runtime set.
   *
   * The same hook sizes Spark's generated-class cache, another static
-  * conf ([[CodegenCacheEntries]]). Every local graft session is built by
-  * the factory [[Session.local]], which builds through [[tune]] and fails
-  * loudly if the cache did not take the cap; the `local-cluster` probes
-  * fold [[sessionConf]], and the benchmark driver calls [[tune]]. */
+  * conf ([[CodegenCacheEntries]]), and binds `file://` to
+  * [[InProcessLocalFs]]. Every local graft session is built by the
+  * factory [[Session.local]], which builds through [[tune]] and fails
+  * loudly if the cache did not take the cap or the binding did not
+  * take; the `local-cluster` probes fold [[sessionConf]], and the
+  * benchmark driver calls [[tune]]. */
 object SpillSafety {
   /** Per-slot execution-pool floor below which the guardrails engage. */
   val StarvedPoolPerSlotBytes: Long = 16L << 20
@@ -68,12 +70,15 @@ object SpillSafety {
   val CodegenCacheKey: String = "spark.sql.codegen.cache.maxEntries"
 
   /** Every conf pair the build hook sets: the starved-sorter guard (see
-    * [[starvedSorterConf]]) plus the codegen cache capacity. Pure; a
-    * non-local master folds it with its EXECUTOR heap and slots. */
+    * [[starvedSorterConf]]), the codegen cache capacity, and the
+    * `file://` binding to Hadoop's local filesystem without a process per
+    * file ([[InProcessLocalFs.sessionConf]]). Pure; a non-local master
+    * folds it with its EXECUTOR heap and slots, and its executors take
+    * the binding through `spark.hadoop.*`. */
   def sessionConf(heapBytes: Long, slots: Int,
       memFraction: Double): Seq[(String, String)] =
-    starvedSorterConf(heapBytes, slots, memFraction) :+
-      (CodegenCacheKey -> CodegenCacheEntries.toString)
+    (starvedSorterConf(heapBytes, slots, memFraction) :+
+      (CodegenCacheKey -> CodegenCacheEntries.toString)) ++ InProcessLocalFs.sessionConf
 
   /** Apply [[sessionConf]] to a session builder using this JVM's max heap
     * (the executor heap in local mode, where all graft CLIs run). */

@@ -3,8 +3,10 @@ package graft.sources
 /** Process-private scratch directories (IVF index, stream staging, sink
   * round-trips) that are deleted on JVM exit. Keeping them process-scoped
   * is what makes those operators hermetic — no run can observe another's
-  * state — and the exit hook keeps a long-lived session from accreting
-  * scratch under java.io.tmpdir. */
+  * state. The exit hook only bounds scratch by the JVM's life: a dir that
+  * its owner can drop sooner (a bridge's checkpoint, once its query has
+  * stopped) is removed with [[delete]]; the rest accrue under
+  * java.io.tmpdir until exit. */
 object TempDirs {
 
   private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
@@ -24,5 +26,16 @@ object TempDirs {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     created.add(d)
     d.toString
+  }
+
+  /** Delete `dir`, made by [[create]], now rather than at JVM exit. Best
+    * effort: a dir that cannot be removed whole (a file appeared under it
+    * mid-walk) stays registered, and the exit hook retries it. */
+  def delete(dir: String): Unit = {
+    val d = java.nio.file.Paths.get(dir)
+    try {
+      ArtifactRoots.deleteRecursively(d)
+      created.remove(d)
+    } catch { case scala.util.control.NonFatal(_) => () }
   }
 }

@@ -22,7 +22,7 @@ import graft.streaming.StreamingOps.Event
   * to place the watermark-advancing sentinel, and the shipped artifacts
   * the serving twins load as literals). Every drive goes through one of
   * three helpers — [[memorySink]], [[foreachBatch]] or the file sink's
-  * [[checkpointed]] start — and ends in [[drain]].
+  * [[checkpointed]] drive — and ends in [[drain]].
   */
 object StreamingBridge {
 
@@ -351,16 +351,24 @@ object StreamingBridge {
     spark.table(name)
   }
 
-  /** Start `w` with its checkpoint in a fresh temp dir under `ckPrefix`. */
-  private def checkpointed(w: DataStreamWriter[_], ckPrefix: String): StreamingQuery =
-    w.option("checkpointLocation", TempDirs.create(ckPrefix)).start()
+  /** Start `w` with its checkpoint in a fresh temp dir under `ckPrefix`,
+    * [[drain]] it (with `flush`, if any), and delete the checkpoint once
+    * the query has stopped: nothing reads it after. What the sink wrote
+    * stays for the frame the bridge returns. */
+  private def checkpointed(w: DataStreamWriter[_], ckPrefix: String,
+      flush: Option[Flush] = None): Unit = {
+    val ck = TempDirs.create(ckPrefix)
+    try {
+      val q = w.option("checkpointLocation", ck).start()
+      drain(q.sparkSession, q, flush)
+    } finally TempDirs.delete(ck)
+  }
 
   /** Run `body` on every micro-batch of `source` through a checkpointed
     * `foreachBatch` (output mode `mode`), and drain it. */
   private def foreachBatch(source: DataFrame, ckPrefix: String, mode: String = "append")
       (body: (DataFrame, Long) => Unit): Unit =
-    drain(source.sparkSession,
-      checkpointed(source.writeStream.outputMode(mode).foreachBatch(body), ckPrefix))
+    checkpointed(source.writeStream.outputMode(mode).foreachBatch(body), ckPrefix)
 
   /** Final per-user state of a latest-per-key update stream: the
     * emission with the highest cumulative count (n_events grows
@@ -406,10 +414,9 @@ object StreamingBridge {
   def streamFileSinkEq(spark: SparkSession, dir: String): DataFrame = {
     val feed = stageEvents(spark, dir)
     val outDir = TempDirs.create("graft_stream_sink_out_")
-    drain(spark,
-      checkpointed(StreamingOps.hourlyCounts(events(spark, feed))
+    checkpointed(StreamingOps.hourlyCounts(events(spark, feed))
         .writeStream.outputMode("append")
-        .format("parquet").option("path", outDir), "graft_stream_sink_ck_"),
+        .format("parquet").option("path", outDir), "graft_stream_sink_ck_",
       Some(Flush(dir, feed)))
     spark.read.parquet(outDir).orderBy("hour")
   }

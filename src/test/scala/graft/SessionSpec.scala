@@ -16,9 +16,21 @@ object CodegenBeforeSession {
   }
 }
 
+/** Creates Hadoop's local FileSystem before any session exists, then asks
+  * the factory for one: Hadoop has cached the stock class for the JVM,
+  * so the factory must refuse. Run in a child JVM by [[SessionSpec]]. */
+object LocalFsBeforeSession {
+  def main(args: Array[String]): Unit = {
+    org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    graft.sources.Session.local(cores = 1)
+  }
+}
+
 class SessionSpec extends AnyFunSuite {
 
-  test("the factory fails loudly when code was generated before the session existed") {
+  /** Run `main` in a child JVM on this JVM's classpath; its exit code and
+    * output. */
+  private def child(main: String): (Int, String) = {
     import scala.jdk.CollectionConverters._
     // this JVM's --add-opens flags (Spark needs them outside spark-submit),
     // in either the split or the `=` form
@@ -29,19 +41,30 @@ class SessionSpec extends AnyFunSuite {
       case (a, _) if a.startsWith("--add-opens=") => Seq(a)
       case _ => Nil
     }
-    val log = java.io.File.createTempFile("graft_codegen_first_", ".log")
+    val log = java.io.File.createTempFile("graft_session_child_", ".log")
     log.deleteOnExit()
     val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ addOpens ++
-      Seq("-cp", sys.props("java.class.path"), "graft.CodegenBeforeSession")
-    val child = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      Seq("-cp", sys.props("java.class.path"), main)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
       .redirectOutput(log).start()
-    if (!child.waitFor(180, TimeUnit.SECONDS)) {
-      child.destroyForcibly()
+    if (!proc.waitFor(180, TimeUnit.SECONDS)) {
+      proc.destroyForcibly()
       fail(s"child JVM did not exit in 180 s; output in $log")
     }
-    val out = new String(java.nio.file.Files.readAllBytes(log.toPath))
-    assert(child.exitValue() != 0, s"the factory accepted a capped cache:\n$out")
+    (proc.exitValue(), new String(java.nio.file.Files.readAllBytes(log.toPath)))
+  }
+
+  test("the factory fails loudly when code was generated before the session existed") {
+    val (code, out) = child("graft.CodegenBeforeSession")
+    assert(code != 0, s"the factory accepted a capped cache:\n$out")
     assert(out.contains("IllegalStateException") &&
       out.contains("something generated code before the session existed"), out)
+  }
+
+  test("the factory fails loudly when a local FileSystem existed before the session") {
+    val (code, out) = child("graft.LocalFsBeforeSession")
+    assert(code != 0, s"the factory accepted the stock local filesystem:\n$out")
+    assert(out.contains("IllegalStateException") &&
+      out.contains("something created a local FileSystem before the session existed"), out)
   }
 }

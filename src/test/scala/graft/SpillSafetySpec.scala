@@ -26,10 +26,14 @@ class SpillSafetySpec extends AnyFunSuite {
 
   test("the session-build hook's conf carries the codegen cache cap and the starved-sorter pairs unchanged") {
     val key = "spark.sql.codegen.cache.maxEntries"
+    val fsPairs = Seq(
+      "spark.hadoop.fs.file.impl" -> "graft.sources.InProcessLocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.sources.InProcessLocalFs")
     for ((heap, slots, frac) <- Seq((4 * G, 32, 0.05), (8 * G, 32, 0.60), (16 * G, 4, 0.60))) {
       val conf = SpillSafety.sessionConf(heap, slots, frac)
       assert(conf.toMap.get(key).contains(SpillSafety.CodegenCacheEntries.toString))
-      assert(conf.filterNot(_._1 == key) == SpillSafety.starvedSorterConf(heap, slots, frac))
+      assert(conf.filterNot(_._1 == key) ==
+        SpillSafety.starvedSorterConf(heap, slots, frac) ++ fsPairs)
     }
     // far above Spark's 100-entry default, which one Bench pass overflows
     assert(SpillSafety.CodegenCacheEntries >= 8192)
@@ -37,6 +41,9 @@ class SpillSafetySpec extends AnyFunSuite {
     // is live on its context
     assert(TestSpark.spark.sparkContext.getConf.get(key) ==
       SpillSafety.CodegenCacheEntries.toString)
+    fsPairs.foreach { case (k, v) =>
+      assert(TestSpark.spark.sparkContext.hadoopConfiguration.get(k.stripPrefix("spark.hadoop.")) == v)
+    }
     // ... and live in Spark's cache, read the way the factory checks it
     assert(graft.sources.Session.codegenCacheCapacity.contains(
       SpillSafety.CodegenCacheEntries.toLong))

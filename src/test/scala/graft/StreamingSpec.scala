@@ -809,4 +809,16 @@ class StreamingSpec extends SparkSpec {
       assert(keys.map(session.conf.get) == values)
     }
   }
+
+  test("checkpointed bridge drives delete their checkpoint dir once the query stops") {
+    def checkpoints(): Int =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSeq.flatten
+        .count(n => n.startsWith("graft_") && n.contains("_ck_"))
+    val bridges = Seq("stream_decontaminate_eq", "stream_file_sink_eq")
+      .map(graft.streaming.StreamingBridge.queries)
+    bridges.foreach(_(spark, sf).count()) // the stagings, built once per process
+    val before = checkpoints()
+    for (_ <- 1 to 3) bridges.foreach(_(spark, sf).count())
+    assert(checkpoints() == before)
+  }
 }
