@@ -48,9 +48,9 @@ object Dsir {
     * CommonCrawl; 256 keeps every bucket populated at the test SFs while
     * exercising the identical dataflow (the bucket-model aggregate is
     * O(buckets) regardless). Overridable per session via
-    * `spark.graft.dsirBuckets` for paper-scale probes — the ORACLE
-    * strings are only valid at the default width (the standard-run
-    * contract; the 10k probe carries its own DuckDB re-derivation). */
+    * `spark.graft.dsirBuckets` (e.g. `Session.local(extra = ...)`) for
+    * paper-scale runs — the ORACLE strings are only valid at the default
+    * width (the standard-run contract). */
   val Buckets = 256
 
   /** Effective bucket width for this session (conf override or the

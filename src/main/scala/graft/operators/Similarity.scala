@@ -465,10 +465,9 @@ object Similarity {
       .orderBy("qid", "rrf_rank")
 
   /** The hybrids' lexical leg on its own — (qid, cand_id, lr) — exposed
-    * for the planted-recall probe (ProbePlantedVec r20: the fused-rank
-    * contract decomposes into the two measured leg ranks, and the probe
-    * needs THIS leg, not a re-derivation that could fork the qterm cut
-    * or the tie-break). */
+    * for `PlantedVecSpec`: the fused-rank contract decomposes into the
+    * two measured leg ranks, and the spec needs THIS leg, not a
+    * re-derivation that could fork the qterm cut or the tie-break. */
   private[graft] def hybridLexTopK(spark: SparkSession, dir: String,
       depth: Int, admitted: Option[DataFrame]): DataFrame = {
     val scored = TextAnalysis.bm25Scored(spark, dir)
@@ -574,11 +573,11 @@ object Similarity {
       .orderBy("qid", "rn")
 
   /** The IVF-PQ ADC scores BEFORE the top-3 cut — (qid, cand_id, dist)
-    * for every candidate in the query's probed cells. Exposed for the
-    * planted-recall probe (ProbePlantedVec r20): adjudicating a planted
-    * neighbor's miss as quantization loss requires the ENGINE's own ADC
-    * distance for that candidate, not a probe-side re-derivation that
-    * could fork the LUT rounding or the subspace split. */
+    * for every candidate in the query's probed cells. Exposed for
+    * `PlantedVecSpec`: adjudicating a planted neighbor's miss as
+    * quantization loss requires the ENGINE's own ADC distance for that
+    * candidate, not a spec-side re-derivation that could fork the LUT
+    * rounding or the subspace split. */
   private[graft] def ivfPqScored(spark: SparkSession, dir: String): DataFrame = {
     val root = ivfIndexRoot(spark, dir)
     val cellOf = spark.read.parquet(s"$root/lists")

@@ -3,11 +3,11 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** THE session factory: every local graft session — Bench, Verify,
-  * Explain, the probes and the test base — is built by [[local]], so the
-  * oracle dump, the bench and the tests run one conf by construction,
-  * and it refuses a session whose JVM lost a conf it cannot take late
-  * (the generated-class cache size, the `file://` binding).
-  * The two `local-cluster` probes fold [[conf]] with their own master and
+  * Explain and the test base — is built by [[local]], so the oracle
+  * dump, the bench and the tests run one conf by construction, and it
+  * refuses a session whose JVM lost a conf it cannot take late (the
+  * generated-class cache size, the `file://` binding). A `local-cluster`
+  * session (`ExecutorLossSpec`) folds [[conf]] with its own master and
   * executor-heap [[SpillSafety.sessionConf]]. */
 object Session {
 
@@ -24,16 +24,9 @@ object Session {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false")
 
-  /** Probe hook: `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"` drives the same
-    * mains under a conf override (e.g. the 10k-bucket DSIR oracle run,
-    * `spark.graft.dsirBuckets=10000`). Unset in every contracted run. */
-  private def envConf: Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";"))
-      .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
-
-  /** The `local[cores]` session: [[conf]], then `extra`, then the probe
-    * hook, built through [[SpillSafety.tune]] at the session's memory
-    * fraction, log level WARN. Throws if Spark's generated-class cache
+  /** The `local[cores]` session: [[conf]], then `extra`, built through
+    * [[SpillSafety.tune]] at the session's memory fraction, log level
+    * WARN. Throws if Spark's generated-class cache
     * did not take the session's capacity (see [[codegenCacheCapacity]]),
     * or if `file://` is not served by [[InProcessLocalFs]] through both
     * Hadoop APIs: Hadoop caches one local `FileSystem` per JVM, so one
@@ -41,7 +34,7 @@ object Session {
     * file written after would fork `chmod` again. */
   def local(cores: Int = defaultCores,
       extra: Seq[(String, String)] = Nil): SparkSession = {
-    val pairs = conf(cores) ++ extra ++ envConf
+    val pairs = conf(cores) ++ extra
     val fraction = pairs.toMap.get("spark.memory.fraction").fold(0.6)(_.toDouble)
     val spark = pairs.foldLeft(SpillSafety.tune(SparkSession.builder(), cores, fraction)
         .master(s"local[$cores]")) { case (b, (k, v)) => b.config(k, v) }

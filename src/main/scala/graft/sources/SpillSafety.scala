@@ -34,8 +34,8 @@ package graft.sources
   * [[InProcessLocalFs]]. Every local graft session is built by the
   * factory [[Session.local]], which builds through [[tune]] and fails
   * loudly if the cache did not take the cap or the binding did not
-  * take; the `local-cluster` probes fold [[sessionConf]], and the
-  * benchmark driver calls [[tune]]. */
+  * take; a `local-cluster` session (`ExecutorLossSpec`) folds
+  * [[sessionConf]], and the benchmark driver calls [[tune]]. */
 object SpillSafety {
   /** Per-slot execution-pool floor below which the guardrails engage. */
   val StarvedPoolPerSlotBytes: Long = 16L << 20

@@ -1,10 +1,10 @@
 package org.apache.spark
 
-/** Probe-only access to the `private[spark]` listener bus. Stage
-  * completion events are delivered asynchronously, so any before/after
-  * delta over listener-accumulated metrics (the spill probe's
-  * memory/disk spill counters) must drain the bus on both sides of the
-  * measurement or a late-arriving stage is attributed to the next row. */
+/** Access for tests and the benchmark tracer to the `private[spark]`
+  * listener bus. Stage completion events are delivered asynchronously,
+  * so any before/after delta over listener-accumulated metrics must
+  * drain the bus on both sides of the measurement or a late-arriving
+  * stage is attributed to the next row. */
 object GraftListenerBridge {
   /** Blocks until the listener bus queue is empty or the timeout
     * elapses (TimeoutException propagates to the caller). */

@@ -11,6 +11,7 @@ import org.apache.hadoop.fs.{AbstractFileSystem, CreateFlag, FileContext, FileSy
   LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 import graft.sources.{InProcessLocalFileSystem, InProcessLocalFs, InProcessRawLocalFileSystem,
   Session, TempDirs}
@@ -41,6 +42,18 @@ object ProcessStarts {
         "Flight Recorder did not deliver the closing marker in 60 s")
     } finally rs.close()
     seen.asScala.toSeq
+  }
+
+  /** Let the process starts already pending in this JVM happen before a
+    * window opens: a GC, then quiet rounds until one sees no start. Spark
+    * registers every session's ArtifactManager with a Cleaner that forks
+    * `rm -rf` on the session's artifact dir once the session is collected,
+    * so a session an earlier suite left unreachable forks whenever the GC
+    * gets to it. */
+  def settle(): Unit = {
+    System.gc()
+    Iterator.range(0, 30).map(_ => during(Thread.sleep(1000)))
+      .takeWhile(_.nonEmpty).foreach(_ => System.gc())
   }
 }
 
@@ -197,14 +210,26 @@ class InProcessLocalFsSpec extends SparkSpec {
     Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     val out = TempDirs.create("graft_nofork_out_")
     val shared = TempDirs.create("graft_nofork_artifacts_")
-    val started = ProcessStarts.during {
+    // each streaming query runs on a clone of the session: holding the
+    // queries started in the window holds their clones until it closes
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQuery]
+    val hold = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        queries.add(s.streams.get(e.id))
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    ProcessStarts.settle()
+    s.streams.addListener(hold)
+    val started = try ProcessStarts.during {
       s.range(400).withColumn("k", col("id") % 8).write.partitionBy("k").parquet(s"$out/parts")
       // a fresh shared root: a registry miss, so the index really builds
       s.conf.set("spark.graft.artifactRoot", shared)
       try graft.operators.Similarity.ivfWarmIndex(s, sf)
       finally s.conf.unset("spark.graft.artifactRoot")
       graft.streaming.StreamingBridge.queries("stream_decontaminate_eq")(s, sf).count()
-    }
+    } finally s.streams.removeListener(hold)
+    assert(!queries.isEmpty)
     assert(new java.io.File(s"$shared/ivf").list().nonEmpty)
     assert(started.isEmpty, s"${started.size} processes started:\n${started.mkString("\n")}")
   }

@@ -26,11 +26,14 @@ object LocalFsBeforeSession {
   }
 }
 
-class SessionSpec extends AnyFunSuite {
+/** Runs a main in a child JVM on this JVM's classpath. */
+object ChildJvm {
 
-  /** Run `main` in a child JVM on this JVM's classpath; its exit code and
-    * output. */
-  private def child(main: String): (Int, String) = {
+  /** Run `main` with `env` added to this JVM's environment; its exit
+    * code and output. Fails the calling test if the child does not exit
+    * in `timeoutS`. */
+  def run(main: String, env: Map[String, String] = Map.empty,
+      timeoutS: Long = 180): (Int, String) = {
     import scala.jdk.CollectionConverters._
     // this JVM's --add-opens flags (Spark needs them outside spark-submit),
     // in either the split or the `=` form
@@ -41,28 +44,32 @@ class SessionSpec extends AnyFunSuite {
       case (a, _) if a.startsWith("--add-opens=") => Seq(a)
       case _ => Nil
     }
-    val log = java.io.File.createTempFile("graft_session_child_", ".log")
+    val log = java.io.File.createTempFile("graft_child_", ".log")
     log.deleteOnExit()
     val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ addOpens ++
       Seq("-cp", sys.props("java.class.path"), main)
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
-      .redirectOutput(log).start()
-    if (!proc.waitFor(180, TimeUnit.SECONDS)) {
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log)
+    pb.environment().putAll(env.asJava)
+    val proc = pb.start()
+    if (!proc.waitFor(timeoutS, TimeUnit.SECONDS)) {
       proc.destroyForcibly()
-      fail(s"child JVM did not exit in 180 s; output in $log")
+      org.scalatest.Assertions.fail(s"child JVM did not exit in $timeoutS s; output in $log")
     }
     (proc.exitValue(), new String(java.nio.file.Files.readAllBytes(log.toPath)))
   }
+}
+
+class SessionSpec extends AnyFunSuite {
 
   test("the factory fails loudly when code was generated before the session existed") {
-    val (code, out) = child("graft.CodegenBeforeSession")
+    val (code, out) = ChildJvm.run("graft.CodegenBeforeSession")
     assert(code != 0, s"the factory accepted a capped cache:\n$out")
     assert(out.contains("IllegalStateException") &&
       out.contains("something generated code before the session existed"), out)
   }
 
   test("the factory fails loudly when a local FileSystem existed before the session") {
-    val (code, out) = child("graft.LocalFsBeforeSession")
+    val (code, out) = ChildJvm.run("graft.LocalFsBeforeSession")
     assert(code != 0, s"the factory accepted the stock local filesystem:\n$out")
     assert(out.contains("IllegalStateException") &&
       out.contains("something created a local FileSystem before the session existed"), out)
