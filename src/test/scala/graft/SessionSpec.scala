@@ -31,9 +31,8 @@ object ChildJvm {
 
   /** Run `main` with `env` added to this JVM's environment; its exit
     * code and output. Fails the calling test if the child does not exit
-    * in `timeoutS`. */
-  def run(main: String, env: Map[String, String] = Map.empty,
-      timeoutS: Long = 180): (Int, String) = {
+    * in 180 s, after killing the child and every process it started. */
+  def run(main: String, env: Map[String, String] = Map.empty): (Int, String) = {
     import scala.jdk.CollectionConverters._
     // this JVM's --add-opens flags (Spark needs them outside spark-submit),
     // in either the split or the `=` form
@@ -51,9 +50,11 @@ object ChildJvm {
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log)
     pb.environment().putAll(env.asJava)
     val proc = pb.start()
-    if (!proc.waitFor(timeoutS, TimeUnit.SECONDS)) {
+    if (!proc.waitFor(180, TimeUnit.SECONDS)) {
+      // descendants first: the child's executor JVMs would outlive it
+      proc.descendants().forEach(p => { p.destroyForcibly(); () })
       proc.destroyForcibly()
-      org.scalatest.Assertions.fail(s"child JVM did not exit in $timeoutS s; output in $log")
+      org.scalatest.Assertions.fail(s"child JVM did not exit in 180 s; output in $log")
     }
     (proc.exitValue(), new String(java.nio.file.Files.readAllBytes(log.toPath)))
   }
