@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Tokens
+import graft.plans.{StrippedChars, Tokens}
 
 /** Column-level text primitives shared by the word-count parity query and the
   * LLM-pipeline operators (dedup / text analysis).
@@ -13,9 +13,10 @@ import graft.plans.Tokens
   * (/root/reference/src/mr/function.rs:9-16): strip non-word, non-space
   * characters, split on whitespace, drop empty tokens, and do NOT
   * lowercase. There is one tokenizer kernel, [[graft.plans.TokensAlgo]]:
-  * [[tokens]] runs it as a Catalyst expression and
-  * `graft.mr.MapReduce.wordCountMap` runs it on a JVM string, so the
-  * Column and typed paths share one definition of `wc::map`. The regex
+  * [[tokens]] runs it as a Catalyst expression,
+  * `graft.mr.MapReduce.wordCountMap` runs it on a JVM string, and
+  * [[strippedChars]] counts what its strip deletes, so the Column and
+  * typed paths share one definition of `wc::map`. The regex
   * `s.replaceAll("(?U)[^\\w\\s]+", "").split("\\s+").filter(_.nonEmpty)`
   * is kept only as that kernel's definition (and as the test oracle); the
   * `(?U)` flag makes Java's `\w` Unicode-aware to match Rust-regex
@@ -30,6 +31,10 @@ object TextFunctions {
     * (`array<string>`, no null elements; null for a null input). Array
     * stays row-local — no explode, no shuffle. */
   def tokens(c: Column): Column = column(Tokens(expression(c)))
+
+  /** How many code points of `c` the tokenizer's strip deletes (`int`;
+    * null for a null input). */
+  def strippedChars(c: Column): Column = column(StrippedChars(expression(c)))
 
   /** Word n-gram shingles over a MATERIALIZED token-array column ("a b c"
     * for n=3; slice is 1-based). `toks` must be a plain column reference:

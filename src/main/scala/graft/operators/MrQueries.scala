@@ -13,17 +13,19 @@ import graft.sources.Tables
   */
 object MrQueries {
 
-  /** Holistic path: flatMap → groupByKey → mapGroups — the reference's
-    * exact execution shape (whole group materialized per key). */
+  /** Holistic path: flatMap → key-column shuffle at full width → sort →
+    * mapGroups — the reference's exact execution shape (whole group
+    * materialized per key); the final sort reads the materialized reduce
+    * output. */
   def mrWordcount(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val text = Tables.documentsKernelWide(spark, dir).select("text").as[String]
-    MapReduce.mapReduce(
+    val counts = MapReduce.mapReduce(
       text,
       MapReduce.wordCountMap,
       (k: String, vs: Iterator[Long]) => (k, vs.sum))
       .toDF("word", "cnt")
-      .orderBy("word")
+    MapReduce.sortedOutput(counts, "word")
   }
 
   /** Combiner path: flatMap → Aggregator (partial+final HashAggregate) —
@@ -31,12 +33,12 @@ object MrQueries {
   def mrWordcountCombine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val text = Tables.documentsKernelWide(spark, dir).select("text").as[String]
-    MapReduce.mapReduceCombine[String, String, Long, Long, Long](
+    val counts = MapReduce.mapReduceCombine[String, String, Long, Long, Long](
       text,
       MapReduce.wordCountMap,
       0L, _ + _, _ + _, identity)
       .toDF("word", "cnt")
-      .orderBy("word")
+    MapReduce.sortedOutput(counts, "word")
   }
 
   /** Inverted index through the generic surface — a reduce that genuinely
@@ -48,13 +50,13 @@ object MrQueries {
     import spark.implicits._
     val docs = Tables.documentsKernelWide(spark, dir)
       .select("doc_id", "text").as[(Long, String)]
-    MapReduce.mapReduce(
+    val index = MapReduce.mapReduce(
       docs,
       (d: (Long, String)) => MapReduce.wordCountMap(d._2).map { case (w, _) => (w, d._1) },
       (word: String, docIds: Iterator[Long]) =>
         (word, docIds.toSeq.distinct.sorted.mkString(",")))
       .toDF("word", "doc_ids")
-      .orderBy("word")
+    MapReduce.sortedOutput(index, "word")
   }
 
   /** Order reconciliation through the two-input holistic surface: for
@@ -70,7 +72,7 @@ object MrQueries {
       .select(col("o_orderkey"), col("o_orderpriority")).as[(Long, String)]
     val lines = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_quantity")).as[(Long, Double)]
-    MapReduce.coGroup(
+    val reconciled = MapReduce.coGroup(
       orders, lines, (_: (Long, String))._1, (_: (Long, Double))._1,
       (k: Long, os: Iterator[(Long, String)], ls: Iterator[(Long, Double)]) => {
         val priority = os.map(_._2).nextOption().getOrElse("NO_ORDER")
@@ -83,7 +85,7 @@ object MrQueries {
         Iterator((k, priority, n, sum.toDouble))
       })
       .toDF("o_orderkey", "priority", "n_lines", "sum_qty")
-      .orderBy("o_orderkey")
+    MapReduce.sortedOutput(reconciled, "o_orderkey")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

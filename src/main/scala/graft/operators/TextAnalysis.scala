@@ -87,8 +87,7 @@ object TextAnalysis {
     val stopHits = size(filter(col("toks"), t => t.isin(stopwords("en"): _*)))
     val stopRatio = when(col("n_tokens") > 0,
       stopHits.cast("double") / col("n_tokens")).otherwise(0.0)
-    val punct = (length(col("text")) -
-      length(regexp_replace(col("text"), "(?U)[^\\w\\s]+", ""))).cast("double")
+    val punct = TextFunctions.strippedChars(col("text")).cast("double")
     val punctRatio = when(length(col("text")) > 0,
       punct / length(col("text"))).otherwise(0.0)
     val lenSat = least(col("n_tokens").cast("double") / 500.0, lit(1.0))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge.{column, expression, AbstractType}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -269,6 +269,30 @@ object TokensAlgo {
     new GenericArrayData(out)
   }
 
+  /** How many code points the strip deletes: those [[compute]] drops, by
+    * the same classification. On valid UTF-8 this is
+    * `length(s) - length(regexp_replace(s, "(?U)[^\\w\\s]+", ""))`; a
+    * byte that is not well-formed UTF-8 counts once, as its U+FFFD would. */
+  def stripped(s: UTF8String): Int = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var dropped = 0
+    var i = 0
+    while (i < n) {
+      val b = Platform.getByte(base, off + i) & 0xFF
+      if (b < 0x80) {
+        if (ascii(b) == Drop) dropped += 1
+        i += 1
+      } else {
+        val cp = codePointAt(base, off, i, n, b)
+        if (cp < 0 || !kept(cp)) dropped += 1
+        i += (if (cp < 0) 1 else if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4)
+      }
+    }
+    dropped
+  }
+
   /** The code point of the well-formed UTF-8 sequence led by byte `b` at
     * `i`, or -1 (truncated, overlong, an encoded surrogate, or past
     * U+10FFFF: what the JDK's decoder reports as malformed). */
@@ -309,6 +333,23 @@ case class Tokens(child: Expression) extends UnaryExpression with ImplicitCastIn
     defineCodeGen(ctx, ev, a => s"graft.plans.TokensAlgo.compute($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Tokens =
+    copy(child = newChild)
+}
+
+/** The strip's deleted-code-point count ([[TokensAlgo.stripped]]) as a
+  * Catalyst expression; a null input gives a null result. */
+case class StrippedChars(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def dataType: DataType = IntegerType
+
+  override def inputTypes: Seq[AbstractType] = Seq(StringType)
+
+  override def nullSafeEval(a: Any): Any = TokensAlgo.stripped(a.asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.plans.TokensAlgo.stripped($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): StrippedChars =
     copy(child = newChild)
 }
 

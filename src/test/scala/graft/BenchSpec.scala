@@ -21,16 +21,6 @@ class BenchSpec extends SparkSpec {
     ds
   }
 
-  /** Spark jobs started while `body` ran. */
-  private def jobsRunBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"bench-spec-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "BenchSpec", interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    org.apache.spark.GraftListenerBridge.drainListenerBus(sc, 60000L)
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   private def sleeping[T](ms: Long)(v: => T): T = { Thread.sleep(ms); v }
 
   test("a dedup_containment-only pass bills the three dedup chains, and the query pays none of them") {
@@ -114,7 +104,7 @@ class BenchSpec extends SparkSpec {
       built = Stages(spark, "spec/labeled", ds, chain = "spec_labeled") {
         spark.range(5).toDF("id").persist()
       }
-    }
+    }._2.size
     assert(jobs == 0, s"building a labeled stage ran $jobs Spark job(s)")
     val (chains, _) = Bench.pass(spark, ds, Seq("spec_unmetered" -> ((s: SparkSession, d: String) =>
       Stages(s, "spec/labeled_b", d, chain = "spec_labeled")(s.range(5).toDF("id")))), metered = false)

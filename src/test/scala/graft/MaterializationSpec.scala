@@ -12,13 +12,8 @@ class MaterializationSpec extends SparkSpec {
 
   /** The jobs `body` started, each named by its stages' call sites. */
   private def jobsStartedBy(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"materialization-spec-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "MaterializationSpec", interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    org.apache.spark.GraftListenerBridge.drainListenerBus(sc, 60000L)
-    val st = sc.statusTracker
-    st.getJobIdsForGroup(group).toSeq.sorted.map { id =>
+    val st = spark.sparkContext.statusTracker
+    jobsRunBy(body)._2.map { id =>
       st.getJobInfo(id).toSeq.flatMap(_.stageIds.toSeq)
         .flatMap(st.getStageInfo(_).toSeq).map(_.name).distinct.mkString(" + ")
     }

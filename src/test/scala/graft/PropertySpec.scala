@@ -100,6 +100,29 @@ class PropertySpec extends SparkSpec {
     assert(viaCast == lines.map(b => referenceTokens(UTF8String.fromBytes(b).toString)))
   }
 
+  test("property: the strip count == the code points the regex deletes, on random Unicode strings") {
+    // any code point, lone surrogates included, with ASCII and the
+    // mixed-script pieces weighted up so both classes occur often
+    val cpGen = Gen.frequency(
+      3 -> Gen.choose(0, 0x10FFFF), 2 -> Gen.choose(0, 0x7F), 1 -> Gen.choose(0x80, 0x3000))
+    val strGen = Gen.choose(0, 24).flatMap(n => Gen.listOfN(n, cpGen))
+      .map(cps => cps.map(cp => new String(Character.toChars(cp))).mkString)
+    val data = (0 until 1000).flatMap(i => strGen.apply(Gen.Parameters.default, Seed(i.toLong)))
+    val want = data.map { s =>
+      val kept = s.replaceAll("(?U)[^\\w\\s]+", "")
+      s.codePointCount(0, s.length) - kept.codePointCount(0, kept.length)
+    }
+    assert(want.exists(_ > 0) && want.contains(0))
+    val got = data.toDF("text").select(
+      TextFunctions.strippedChars(col("text")),
+      length(col("text")) - length(regexp_replace(col("text"), "(?U)[^\\w\\s]+", "")))
+      .as[(Int, Int)].collect().toSeq
+    data.indices.foreach { i =>
+      def show(x: String) = x.codePoints().toArray.map(c => f"U+$c%04X").mkString(" ")
+      assert(got(i) == (want(i), want(i)), s"line $i: ${show(data(i))}")
+    }
+  }
+
   test("property: sum of wordcount == total token count on random corpus") {
     val data = samples(200)
     val df = data.toDF("text")

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -36,14 +33,6 @@ class TablesSpec extends SparkSpec {
   private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
     case a: AdaptiveSparkPlanExec => a.initialPlan
     case p => p
-  }
-
-  /** Every node of `plan` that `pf` matches; fails when none does, so a
-    * guard over the matches can never pass vacuously. */
-  private def nodes[T](plan: SparkPlan, what: String)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val found = plan.collect(pf)
-    assert(found.nonEmpty, s"no $what in the plan:\n$plan")
-    found
   }
 
   /** The tokenizing nodes: the explode of the Column path, the flatMap of
@@ -91,40 +80,18 @@ class TablesSpec extends SparkSpec {
       s"lang is not pushed to the scan:\n$plan"))
   }
 
-  /** Spark jobs started on this thread while `body` runs. */
-  private def jobsRunBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec", interruptOnCancel = false)
-    try {
-      val v = body
-      org.apache.spark.GraftListenerBridge.drainListenerBus(sc, 60000L)
-      (v, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a table's schema is inferred once per session and dataset, and again after regeneration") {
     val ds = documentsAs(1)
     val (first, inferJobs) = jobsRunBy(Tables.documents(spark, ds))
-    assert(inferJobs >= 1, "the first read infers the schema from the parquet footers")
+    assert(inferJobs.size >= 1, "the first read infers the schema from the parquet footers")
     val (second, rereadJobs) = jobsRunBy(Tables.documents(spark, ds))
-    assert(rereadJobs == 0, s"a second read of the same table ran $rereadJobs Spark job(s)")
+    assert(rereadJobs.isEmpty, s"a second read of the same table ran ${rereadJobs.size} Spark job(s)")
     assert(second.schema == first.schema && second.count() == first.count())
 
     spark.read.parquet(s"$sf/documents.parquet").withColumn("regenerated", lit(1))
       .write.mode("overwrite").parquet(s"$ds/documents.parquet")
     val (third, regenJobs) = jobsRunBy(Tables.documents(spark, ds))
-    assert(regenJobs >= 1, "a regenerated table must be inferred again")
+    assert(regenJobs.size >= 1, "a regenerated table must be inferred again")
     assert(third.columns.contains("regenerated"), s"stale schema after regeneration: ${third.columns.mkString(",")}")
   }
 }
