@@ -4,8 +4,9 @@ package graft.sources
   * round-trips) that are deleted on JVM exit. Keeping them process-scoped
   * is what makes those operators hermetic — no run can observe another's
   * state. The exit hook only bounds scratch by the JVM's life: a dir that
-  * its owner can drop sooner (a bridge's checkpoint, once its query has
-  * stopped) is removed with [[delete]]; the rest accrue under
+  * its owner can drop sooner (a bridge's checkpoint once its query has
+  * stopped, a staging's write dir once its parts are copied) is removed
+  * with [[delete]] or made with [[scoped]]; the rest accrue under
   * java.io.tmpdir until exit. */
 object TempDirs {
 
@@ -26,6 +27,13 @@ object TempDirs {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     created.add(d)
     d.toString
+  }
+
+  /** `body` over a fresh temp dir under `prefix`, deleted with [[delete]]
+    * however `body` ends: scratch that nothing reads after `body`. */
+  def scoped[T](prefix: String)(body: String => T): T = {
+    val d = create(prefix)
+    try body(d) finally delete(d)
   }
 
   /** Delete `dir`, made by [[create]], now rather than at JVM exit. Best

@@ -134,12 +134,14 @@ object StreamingBridge {
     * with ascending mtimes under a fresh temp dir — one file per
     * micro-batch at `maxFilesPerTrigger = 1`. Shared by the time-ordered
     * events, the corpus stages, the IVF ingest delta and the retrieval
-    * query panels. */
+    * query panels. The write's own dir is deleted once its parts are
+    * copied. */
   private def stageRangedFiles(df: DataFrame, n: Int, prefix: String,
       rangeCols: String*): String = {
-    val build = TempDirs.create(s"${prefix}build_")
-    df.repartitionByRange(n, rangeCols.map(col): _*).write.mode("overwrite").parquet(build)
-    copyAscending(partFiles(build), prefix)
+    TempDirs.scoped(s"${prefix}build_") { build =>
+      df.repartitionByRange(n, rangeCols.map(col): _*).write.mode("overwrite").parquet(build)
+      copyAscending(partFiles(build), prefix)
+    }
   }
 
   /** Write `df` as one parquet file per value of the integer column
@@ -147,13 +149,15 @@ object StreamingBridge {
     * an oracle must reproduce exactly, where repartitionByRange's sampled
     * boundaries would not do. A key with no rows stages no file (ntile(5)
     * over fewer than 5 rows emits fewer groups; the oracle's assignment
-    * is identical either way). */
+    * is identical either way). The write's own dir is deleted once its
+    * parts are copied. */
   private def stageSplit(df: DataFrame, split: Column, keys: Seq[Int],
       prefix: String): String = {
-    val build = TempDirs.create(s"${prefix}build_")
-    df.withColumn("split", split).coalesce(1)
-      .write.partitionBy("split").mode("overwrite").parquet(build)
-    copyAscending(keys.flatMap(k => partFiles(s"$build/split=$k").headOption), prefix)
+    TempDirs.scoped(s"${prefix}build_") { build =>
+      df.withColumn("split", split).coalesce(1)
+        .write.partitionBy("split").mode("overwrite").parquet(build)
+      copyAscending(keys.flatMap(k => partFiles(s"$build/split=$k").headOption), prefix)
+    }
   }
 
   /** A staged event feed: the monitored dir, the on-disk schema its
@@ -272,7 +276,8 @@ object StreamingBridge {
     * advances past every open session's timeout, and the subsequent
     * no-data batch fires the event-time timeouts. This is also how a
     * production ingest directory closes its last sessions — event time
-    * only advances through data. */
+    * only advances through data. The sentinel's write dir is deleted once
+    * its part file is copied. */
   private[graft] def writeSentinelNamed(spark: SparkSession, streamDir: String,
       schema: StructType, flushMs: Long, fileName: String,
       eventTypes: Seq[String] = Seq("flush")): Unit = {
@@ -290,12 +295,13 @@ object StreamingBridge {
       eventTypes.foreach(t => l.add(Row(-1L, tsVal, -1L, t, 0.0)))
       l
     }
-    val tmp = TempDirs.create("graft_stream_sentinel_")
-    spark.createDataFrame(rows, schema)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = partFiles(tmp).headOption
-      .getOrElse(sys.error(s"no part file written under $tmp"))
-    Files.copy(part.toPath, Paths.get(streamDir, fileName))
+    TempDirs.scoped("graft_stream_sentinel_") { tmp =>
+      spark.createDataFrame(rows, schema)
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = partFiles(tmp).headOption
+        .getOrElse(sys.error(s"no part file written under $tmp"))
+      Files.copy(part.toPath, Paths.get(streamDir, fileName))
+    }
   }
 
   /** Set `key` to `value` for the duration of `body`, then restore the
@@ -356,13 +362,11 @@ object StreamingBridge {
     * the query has stopped: nothing reads it after. What the sink wrote
     * stays for the frame the bridge returns. */
   private def checkpointed(w: DataStreamWriter[_], ckPrefix: String,
-      flush: Option[Flush] = None): Unit = {
-    val ck = TempDirs.create(ckPrefix)
-    try {
+      flush: Option[Flush] = None): Unit =
+    TempDirs.scoped(ckPrefix) { ck =>
       val q = w.option("checkpointLocation", ck).start()
       drain(q.sparkSession, q, flush)
-    } finally TempDirs.delete(ck)
-  }
+    }
 
   /** Run `body` on every micro-batch of `source` through a checkpointed
     * `foreachBatch` (output mode `mode`), and drain it. */

@@ -156,11 +156,9 @@ class AdversarialSkewSpec extends SparkSpec {
     // structural de-skew proof: the executed plan partial-aggregates the
     // recurrence count on h (map-side combine on the hot key) and joins
     // it back with a HASH join — no corpus-wide per-key window sort
-    val plan = cov.queryExecution.executedPlan.toString
-    assert(plan.contains("partial_count"),
-      "recurrence count must partial-aggregate map-side")
-    assert(plan.contains("ShuffledHashJoin") || plan.contains("BroadcastHashJoin"),
-      "recurrence join-back must be a hash join, not a sort")
+    val plan = walk(cov)
+    partial[org.apache.spark.sql.catalyst.expressions.aggregate.Count](plan)
+    plan.nodes[org.apache.spark.sql.execution.joins.HashJoin]
     // a single-task hot-key sort would take minutes at this shape
     assert(elapsed < 90, f"boilerplate fixture took $elapsed%.1f s")
   }

@@ -36,9 +36,10 @@ class BloomFilterJoinSpec extends SparkSpec {
       val joined = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
       val expected = joined.collect().length
       assert(expected > 0)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("might_contain"),
-        s"no runtime bloom filter on the application side:\n$plan")
+      walk(joined).matching("runtime bloom filter on the application side") {
+        case n if n.expressions.exists(_.exists(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain])) => n
+      }
     } finally {
       saved.foreach {
         case (k, Some(v)) => conf.set(k, v)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -30,12 +31,10 @@ class BucketingSpec extends SparkSpec {
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"))
 
-      val plan = joined.queryExecution.executedPlan.toString
+      val w = walk(joined)
       // the join itself must not shuffle; only the groupBy above it may
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ in:\n$plan")
-      val fullExchanges = plan.linesIterator
-        .count(l => l.contains("Exchange hashpartitioning"))
-      assert(fullExchanges <= 1, s"join should read buckets directly:\n$plan")
+      w.nodes[SortMergeJoinExec]
+      assert(hashKeys(w).size <= 1, s"join should read buckets directly: ${hashKeys(w)}")
 
       // correctness: same result as the unbucketed join
       val want = Tables.lineitem(spark, sf)
@@ -56,13 +55,11 @@ class BucketingSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val joined = graft.operators.AdvancedSql.bucketedJoin(spark, sf)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ in:\n$plan")
+      val w = walk(joined)
+      w.nodes[SortMergeJoinExec]
       // only the groupBy and the output sort above the join may exchange
-      val joinExchanges = plan.linesIterator.count(l =>
-        l.contains("Exchange hashpartitioning") &&
-          (l.contains("l_orderkey") || l.contains("o_orderkey")))
-      assert(joinExchanges == 0, s"join inputs should read buckets:\n$plan")
+      val joinKeyed = hashKeys(w).filter(k => k.contains("l_orderkey") || k.contains("o_orderkey"))
+      assert(joinKeyed.isEmpty, s"join inputs should read buckets: $joinKeyed")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }

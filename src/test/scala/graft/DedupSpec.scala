@@ -423,9 +423,9 @@ class DedupSpec extends SparkSpec {
       "arrival split should carry at least one duplicated span")
     // the screen's probe side must be the broadcast batch (index never
     // shuffles): the executed plan carries a broadcast join on h
-    val plan = Dedup.substringDedupIncr(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
+    val w = walk(Dedup.substringDedupIncr(spark, sf))
+    assert(w.of[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec].nonEmpty ||
+      w.of[org.apache.spark.sql.execution.exchange.BroadcastExchangeLike].nonEmpty,
       "winidx probe should be a map-side broadcast join, not a shuffle of the index")
   }
 

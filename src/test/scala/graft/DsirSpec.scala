@@ -120,13 +120,13 @@ class DsirSpec extends SparkSpec {
   }
 
   test("plans: sample is a TakeOrdered top-k, weights carry no cartesian product and broadcast the LLR table") {
-    val sp = Dsir.dsirSample(spark, sf).queryExecution.executedPlan.toString
-    assert(sp.contains("TakeOrderedAndProject"), s"sample not top-k:\n$sp")
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
+    walk(Dsir.dsirSample(spark, sf)).nodes[TakeOrderedAndProjectExec]
     val wdf = Dsir.dsirWeights(spark, sf)
-    val wp = wdf.queryExecution.executedPlan.toString
-    assert(!wp.contains("CartesianProduct"), s"cartesian in weights:\n$wp")
-    assert(wp.contains("BroadcastHashJoin") || wp.contains("BroadcastNestedLoopJoin"),
-      s"LLR table not broadcast:\n$wp")
+    val w = walk(wdf)
+    w.none[CartesianProductExec]
+    w.matching("broadcast LLR join") { case j @ (_: BroadcastHashJoinExec | _: BroadcastNestedLoopJoinExec) => j }
     // the bucket models, their totals, and the per-doc weights must share
     // ONE tokenization pass: every consumer reads the persisted
     // (doc, lang, bucket) aggregate, so the optimized LOGICAL plan (where

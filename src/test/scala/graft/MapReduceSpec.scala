@@ -61,14 +61,10 @@ class MapReduceSpec extends SparkSpec {
     Seq("mr_wordcount", "mr_wordcount_combine", "mr_inverted_index").foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf)
       df.collect()
-      val plan = df.queryExecution.executedPlan
-      nodes(plan, s"$name's typed map") { case m: MapPartitionsExec => m }
-      nodes(plan, s"$name's reduce") {
-        case m: MapGroupsExec => m
-        case a: BaseAggregateExec => a
-      }
-      val appends = nodes(plan, "node") { case p => p }.collect { case a: AppendColumnsWithObjectExec => a }
-      assert(appends.isEmpty, s"$name appends a deserialized key to every record:\n$plan")
+      val w = walk(df)
+      w.nodes[MapPartitionsExec]
+      w.matching(s"$name's reduce") { case r @ (_: MapGroupsExec | _: BaseAggregateExec) => r }
+      w.none[AppendColumnsWithObjectExec]
     }
   }
 
@@ -76,10 +72,9 @@ class MapReduceSpec extends SparkSpec {
     Seq("mr_wordcount", "mr_inverted_index").foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf)
       df.collect()
-      val plan = df.queryExecution.executedPlan
-      nodes(plan, s"$name's mapGroups") { case m: MapGroupsExec => m }.foreach { m =>
+      walk(df).nodes[MapGroupsExec].foreach { m =>
         assert(m.child.outputPartitioning.numPartitions == width,
-          s"$name reduces ${m.child.outputPartitioning.numPartitions} partitions, not $width:\n$plan")
+          s"$name reduces ${m.child.outputPartitioning.numPartitions} partitions, not $width:\n$m")
       }
     }
   }

@@ -200,7 +200,7 @@ class PropertySpec extends SparkSpec {
     // A 40-node path graph — the regression case for per-round lineage
     // growth: before localCheckpoint, the logical plan grew geometrically
     // every round (round k references round k−1 more than once) and OOM'd
-    // an 8 GiB driver heap inside AQE's explainString within tens of
+    // an 8 GiB driver heap inside AQE's plan-text rendering within tens of
     // rounds.
     val n = 40
     val chain = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))

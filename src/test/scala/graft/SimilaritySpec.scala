@@ -100,20 +100,15 @@ class SimilaritySpec extends SparkSpec {
     // the probes side keys the partitioned lists scan: only the probed
     // cells' files are read — the on-disk analogue of partition pruning
     // that makes the persisted index pay off at scale
-    val plan = graft.operators.Similarity.ivfSearch(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      s"no dynamic partition pruning on the lists scan:\n$plan")
+    dppScans(walk(Similarity.ivfSearch(spark, sf)))
   }
 
   test("ivf_refresh: BOTH probe paths ride DPP-pruned list scans") {
     // the recall-delta report serves the stale AND the refreshed index
     // through the one probe kernel — each partitioned lists scan must
     // carry its own dynamicpruning filter keyed by its probe side
-    val plan = graft.operators.Similarity.ivfRefresh(spark, sf)
-      .queryExecution.executedPlan.toString
-    val n = "dynamicpruning".r.findAllIn(plan).size
-    assert(n >= 2, s"expected DPP on both list scans, found $n:\n${plan.take(4000)}")
+    val n = dppScans(walk(Similarity.ivfRefresh(spark, sf))).size
+    assert(n >= 2, s"expected DPP on both list scans, found $n")
   }
 
   test("ivfBuildIndex: atomic build into caller root; marker skips rebuild") {

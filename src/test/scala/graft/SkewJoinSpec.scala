@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 /** AQE skew-join handling: plant a hot key, run a sort-merge join with
@@ -42,9 +44,9 @@ class SkewJoinSpec extends SparkSpec {
       // drive joined's OWN QueryExecution (count() would wrap it in a new
       // one and leave this adaptive plan unmaterialized)
       assert(joined.queryExecution.executedPlan.execute().count() == 201000L)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("isFinalPlan=true"), s"AQE final plan not materialized:\n$plan")
-      assert(plan.contains("skew=true"), s"no skew-split join in adaptive plan:\n$plan")
+      val w = walk(joined)
+      assert(w.nodes[AdaptiveSparkPlanExec].forall(_.isFinalPlan), "AQE final plan not materialized")
+      w.matching("skew-split join") { case j: SortMergeJoinExec if j.isSkewJoin => j }
     } finally {
       saved.foreach {
         case (k, Some(v)) => conf.set(k, v)

@@ -1,246 +1,146 @@
 package graft
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.NTile
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** r17 verdict order #3: the all-plans sweep excludes `stream_*` rows by
-  * construction (their query functions RUN a stream and return a
-  * post-hoc read, so the returned frame's plan is a bare parquet scan).
-  * The batch twins cover the shared kernels, but the plans the streams
-  * actually execute — every action inside `foreachBatch`, per trigger —
-  * were structurally unaudited. This spec closes that: a
-  * [[QueryExecutionListener]] registered BEFORE stream start (the
-  * micro-batch engine clones the session at start, and the clone's
-  * listener manager copies the parent's listeners, so inner-batch
-  * actions on the cloned session still reach this listener) captures
-  * every executed QueryExecution while each of the five heaviest stream
-  * rows runs end-to-end, and the same three structural properties the
-  * batch sweep pins are asserted on EVERY captured plan:
+import graft.plans.PlanNodes
+
+/** The plans the `stream_*` rows actually execute, swept for the same
+  * three properties as the batch sweep ([[SparkSpec.postureViolations]]).
+  * The batch sweep cannot see them: a stream row's query function RUNS
+  * the stream and returns a post-hoc read of its output.
   *
-  *  (a) no CartesianProduct anywhere in the physical plan;
-  *  (b) no Window with an empty partitionSpec — except the staging
-  *      fixture's `ntile(5) OVER (ORDER BY doc_id)` arrival split,
-  *      which is arrival-sized by construction (whitelisted by its
-  *      window function, not by row name, because it executes inside
-  *      whichever row stages first);
-  *  (c) no LocalRelation above panel size (>10k rows).
+  * Two capture channels, both live for every row:
+  *  - a [[QueryExecutionListener]] registered before stream start sees
+  *    every Dataset action inside a `foreachBatch` body (the micro-batch
+  *    engine clones the session at start, and the clone's listener
+  *    manager copies the parent's listeners);
+  *  - a poller samples each live query's `lastExecution`, the plan the
+  *    trigger actually ran (native memory/file sinks never reach the
+  *    listener: they run under a bare `SQLExecution.withNewExecutionId`),
+  *    deduped on (runId, batchId).
   *
-  * Runs on a PRIVATE `newSession()`: execution-end events are filtered
-  * by session UUID, so a shared session would both leak other suites'
-  * plans into the capture buffer under sbt's parallel suite execution
-  * and replay memoized artifacts instead of exercising the builds. */
+  * The only unpartitioned window admitted is the staging fixture's
+  * `ntile(5) OVER (ORDER BY doc_id)` arrival split, which is arrival-sized
+  * by construction (admitted by its window function, not by row name,
+  * because it executes inside whichever row stages first).
+  *
+  * Runs on a PRIVATE `newSession()`: execution-end events are filtered by
+  * session UUID, so a shared session would leak other suites' plans into
+  * the capture buffer and replay memoized artifacts instead of exercising
+  * the builds. */
 class StreamPlanAuditSpec extends SparkSpec {
 
-  test("streaming inner plans: every executed micro-batch action is Cartesian-free, window-partitioned, driver-relation-free") {
-    val session = spark.newSession()
-    val captured =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = captured.add((funcName, qe))
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = captured.add((funcName, qe))
+  /** The `foreachBatch` rows, each with the prefix of a temp dir that only
+    * its batch body reads or writes: a captured plan that scans or writes
+    * under it proves the listener saw INSIDE the body, not just staging
+    * and the post-hoc read. The first five are the heaviest rows. */
+  private val heavy = Seq(
+    "stream_setsim_dedup_eq" -> "graft_stream_setsim_",
+    "stream_substring_dedup_eq" -> "graft_stream_substr_state_",
+    "stream_hybrid_rrf_eq" -> "graft_stream_hybrid_out_",
+    "stream_bm25_refresh_eq" -> "graft_stream_bm25_",
+    "stream_chunk_retrieval_eq" -> "graft_stream_chunk_out_")
+  private val foreachBatchRows = heavy ++ Seq(
+    "stream_cdc_eq" -> "graft_cdc_state_",
+    "stream_ivf_ingest_eq" -> "graft_stream_ivf_",
+    "stream_quarantine_eq" -> "graft_stream_quar_",
+    "stream_foreachbatch_eq" -> "graft_stream_feb_out_",
+    "stream_bpe_encode_eq" -> "graft_stream_bpe_out_",
+    "stream_quality_gate_eq" -> "graft_stream_qg_out_",
+    "stream_dsir_weights_eq" -> "graft_stream_dsir_out_",
+    "stream_decontaminate_eq" -> "graft_stream_decon_out_")
+  /** The native-sink rows, gated on the micro-batch channel. */
+  private val nativeSinkRows = Seq(
+    "stream_hourly_eq", "stream_file_sink_eq", "stream_incremental_eq", "stream_latest_eq",
+    "stream_latest_tws_eq", "stream_latest_warm_eq", "stream_sessionize_eq",
+    "stream_session_window_eq", "stream_sessionize_tws_eq", "stream_sessionize_incr_eq",
+    "stream_attribution_eq", "stream_dedup_eq", "stream_enrich_eq", "stream_dedup_incr_eq",
+    "stream_dedup_wm_eq", "stream_ewma_eq", "stream_type_hist_eq", "stream_recent3_eq",
+    "stream_join_eq", "stream_left_join_eq")
+
+  /** The root paths `w` scans and the output paths it writes. */
+  private def paths(w: PlanNodes): Seq[String] = w.collect {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+    case d: DataWritingCommandExec => d.cmd match {
+      case i: InsertIntoHadoopFsRelationCommand => Seq(i.outputPath.toString)
+      case _ => Nil
     }
-    // the five heaviest stream rows: the two sub-quadratic dedup screens,
-    // both retrieval serving paths, and the mergeable-model refresh.
-    // Each row maps to a temp-dir marker that ONLY its foreachBatch body
-    // writes under (state/out dirs; the staging fixture uses different
-    // prefixes) — requiring captured plans to carry it proves the
-    // listener really saw the INNER per-trigger actions through the
-    // micro-batch session clone, not just staging + the post-hoc read.
-    val rows = Seq(
-      "stream_setsim_dedup_eq" -> "graft_stream_setsim_",
-      "stream_substring_dedup_eq" -> "graft_stream_substr_state_",
-      "stream_hybrid_rrf_eq" -> "graft_stream_hybrid_out_",
-      "stream_bm25_refresh_eq" -> "graft_stream_bm25_",
-      "stream_chunk_retrieval_eq" -> "graft_stream_chunk_out_")
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Window => LWindow}
-    session.listenerManager.register(listener)
-    try {
-      val failures = Seq.newBuilder[String]
-      rows.foreach { case (name, innerMarker) =>
-        captured.clear()
-        SparkEntry.queries(name)(session, sf).collect()
-        // execution-end events ride the shared listener bus
-        // asynchronously — drain before snapshotting the capture buffer
-        org.apache.spark.GraftListenerBridge
-          .drainListenerBus(session.sparkContext, 60000L)
-        val plans = {
-          val b = Seq.newBuilder[(String, QueryExecution)]
-          val it = captured.iterator()
-          while (it.hasNext) b += it.next()
-          b.result()
-        }
-        // 5 staged triggers × multiple state/output writes each: a thin
-        // capture means the listener never saw the inner actions and the
-        // sweep would pass vacuously
-        if (plans.size < 5)
-          failures += s"$name: only ${plans.size} executed plans captured"
-        val inner = plans.count { case (_, qe) =>
-          try qe.executedPlan.toString.contains(innerMarker)
-          catch { case _: Exception => false }
-        }
-        if (inner < 3)
-          failures += s"$name: only $inner captured plans touch $innerMarker — inner foreachBatch actions not captured"
-        plans.zipWithIndex.foreach { case ((fn, qe), i) =>
-          try {
-            if (qe.executedPlan.toString.contains("CartesianProduct"))
-              failures += s"$name[$i/$fn]: CartesianProduct in physical plan"
-            val badWins = qe.analyzed.collect {
-              case w: LWindow if w.partitionSpec.isEmpty &&
-                !w.windowExpressions.exists(_.toString.contains("ntile")) => w
-            }
-            if (badWins.nonEmpty)
-              failures += s"$name[$i/$fn]: ${badWins.size} unpartitioned window(s)"
-            val bigLocal = qe.analyzed.collect {
-              case l: LocalRelation if l.data.size > 10000 => l.data.size
-            }
-            if (bigLocal.nonEmpty)
-              failures += s"$name[$i/$fn]: LocalRelation of ${bigLocal.max} rows"
-          } catch { case e: Exception =>
-            failures += s"$name[$i/$fn]: sweep threw ${e.getClass.getSimpleName}: ${e.getMessage}"
-          }
-        }
-      }
-      val bad = failures.result()
-      assert(bad.isEmpty, s"stream inner-plan violations:\n${bad.mkString("\n")}")
-    } finally session.listenerManager.unregister(listener)
+  }.flatten
+
+  private def arrivalSplit(w: LWindow): Boolean =
+    w.windowExpressions.exists(_.exists(_.isInstanceOf[NTile]))
+
+  private def drained[T](q: java.util.concurrent.ConcurrentLinkedQueue[T]): Seq[T] = {
+    val b = Seq.newBuilder[T]
+    q.forEach(b += _)
+    b.result()
   }
 
-  test("streaming inner plans, full roster: the remaining 28 stream rows' micro-batch and foreachBatch plans swept") {
-    // r18 verdict order #2: the five-row sweep above leaves 28
-    // `stream_*_eq` rows structurally unaudited. Two capture channels
-    // close them all:
-    //  - foreachBatch rows: the same QueryExecutionListener as above
-    //    (inner batch actions are named Dataset actions on the cloned
-    //    session), with a per-row temp-dir marker guard proving the
-    //    listener saw INSIDE the foreachBatch body;
-    //  - native-sink rows (memory/file sinks): micro-batch executions
-    //    never reach QueryExecutionListener (they run under a bare
-    //    SQLExecution.withNewExecutionId), so a poller thread samples
-    //    each live query's `lastExecution` (the IncrementalExecution the
-    //    trigger ACTUALLY planned, via GraftStreamingBridge), deduped on
-    //    (runId, batchId) — with a ≥1-captured-batch guard per row so
-    //    this channel can't pass vacuously either.
-    // Every captured plan from EITHER channel gets the same three
-    // structural assertions as the batch sweep: no CartesianProduct, no
-    // unpartitioned Window (ntile arrival-split whitelisted), no >10k-row
-    // LocalRelation.
+  test("streaming inner plans: every stream row's micro-batch and foreachBatch plans swept") {
+    val roster = SparkEntry.queries.keySet.filter(_.startsWith("stream_"))
+    val listed = foreachBatchRows.map(_._1).toSet ++ nativeSinkRows
+    assert(listed == roster, s"sweep roster drifted: missing ${roster -- listed}, stale ${listed -- roster}")
+
     val session = spark.newSession()
-    val qeCaptured =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val qeCaptured = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = qeCaptured.add((funcName, qe))
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = qeCaptured.add((funcName, qe))
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qeCaptured.add((funcName, qe))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        qeCaptured.add((funcName, qe))
     }
-    val mbCaptured =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, QueryExecution)]()
+    val mbCaptured = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val mbSeen = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
     val stopPoll = new java.util.concurrent.atomic.AtomicBoolean(false)
     val poller = new Thread(() => {
       while (!stopPoll.get()) {
         try session.streams.active.foreach { q =>
           org.apache.spark.sql.GraftStreamingBridge.lastExecution(q).foreach {
-            case (rid, bid, qe) =>
-              if (mbSeen.add((rid, bid))) mbCaptured.add((rid, bid, qe))
+            case (rid, bid, qe) => if (mbSeen.add((rid, bid))) mbCaptured.add((s"microbatch-$rid-$bid", qe))
           }
         } catch { case scala.util.control.NonFatal(_) => () }
         Thread.sleep(25)
       }
     }, "graft-stream-plan-poller")
     poller.setDaemon(true)
-    // marker = None: native-sink row, gated on the micro-batch channel;
-    // marker = Some(prefix): foreachBatch row, gated on inner actions
-    // touching its private temp dir
-    val rows: Seq[(String, Option[String])] = Seq(
-      "stream_cdc_eq" -> Some("graft_cdc_state_"),
-      "stream_ivf_ingest_eq" -> Some("graft_stream_ivf_"),
-      "stream_quarantine_eq" -> Some("graft_stream_quar_"),
-      "stream_foreachbatch_eq" -> Some("graft_stream_feb_out_"),
-      "stream_bpe_encode_eq" -> Some("graft_stream_bpe_out_"),
-      "stream_quality_gate_eq" -> Some("graft_stream_qg_out_"),
-      "stream_dsir_weights_eq" -> Some("graft_stream_dsir_out_"),
-      "stream_decontaminate_eq" -> Some("graft_stream_decon_out_"),
-      "stream_hourly_eq" -> None,
-      "stream_file_sink_eq" -> None,
-      "stream_incremental_eq" -> None,
-      "stream_latest_eq" -> None,
-      "stream_latest_tws_eq" -> None,
-      "stream_latest_warm_eq" -> None,
-      "stream_sessionize_eq" -> None,
-      "stream_session_window_eq" -> None,
-      "stream_sessionize_tws_eq" -> None,
-      "stream_sessionize_incr_eq" -> None,
-      "stream_attribution_eq" -> None,
-      "stream_dedup_eq" -> None,
-      "stream_enrich_eq" -> None,
-      "stream_dedup_incr_eq" -> None,
-      "stream_dedup_wm_eq" -> None,
-      "stream_ewma_eq" -> None,
-      "stream_type_hist_eq" -> None,
-      "stream_recent3_eq" -> None,
-      "stream_join_eq" -> None,
-      "stream_left_join_eq" -> None)
-    // completeness pin: these 28 + the 5 in the heavy-row test above must
-    // BE the full stream_* roster — a new stream row can't dodge the sweep
-    val heavy = Set("stream_setsim_dedup_eq", "stream_substring_dedup_eq",
-      "stream_hybrid_rrf_eq", "stream_bm25_refresh_eq", "stream_chunk_retrieval_eq")
-    val roster = SparkEntry.queries.keySet.filter(_.startsWith("stream_"))
-    assert(rows.map(_._1).toSet ++ heavy == roster,
-      s"sweep roster drifted: missing ${roster -- rows.map(_._1).toSet -- heavy}, " +
-        s"stale ${(rows.map(_._1).toSet ++ heavy) -- roster}")
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Window => LWindow}
+    val markers = foreachBatchRows.toMap
     session.listenerManager.register(listener)
     poller.start()
     try {
       val failures = Seq.newBuilder[String]
-      rows.foreach { case (name, marker) =>
+      (foreachBatchRows.map(_._1) ++ nativeSinkRows).foreach { name =>
         qeCaptured.clear(); mbCaptured.clear()
         SparkEntry.queries(name)(session, sf).collect()
-        org.apache.spark.GraftListenerBridge
-          .drainListenerBus(session.sparkContext, 60000L)
-        val qePlans = {
-          val b = Seq.newBuilder[(String, QueryExecution)]
-          val it = qeCaptured.iterator()
-          while (it.hasNext) b += it.next()
-          b.result()
-        }
-        val mbPlans = {
-          val b = Seq.newBuilder[(String, QueryExecution)]
-          val it = mbCaptured.iterator()
-          while (it.hasNext) { val (rid, bid, qe) = it.next(); b += (s"microbatch-$rid-$bid" -> qe) }
-          b.result()
-        }
-        marker match {
+        // execution-end events ride the shared listener bus
+        // asynchronously — drain before snapshotting the capture buffers
+        org.apache.spark.GraftListenerBridge.drainListenerBus(session.sparkContext, 60000L)
+        val qePlans = drained(qeCaptured)
+        val mbPlans = drained(mbCaptured)
+        // a thin capture means a channel never saw the row's triggers and
+        // the sweep would pass vacuously
+        markers.get(name) match {
           case Some(m) =>
             val inner = qePlans.count { case (_, qe) =>
-              try qe.executedPlan.toString.contains(m)
-              catch { case _: Exception => false }
+              try paths(PlanNodes(qe.executedPlan)).exists(_.contains(m))
+              catch { case scala.util.control.NonFatal(_) => false }
             }
-            if (inner < 1)
-              failures += s"$name: no captured plan touches $m — inner foreachBatch actions not captured"
+            val (minPlans, minInner) = if (heavy.exists(_._1 == name)) (5, 3) else (0, 1)
+            if (qePlans.size < minPlans)
+              failures += s"$name: only ${qePlans.size} executed plans captured"
+            if (inner < minInner)
+              failures += s"$name: only $inner captured plans read or write under $m — inner foreachBatch actions not captured"
           case None =>
             if (mbPlans.isEmpty)
               failures += s"$name: zero micro-batch executions captured — poller channel vacuous"
         }
         (qePlans ++ mbPlans).zipWithIndex.foreach { case ((fn, qe), i) =>
-          try {
-            if (qe.executedPlan.toString.contains("CartesianProduct"))
-              failures += s"$name[$i/$fn]: CartesianProduct in physical plan"
-            val badWins = qe.analyzed.collect {
-              case w: LWindow if w.partitionSpec.isEmpty &&
-                !w.windowExpressions.exists(_.toString.contains("ntile")) => w
-            }
-            if (badWins.nonEmpty)
-              failures += s"$name[$i/$fn]: ${badWins.size} unpartitioned window(s)"
-            val bigLocal = qe.analyzed.collect {
-              case l: LocalRelation if l.data.size > 10000 => l.data.size
-            }
-            if (bigLocal.nonEmpty)
-              failures += s"$name[$i/$fn]: LocalRelation of ${bigLocal.max} rows"
-          } catch { case e: Exception =>
+          try postureViolations(qe)(arrivalSplit).foreach(v => failures += s"$name[$i/$fn]: $v")
+          catch { case e: Exception =>
             failures += s"$name[$i/$fn]: sweep threw ${e.getClass.getSimpleName}: ${e.getMessage}"
           }
         }

@@ -821,4 +821,14 @@ class StreamingSpec extends SparkSpec {
     for (_ <- 1 to 3) bridges.foreach(_(spark, sf).count())
     assert(checkpoints() == before)
   }
+
+  test("a flushing bridge's drives delete each sentinel's write dir once its part file is copied") {
+    def sentinels(): Int =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir")).list()).toSeq.flatten
+        .count(_.startsWith("graft_stream_sentinel_"))
+    val bridge = graft.streaming.StreamingBridge.queries("stream_sessionize_eq")
+    val before = sentinels()
+    for (_ <- 1 to 3) bridge(spark, sf).count()
+    assert(sentinels() == before)
+  }
 }

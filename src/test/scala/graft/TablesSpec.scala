@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, MapPartitionsExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.lit
 
+import graft.plans.PlanNodes
 import graft.sources.{Tables, TempDirs}
 
 /** The loaders in `graft.sources.Tables`: where the width of a kernel
@@ -29,19 +29,10 @@ class TablesSpec extends SparkSpec {
   private lazy val oneFile = documentsAs(1)
   private lazy val manyFiles = documentsAs(2 * spark.sparkContext.defaultParallelism)
 
-  /** The physical plan with its planned Exchanges, before AQE runs it. */
-  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
-    case a: AdaptiveSparkPlanExec => a.initialPlan
-    case p => p
-  }
-
-  /** The tokenizing nodes: the explode of the Column path, the flatMap of
-    * the typed path. */
-  private def tokenizers(plan: SparkPlan): Seq[SparkPlan] =
-    nodes(plan, "tokenizing node") {
-      case g: GenerateExec => g
-      case m: MapPartitionsExec => m
-    }
+  /** The tokenizing nodes of `df`'s plan, before AQE runs it: the explode
+    * of the Column path, the flatMap of the typed path. */
+  private def tokenizers(df: DataFrame): Seq[SparkPlan] =
+    walk(df).matching("tokenizing node") { case t @ (_: GenerateExec | _: MapPartitionsExec) => t }
 
   private def kernelWide(e: ShuffleExchangeExec): Boolean = e.outputPartitioning match {
     case HashPartitioning(Seq(a: Attribute), n) =>
@@ -52,11 +43,9 @@ class TablesSpec extends SparkSpec {
   test("the word-count family tokenizes a one-file corpus behind a doc_id exchange at full width") {
     assert(Tables.documents(spark, oneFile).rdd.getNumPartitions == 1)
     wordCountFamily.foreach { name =>
-      val plan = physical(SparkEntry.queries(name)(spark, oneFile))
-      tokenizers(plan).foreach { t =>
-        val below = t.collect { case e: ShuffleExchangeExec => e }
-        assert(below.exists(kernelWide),
-          s"$name: no hashpartitioning(doc_id, defaultParallelism) below ${t.nodeName}:\n$plan")
+      tokenizers(SparkEntry.queries(name)(spark, oneFile)).foreach { t =>
+        assert(PlanNodes(t).of[ShuffleExchangeExec].exists(kernelWide),
+          s"$name: no hashpartitioning(doc_id, defaultParallelism) below ${t.nodeName}:\n$t")
       }
     }
   }
@@ -65,19 +54,16 @@ class TablesSpec extends SparkSpec {
     assert(Tables.documents(spark, manyFiles).rdd.getNumPartitions * 2 >=
       spark.sparkContext.defaultParallelism, "the wide corpus must already scan wide")
     wordCountFamily.foreach { name =>
-      val plan = physical(SparkEntry.queries(name)(spark, manyFiles))
-      tokenizers(plan).foreach { t =>
-        val below = t.collect { case e: ShuffleExchangeExec => e }
-        assert(below.isEmpty, s"$name: an exchange below ${t.nodeName} of a wide scan:\n$plan")
+      tokenizers(SparkEntry.queries(name)(spark, manyFiles)).foreach { t =>
+        assert(PlanNodes(t).of[ShuffleExchangeExec].isEmpty,
+          s"$name: an exchange below ${t.nodeName} of a wide scan:\n$t")
       }
     }
   }
 
   test("wordcount_filtered's lang predicate still reaches the scan below the repartition") {
-    val plan = physical(SparkEntry.queries("wordcount_filtered")(spark, oneFile))
-    val scans = nodes(plan, "documents scan") { case s: FileSourceScanExec => s }
-    scans.foreach(s => assert(s.dataFilters.exists(_.references.exists(_.name == "lang")),
-      s"lang is not pushed to the scan:\n$plan"))
+    walk(SparkEntry.queries("wordcount_filtered")(spark, oneFile)).nodes[FileSourceScanExec].foreach(s =>
+      assert(s.dataFilters.exists(_.references.exists(_.name == "lang")), s"lang is not pushed to the scan:\n$s"))
   }
 
   test("a table's schema is inferred once per session and dataset, and again after regeneration") {

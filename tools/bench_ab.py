@@ -8,11 +8,13 @@ hand; this script makes the discipline mechanical:
 
     python3 tools/bench_ab.py --base <prev-round-ref> \
         [--head <ref|WORKTREE>] [--order BHHB] [--passes 4] \
-        [--sf /root/testdata/sf0.1] [--cpus 32] [--out BENCH_rN_ab.json]
+        [--sf /root/testdata/sf0.1] [--cpus N] [--out BENCH_rN_ab.json]
 
-  - the BASE side builds+runs in a scratch `git worktree` at the given
-    ref; the HEAD side runs in the repo working tree as-is (the code
-    being shipped);
+  - the BASE side builds+runs in a temp dir holding `git archive` of the
+    given ref (the repo's git metadata is only read: no worktree, no
+    branch); the HEAD side runs in the repo working tree as-is (the code
+    being shipped), or in its own archive dir when --head names a ref;
+  - --cpus (SPARK_GRAFT_CPUS) defaults to the host's core count;
   - runs interleave per --order (default BHHB: linear host drift cancels
     to first order across the palindrome);
   - each run is one Bench JVM with SPARK_GRAFT_PASSES steady passes;
@@ -23,7 +25,7 @@ hand; this script makes the discipline mechanical:
     diagnosis).
 
 Both sbt compiles happen BEFORE the first timed run so compilation never
-rides a measurement. Every SCRATCH worktree side gets the -Xms=-Xmx+G1
+rides a measurement. Every archive side gets the -Xms=-Xmx+G1
 heap-pin overlay (zz-ab-heappin.sbt) so both sides run the same
 fixed-size bench JVM regardless of what their build.sbt pinned at that
 ref (r19 verdict order #3: the r19 close compared pinned HEAD against
@@ -33,7 +35,7 @@ adjudication).
 Canonical round-close invocation (PLANS "Round close protocol"):
 
     python3 tools/bench_ab.py --base <prev-round-HEAD> --order BHHB \
-        --passes 4 --sf /root/testdata/sf0.1 --cpus 32 \
+        --passes 4 --sf /root/testdata/sf0.1 \
         --out BENCH_rN_ab.json
 """
 import argparse
@@ -43,6 +45,7 @@ import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -61,7 +64,7 @@ HEAP_PIN_SBT = """\
 // a pinned HEAD against an UNPINNED base (the -Xms=-Xmx pin lives in HEAD's
 // build.sbt), so the base side's 36.7% same-code band polluted the
 // adjudication. sbt auto-loads *.sbt in the base dir, so dropping this file
-// into a worktree at an older ref gives BOTH sides the same fixed-size-G1
+// into an archive of an older ref gives BOTH sides the same fixed-size-G1
 // bench JVM. Duplicate -Xms/-Xmx/-XX flags are harmless (last wins), so
 // this is a no-op on refs that already carry the pin.
 //
@@ -94,12 +97,27 @@ javaOptions ++= Seq(
 
 
 def overlay_heap_pin(workdir):
-    """Drop the pin overlay into a scratch worktree (never the live repo:
+    """Drop the pin overlay into an archive dir (never the live repo:
     its build.sbt already carries the pin, and we must not dirty it)."""
     path = os.path.join(workdir, "zz-ab-heappin.sbt")
     with open(path, "w") as f:
         f.write(HEAP_PIN_SBT)
     print(f"[ab] heap-pin overlay -> {path}", flush=True)
+
+
+def extract(ref, root, name):
+    """`git archive` of `ref` unpacked into a fresh dir `root/name`, with
+    the heap-pin overlay."""
+    workdir = os.path.join(root, name)
+    os.makedirs(workdir)
+    archive = subprocess.Popen(["git", "archive", ref], cwd=REPO, stdout=subprocess.PIPE)
+    untar = subprocess.run(["tar", "-x", "-C", workdir], stdin=archive.stdout)
+    archive.stdout.close()
+    if archive.wait() != 0 or untar.returncode != 0:
+        sys.exit(f"[ab] could not extract {ref} into {workdir}")
+    print(f"[ab] {ref} -> {workdir}", flush=True)
+    overlay_heap_pin(workdir)
+    return workdir
 
 
 def bench_once(workdir, env):
@@ -172,7 +190,7 @@ def main():
                     help="run order, e.g. BHHB / BHBH / HHHH")
     ap.add_argument("--passes", type=int, default=4)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--cpus", default=str(os.cpu_count()))
     ap.add_argument("--out", default="BENCH_ab.json")
     args = ap.parse_args()
 
@@ -181,23 +199,9 @@ def main():
     env["SPARK_GRAFT_CPUS"] = args.cpus
     env["SPARK_GRAFT_PASSES"] = str(args.passes)
 
-    base_dir = "/tmp/graft_ab_base"
-    if os.path.isdir(base_dir):
-        subprocess.run(["git", "worktree", "remove", "--force", base_dir],
-                       cwd=REPO)
-        shutil.rmtree(base_dir, ignore_errors=True)
-    run(["git", "worktree", "add", "--detach", base_dir, args.base], cwd=REPO)
-    overlay_heap_pin(base_dir)
-
-    head_dir = REPO
-    if args.head != "WORKTREE":
-        head_dir = "/tmp/graft_ab_head"
-        if os.path.isdir(head_dir):
-            subprocess.run(["git", "worktree", "remove", "--force", head_dir],
-                           cwd=REPO)
-            shutil.rmtree(head_dir, ignore_errors=True)
-        run(["git", "worktree", "add", "--detach", head_dir, args.head], cwd=REPO)
-        overlay_heap_pin(head_dir)
+    scratch = tempfile.mkdtemp(prefix="graft_ab_")
+    base_dir = extract(args.base, scratch, "base")
+    head_dir = REPO if args.head == "WORKTREE" else extract(args.head, scratch, "head")
 
     # compile both sides BEFORE any timed run
     run(["sbt", "-batch", "compile"], cwd=base_dir, env=env)
@@ -217,7 +221,7 @@ def main():
               f"(pre-run load_avg {load1:.2f}) ===", flush=True)
         wall, detail = bench_once(workdir, env)
         runs[side].append((wall, detail))
-        snap = f"/tmp/graft_ab_detail_{i + 1}_{side}.json"
+        snap = os.path.join(scratch, f"detail_{i + 1}_{side}.json")
         shutil.copy(os.path.join(workdir, "BENCH_DETAIL.json"), snap)
 
     out = {
